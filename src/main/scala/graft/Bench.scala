@@ -10,9 +10,19 @@ import org.apache.spark.sql.SparkSession
   * we want to measure.
   */
 object Bench {
+
+  /** Where a sweep's record goes when SPARK_GRAFT_BENCH_OUT is unset: only a
+    * full sf0.1 sweep at 32 cores is the contract record. */
+  def defaultOut(partial: Boolean, sfName: String, cores: Int): String =
+    if (partial) "target/bench_latest.json"
+    else if (sfName != "sf0.1") s"target/bench_latest_$sfName.json"
+    else if (cores != 32) s"target/bench_latest_c$cores.json"
+    else "BENCH_LATEST.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local(appName = "graft-bench")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark: SparkSession = GraftSession.local(cores = cores, appName = "graft-bench")
 
     // JVM + parquet-footer warmup on the smallest table so the first timed
     // query doesn't absorb one-time session costs; then pre-materialize the
@@ -64,27 +74,17 @@ object Bench {
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filterNot(_.isNaN).sum
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cores":$cores}"""
     println(json)
     // Also self-record to a file: the stdout line rides at the tail of a long
     // sbt log and a bounded log buffer can truncate it mid-object (observed:
     // BENCH_r03 lost 39 of 114 timings; BENCH_r04/r05 each lost 69 of 142).
-    // Default target is the committed repo-root BENCH_LATEST.json so every
-    // full sweep — including driver-run ones — refreshes the durable artifact
-    // and per-query regression tracking never depends on log-tail luck.
-    // Builder-side partial sweeps (SPARK_GRAFT_BENCH_ONLY) divert to target/
-    // so they can't clobber the full record. So do full sweeps at any OTHER
-    // scale: the contract artifact is the sf0.1 sweep, and a gate-scale
-    // verification run overwriting it is exactly how r14's adopted 226.1s
-    // sf0.1 record got clobbered by an sf0.001 re-run (VERDICT r14 #3) —
-    // a non-sf0.1 full sweep now lands in target/bench_latest_<scale>.json.
-    val sfName = new java.io.File(sfDir).getName
-    val defaultOut =
-      if (only.isDefined) "target/bench_latest.json"
-      else if (sfName == "sf0.1") "BENCH_LATEST.json"
-      else s"target/bench_latest_$sfName.json"
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut))
+    // The committed repo-root BENCH_LATEST.json is the contract record (full
+    // sf0.1 sweep, 32 cores); partial sweeps, other scales and other core
+    // counts divert to target/ so they cannot clobber it (r14 lost its sf0.1
+    // record to an sf0.001 re-run, VERDICT r14 #3).
+    val out = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      defaultOut(only.isDefined, new java.io.File(sfDir).getName, cores)))
     Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.writeString(out, json + "\n")
     // Round-stamped full copy (target/bench_rNN.json): every driver-side

@@ -23,9 +23,7 @@ object GraftSession {
       // closed the r14 qpart question): seed partition coalescing WIDE
       // (8x cores by default — GRAFT_INITIAL_PARTITIONS overrides) and
       // let the 64 MB advisory target (GRAFT_ADVISORY_BYTES) coalesce
-      // each stage DOWN to its data volume — parallelismFirst=false so
-      // the advisory size actually governs instead of being ignored in
-      // favor of max parallelism. This is the per-stage,
+      // each stage DOWN to its data volume. This is the per-stage,
       // data-volume-aware sizing a real cluster runs with, and it is
       // MEASURED to dominate the old fixed-cores default: at 100x
       // (nothing spills) seeded AQE is 1.27x FASTER than fixed-32

@@ -264,15 +264,28 @@ object Forecast {
   def kpiByCountry(eval_ : DataFrame): DataFrame =
     eval_.groupBy(col("Country")).agg(kpiAggs.head, kpiAggs.tail: _*)
 
+  private def valueAggs: Seq[Column] = Seq(
+    Exact.floorSum(col("abs_err_model") * col("AvgUnitPrice"), 4).as("total_err_value_model"),
+    Exact.floorSum(col("abs_err_baseline") * col("AvgUnitPrice"), 4).as("total_err_value_baseline"),
+    count(lit(1)).as("n_rows"))
+
+  private def withPctReduction(totals: DataFrame): DataFrame =
+    totals.withColumn(
+      "pct_reduction",
+      (lit(1.0) - col("total_err_value_model") / col("total_err_value_baseline")) * lit(100.0))
+
   /** Value-weighted error totals (A10, Sales_forecast_pyspark.py:1792-1838):
     * abs error weighted by unit value, plus % reduction of model vs baseline. */
   def valueWeighted(eval_ : DataFrame): DataFrame =
-    eval_
-      .agg(
-        Exact.floorSum(col("abs_err_model") * col("AvgUnitPrice"), 4).as("total_err_value_model"),
-        Exact.floorSum(col("abs_err_baseline") * col("AvgUnitPrice"), 4).as("total_err_value_baseline"),
-        count(lit(1)).as("n_rows"))
-      .withColumn(
-        "pct_reduction",
-        (lit(1.0) - col("total_err_value_model") / col("total_err_value_baseline")) * lit(100.0))
+    withPctReduction(eval_.agg(valueAggs.head, valueAggs.tail: _*))
+
+  /** [[kpiGlobal]] and [[valueWeighted]] as ONE aggregate: one row carrying
+    * both sets of columns, from a single pass over the evaluation lineage
+    * instead of one replay per aggregate. Every column is an exact
+    * floor-integer sum or a count, so the values equal the two separate
+    * aggregates bit for bit. */
+  def kpiGlobalValueWeighted(eval_ : DataFrame): DataFrame = {
+    val aggs = kpiAggs ++ valueAggs
+    withPctReduction(eval_.agg(aggs.head, aggs.tail: _*))
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{
   GBTRegressor, LinearRegression, LinearRegressionModel, RandomForestRegressor}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's ML surface (SURVEY §2.11, M1-M9) with its exact
@@ -66,11 +66,13 @@ object ForecastModels {
     new Pipeline().setStages(Array(idx, assembler)).fit(train)
   }
 
-  /** Fit + transform WITHOUT the three-metric evaluation — for pipelines
-    * that only consume the predictions (q_ml1's KPI output discards the
-    * metrics; paying three evaluator passes for them was pure waste). The
-    * assembled training frame is pinned for the solver's iterations and
-    * released once the materialized prediction pin replaces it. */
+  /** Fit + transform WITHOUT the evaluation — for pipelines that only
+    * consume the predictions. An iterative solver (OWL-QN/L-BFGS) re-reads
+    * its input every iteration, so the assembled training frame is pinned
+    * for the fit; the predictions are pinned for their consumers (metrics,
+    * KPIs) and filled by the first of them. Without the pins each pass would
+    * replay the lag-feature window lineage end to end. The caller
+    * unpersists the returned predictions. */
   def fitPredict(
       estimator: Estimator[_ <: Model[_]],
       features: PipelineModel,
@@ -82,11 +84,9 @@ object ForecastModels {
     val assembled = features.transform(train).select(LabelCol, "features")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val model: Model[_] = estimator.fit(assembled)
-    val predictions = model.transform(features.transform(test))
+    assembled.unpersist(false) // the predictions read `test`, never this pin
+    model.transform(features.transform(test))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    predictions.count() // materialize before dropping the training pin
-    assembled.unpersist(false)
-    predictions
   }
 
   /** Numeric feature columns present in a feature frame: calendar + lag +
@@ -123,40 +123,33 @@ object ForecastModels {
       .setMaxDepth(3).setMaxBins(10000).setLossType("absolute")
       .setMaxIter(maxIter).setStepSize(stepSize).setSeed(42)
 
-  /** M7: mae/rmse/r2 on (label, prediction). */
+  /** M7: mae/rmse/r2 on (label, prediction), read from ONE
+    * `RegressionMetrics` summary pass — the same object each single-metric
+    * `RegressionEvaluator.evaluate` builds, so the values are identical to
+    * three evaluator calls at a third of the jobs. */
   def evaluate(name: String, predictions: DataFrame): RegMetrics = {
-    def metric(m: String): Double =
-      new RegressionEvaluator()
-        .setLabelCol(LabelCol).setPredictionCol("prediction").setMetricName(m)
-        .evaluate(predictions)
-    RegMetrics(name, metric("mae"), metric("rmse"), metric("r2"))
+    val m = new RegressionEvaluator()
+      .setLabelCol(LabelCol).setPredictionCol("prediction")
+      .getMetrics(predictions)
+    RegMetrics(name, m.meanAbsoluteError, m.rootMeanSquaredError, m.r2)
   }
 
-  /** M6+M8: fit the feature pipeline on train, fit the estimator, transform
-    * test. The feature pipeline is fitted ONCE and reused (the reference
-    * redundantly refits it per model — SURVEY §4.1 flags that as waste).
+  /** M6+M8: [[fitPredict]] then [[evaluate]]. The feature pipeline is fitted
+    * ONCE by the caller and reused (the reference redundantly refits it per
+    * model — SURVEY §4.1 flags that as waste).
     *
-    * Both the assembled training frame and the predictions are persisted:
-    * an iterative solver (OWL-QN/L-BFGS) re-reads its input every iteration,
-    * and the three-metric evaluation plus any downstream KPI re-reads the
-    * predictions — without the pins each pass would replay the lag-feature
-    * window lineage end to end (profiled at ~2× the whole query's cost).
-    * The training pin is dropped once the fit returns; the predictions pin
-    * is released by the ContextCleaner when the frame goes unreachable. */
+    * The returned predictions stay pinned, because the evaluation and any
+    * downstream KPI re-read them. `Dataset.persist` registers the frame with
+    * the session's CacheManager, which holds it until `unpersist`: the
+    * caller owns the pin and must release it. */
   def trainAndEval(
       name: String,
       estimator: Estimator[_ <: Model[_]],
       features: PipelineModel,
       train: DataFrame,
       test: DataFrame): (DataFrame, RegMetrics) = {
-    val assembled = features.transform(train)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model: Model[_] = estimator.fit(assembled)
-    val predictions = model.transform(features.transform(test))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val metrics = evaluate(name, predictions)
-    assembled.unpersist(false)
-    (predictions, metrics)
+    val predictions = fitPredict(estimator, features, train, test)
+    (predictions, evaluate(name, predictions))
   }
 
   /** M8: segmented harness — train one model per segment predicate, evaluate
@@ -187,7 +180,18 @@ object ForecastModels {
   /** Time-based train/test split at a cutoff date (P3/P5,
     * Sales_forecast_pyspark.py:366-377). */
   def timeSplit(df: DataFrame, cutoff: String): (DataFrame, DataFrame) = {
-    val c = to_date(lit(cutoff))
-    (df.filter(col("InvoiceDate") <= c), df.filter(col("InvoiceDate") > c))
+    val inTrain = onOrBefore(cutoff)
+    (df.filter(inTrain), df.filter(!inTrain))
   }
+
+  /** Row counts of the two [[timeSplit]] sides from ONE conditional-count
+    * aggregate instead of a count job per side. A null InvoiceDate matches
+    * neither side, as in the filters. */
+  def timeSplitCounts(df: DataFrame, cutoff: String): (Long, Long) = {
+    val inTrain = onOrBefore(cutoff)
+    val r = df.agg(count(when(inTrain, true)), count(when(!inTrain, true))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def onOrBefore(cutoff: String): Column = col("InvoiceDate") <= to_date(lit(cutoff))
 }

@@ -7,6 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * run fast; suites must not mutate session-global state destructively). */
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(cores = 4, appName = "graft-test")
+
+  /** The smallest generated scale factor (TESTDATA.md). */
+  val Sf0001: String = "/root/testdata/sf0.001"
 }
 
 trait SparkSpec extends AnyFunSuite {

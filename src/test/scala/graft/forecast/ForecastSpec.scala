@@ -92,4 +92,17 @@ class ForecastSpec extends SparkSpec {
     assert(vw.getAs[Long]("n_rows") === 5L)
     assert(vw.getAs[Double]("total_err_value_model") > 0.0)
   }
+
+  test("fused KPI aggregate equals kpiGlobal and valueWeighted bit for bit on sf0.001") {
+    val eval_ = Forecast.evalFrame(
+      Forecast.dailySales(graft.Tables.salesLines(spark, SparkSpec.Sf0001)))
+    val fused = Forecast.kpiGlobalValueWeighted(eval_).head()
+    val parts = Seq(Forecast.kpiGlobal(eval_).head(), Forecast.valueWeighted(eval_).head())
+    assert(fused.schema.fieldNames.toSeq === parts.flatMap(_.schema.fieldNames))
+    for (part <- parts; f <- part.schema.fieldNames) {
+      val (a, b) = (fused.getAs[AnyRef](f), part.getAs[AnyRef](f))
+      // boxed equals: bit equality for doubles, value equality for the count
+      assert(a != null && a.equals(b), s"$f: fused $a, separate $b")
+    }
+  }
 }

@@ -1,14 +1,68 @@
 package graft.forecast
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+
 import graft.SparkSpec
 
 /** E2E replay on sf0.001: the full reference flow must run and produce a
   * coherent scorecard (finite metrics, sensible split, KPI columns). */
 class ReferencePipelineSpec extends SparkSpec {
 
+  /** sf0.001's invoice lines as ONE parquet input, so every file scan in a
+    * run is a scan of the sales input. */
+  private lazy val salesFile = {
+    val dir = Files.createTempDirectory("graft-sales").resolve("lines").toString
+    graft.Tables.salesLines(spark, SparkSpec.Sf0001).write.parquet(dir)
+    dir
+  }
+
+  /** Ids of the Spark jobs that ran a stage scanning an input file while
+    * `body` ran. A completed stage belongs to the first job that listed it. */
+  private def fileScanJobs(body: => Unit): Set[Int] = {
+    val jobOfStage = new ConcurrentHashMap[Int, Int]()
+    val scanJobs = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageIds.foreach(jobOfStage.putIfAbsent(_, e.jobId))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanJobs.add(jobOfStage.get(e.stageInfo.stageId))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    scanJobs.asScala.toSet
+  }
+
+  test("runOnSales scans its sales input in exactly one Spark job, with and without referenceCompat") {
+    // the daily grain is cached once; the split counts, indexers and KPIs
+    // read it from the cache instead of replaying the input lineage
+    for (compat <- Seq(false, true)) {
+      val sales = spark.read.parquet(salesFile)
+      val jobs = fileScanJobs {
+        ReferencePipeline.runOnSales(sales, "1999-09-01", Seq("lr"), referenceCompat = compat)
+      }
+      assert(jobs.size === 1, s"referenceCompat=$compat: input scanned by jobs $jobs")
+    }
+  }
+
+  test("runOnSales releases every pin it creates") {
+    val sales = graft.Tables.salesLines(spark, SparkSpec.Sf0001)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    ReferencePipeline.runOnSales(sales, "1999-09-01", Seq("lr"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+  }
+
   test("referenceCompat frame carries the reference's full feature width") {
     val daily = Forecast.dailySalesCompat(
-      graft.Tables.salesLines(spark, "/root/testdata/sf0.001"))
+      graft.Tables.salesLines(spark, SparkSpec.Sf0001))
     val frame = ReferencePipeline.featureFrameCompat(daily)
     val lagCols = frame.columns.filter(_.startsWith("lag_"))
     val rollCols = frame.columns.filter(_.startsWith("roll_"))
@@ -37,7 +91,7 @@ class ReferencePipelineSpec extends SparkSpec {
 
   test("referenceCompat pipeline runs end-to-end and still beats nothing-burger metrics") {
     val r = ReferencePipeline.run(
-      spark, "/root/testdata/sf0.001", cutoff = "1999-09-01", models = Seq("lr"),
+      spark, SparkSpec.Sf0001, cutoff = "1999-09-01", models = Seq("lr"),
       referenceCompat = true)
     assert(r.trainRows > 0 && r.testRows > 0)
     val lr = r.scorecards.head
@@ -47,7 +101,7 @@ class ReferencePipelineSpec extends SparkSpec {
 
   test("full pipeline replays end-to-end on sf0.001 with LR") {
     val r = ReferencePipeline.run(
-      spark, "/root/testdata/sf0.001", cutoff = "1999-09-01", models = Seq("lr"))
+      spark, SparkSpec.Sf0001, cutoff = "1999-09-01", models = Seq("lr"))
     assert(r.trainRows > 0 && r.testRows > 0)
     // ~64/36 style time split (reference proportions are cutoff-dependent;
     // just require both sides substantial)

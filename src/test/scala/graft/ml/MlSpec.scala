@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -59,6 +60,26 @@ class MlSpec extends SparkSpec {
     assert(a.toSeq === b.toSeq)
   }
 
+  test("one-pass evaluate equals three single-metric evaluator calls bit for bit") {
+    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
+    // a regularized fit on a noisy label keeps every metric away from 0 and 1
+    val noisy = frame.withColumn(ForecastModels.LabelCol,
+      col(ForecastModels.LabelCol) + (col("lag_qty_1_day") % 7) * (col("lag_qty_1_day") % 3))
+    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), features, noisy, noisy)
+    try {
+      val got = ForecastModels.evaluate("lr_test", pred)
+      def metric(m: String): Double = new RegressionEvaluator()
+        .setLabelCol(ForecastModels.LabelCol).setPredictionCol("prediction").setMetricName(m)
+        .evaluate(pred)
+      val bits = java.lang.Double.doubleToRawLongBits _
+      assert(got.name === "lr_test")
+      assert(bits(got.mae) === bits(metric("mae")))
+      assert(bits(got.rmse) === bits(metric("rmse")))
+      assert(bits(got.r2) === bits(metric("r2")))
+      assert(got.r2 < 1.0 && got.mae > 0.0)
+    } finally pred.unpersist()
+  }
+
   test("lasso recovers a noiseless linear relation and evaluates near-perfect") {
     val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val (pred, metrics) = ForecastModels.trainAndEval(
@@ -88,6 +109,13 @@ class MlSpec extends SparkSpec {
       model, Seq("lag_qty_1_day", "CountryIndex", "StockCodeIndex"))
     assert(ranked.head._1 === "lag_qty_1_day")
     assert(math.abs(ranked.head._2 - 3.0) < 0.05)
+  }
+
+  test("timeSplitCounts counts both timeSplit sides in one aggregate; null dates match neither") {
+    val withNullDate = frame.union(frame.limit(1).withColumn("InvoiceDate", lit(null).cast("date")))
+    val (train, test) = ForecastModels.timeSplit(withNullDate, "2024-01-10")
+    assert(ForecastModels.timeSplitCounts(withNullDate, "2024-01-10") === ((train.count(), test.count())))
+    assert(train.count() + test.count() === frame.count())
   }
 
   test("reference model presets carry the documented hyperparameters") {
