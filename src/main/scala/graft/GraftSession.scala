@@ -10,20 +10,20 @@ import org.apache.spark.sql.SparkSession
   * shuffle-partition tuning via runtime coalescing and skew-join splitting.
   */
 object GraftSession {
-  def local(
-      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+
+  /** Every setting the engine tunes, for a session with `cores` task slots
+    * in total: the only source of session config. [[local]] adds its
+    * master, app name and warehouse path; other deployments
+    * (tools/ClusterEvidence) add only their own master, executor and path
+    * keys. The shuffle, AQE and skew keys are runtime SQL confs, so a run
+    * can change any of them with `spark.conf.set`. */
+  def settings(cores: Int): Seq[(String, String)] = Seq(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.enabled" -> "true",
       // Reducer sizing is AQE's job, not a constant's (r15 directive #1
       // closed the r14 qpart question): seed partition coalescing WIDE
-      // (8x cores by default — GRAFT_INITIAL_PARTITIONS overrides) and
-      // let the 64 MB advisory target (GRAFT_ADVISORY_BYTES) coalesce
-      // each stage DOWN to its data volume. This is the per-stage,
+      // (8x cores) and let the 64 MB advisory target coalesce each
+      // stage DOWN to its data volume. This is the per-stage,
       // data-volume-aware sizing a real cluster runs with, and it is
       // MEASURED to dominate the old fixed-cores default: at 100x
       // (nothing spills) seeded AQE is 1.27x FASTER than fixed-32
@@ -37,8 +37,7 @@ object GraftSession {
       // 1000x (386 GB); adv=16m cuts that 8.7x at the cost of 4x the
       // reduce tasks — size adv ~= executorMemPerTask / decompression
       // ratio on a real deployment (PERF.md r15 directive #1 table).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("GRAFT_INITIAL_PARTITIONS", (cores * 8).toString))
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> (cores * 8).toString,
       // parallelismFirst=true is NOT the "ignore the advisory" mode its
       // name suggests: it sets the coalescing floor to defaultParallelism
       // partitions, and the per-partition target stays
@@ -52,8 +51,7 @@ object GraftSession {
       // family 3-5x (q_w1 5.65->1.16 s, q_j2 8.01->1.68 s when restored;
       // OPTIMIZATION_r15.md). The 1000x q_tp1 chain wall is unchanged
       // (PERF.md r15 A/B) because there the advisory binds either way.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PARALLELISM_FIRST", "true"))
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
       // The 1 MB default floor re-serializes tiny-bytes/high-compute
       // stages (a 6 MB compressed shuffle -> 6 tasks on 32 cores); a
       // smaller floor lets the parallelism-first target
@@ -65,11 +63,9 @@ object GraftSession {
       // chain runs ~116-131 s @1m -> ~128-154 @256k -> 186 @64k on a
       // host paying ~20x on first-touch allocation (more reduce tasks =
       // more fresh task buffers; a healthy host does not pay this).
-      // Allocation-crippled deployments can restore 1m via the env knob.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_BYTES", "64m"))
+      // Allocation-crippled deployments can restore 1m with spark.conf.set.
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
       // AQE coalescing for CACHED plans (SPARK-42101 conf, default false):
       // persist()/cache() otherwise compiles its materialization plan with
       // coalescing suppressed — the cache fills at initialPartitionNum
@@ -81,8 +77,7 @@ object GraftSession {
       // their per-round stages at 256 tasks over <1 MB. Flipping it on
       // sizes cached plans by data volume like everything else; it only
       // changes partitioning, never rows (oracle-gated 214/214).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_AQE_CACHED_PLANS", "true"))
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       // AQE skew-join at harness scale: the default 256MB skew threshold
       // is sized for cluster executors; local hot partitions (e.g. one
       // canonical URL holding 80% of a 20M-row frame — q_t25b's planted
@@ -92,17 +87,26 @@ object GraftSession {
       // bounded tasks — the same knob a 100 TB deployment sizes to its
       // executors. Factor default "5" (not "5.0"): the conf was intConf
       // before Spark 3.5 and "5" parses under both readers.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", sys.env.getOrElse("GRAFT_SKEW_THR", "64m"))
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", sys.env.getOrElse("GRAFT_SKEW_FACTOR", "5"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "5",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
       // The reference ran Spark 3.5 (pre-ANSI default): APE = abs_err/actual
       // yields Infinity on actual=0 rather than erroring
       // (Sales_forecast_pyspark.py:1343-1344). Queries themselves guard
       // divisions, but keep parity for library users.
-      .config("spark.sql.ansi.enabled", "false")
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions")
+
+  def local(
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      appName: String = "graft"): SparkSession = {
+    val spark = SparkSession
+      .builder()
+      .master(s"local[$cores]")
+      .appName(appName)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config(settings(cores).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

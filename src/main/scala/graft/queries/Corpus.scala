@@ -1529,13 +1529,11 @@ object Corpus {
     * core scaling block showed the family SLOWING at higher core counts —
     * q_e6 0.38×). A real deployment sizes this dial to its state volume
     * (thousands of partitions at 100 TB ingest); the local default sizes
-    * it to the fixture's, overridable via GRAFT_STREAM_SHUFFLE_PARTITIONS
-    * in either direction. Results are partitioning-independent by
+    * it to the fixture's. Results are partitioning-independent by
     * construction (exact decimal sums are order-independent; dedup /
     * session-merge / join are set-valued), and the oracle gates that. */
   private def streamShufflePartitions(s: SparkSession): Int =
-    sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(math.min(8, math.max(2, s.sparkContext.defaultParallelism / 4)))
+    math.min(8, math.max(2, s.sparkContext.defaultParallelism / 4))
 
   /** Runs `body` (a streaming start/drain/stop) with the stateful-stream
     * reducer count, restoring the session's batch setting after. The conf
@@ -1545,19 +1543,7 @@ object Corpus {
   private def withStreamParts[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s).toString)
-    // Optional provider override (deployment dial; default = Spark's
-    // HDFS-backed provider). RocksDB is the 100 TB choice once per-store
-    // state outgrows the JVM heap; at fixture state volumes it was
-    // measured SLOWER (native column-family setup per store dominates),
-    // so it is opt-in, not default.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    sys.env.get("GRAFT_STREAM_STATESTORE").foreach(s.conf.set(provKey, _))
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      if (sys.env.contains("GRAFT_STREAM_STATESTORE"))
-        prevProv.fold(s.conf.unset(provKey))(s.conf.set(provKey, _))
-    }
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** The staged-events stream with the ts normalization applied. The cached
@@ -3215,8 +3201,7 @@ object Corpus {
         .withColumn("url_canon", TextFunctions.canonicalUrl(col("url_raw"))))
       .orderBy("doc_id")
 
-  /** The q_t25b kernel over any (doc_id, url_raw, url_canon) frame —
-    * shared by the query surface and the Scratch hot-key experiment.
+  /** The q_t25b kernel over any (doc_id, url_raw, url_canon) frame.
     * Joins are NULL-SAFE on url_canon: groupBy places NULL keys in one
     * group, and a plain equi-join would silently DROP those rows where
     * the q_t25 window form (whose oracle this query shares) keeps them
@@ -4799,7 +4784,7 @@ object Corpus {
     * evaluation harness scans the corpus — exact ground truth is inherently
     * a scan — while the SERVING path it measures stays partition-pruned
     * (q_ann3/q_ann8); at staged scales the same query runs with the same
-    * bounded Q (Scratch `annrecall`). */
+    * bounded Q. */
   def annIvfRecallCurve(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
@@ -4982,10 +4967,9 @@ object Corpus {
     * overwritten by its retry — so the stream survives kill/restart
     * (exercised across a real restart in StreamingSpec). The fixture
     * layout lives at a DETERMINISTIC per-dataset path under the JVM temp
-    * dir with the _DONE-marker discipline the Scratch stagings use: a
-    * finished build is REUSED across JVM runs instead of littering fresh
-    * temp dirs, and a crash-interrupted half-build (no _DONE) is wiped
-    * and rebuilt cleanly. */
+    * dir with a _DONE marker: a finished build is REUSED across JVM runs
+    * instead of littering fresh temp dirs, and a crash-interrupted
+    * half-build (no _DONE) is wiped and rebuilt cleanly. */
   /** The q_e16 fixture pieces, shared with StreamingSpec's crash-recovery
     * case: the base corpus, the quantizer frozen on it, and the three
     * arrival waves (natural-id split + the clone wave). */
@@ -5032,9 +5016,9 @@ object Corpus {
   def streamIvfIngest(s: SparkSession, d: String): DataFrame = {
     val (index, layout) = streamIvfCache.getOrElseUpdate((s, d), {
       val (base, idx, waves) = ivfStreamWaves(s, d)
-      // deterministic per-dataset root + _DONE marker (the Scratch staging
-      // discipline): a finished build is reused across JVM runs instead of
-      // littering fresh temp dirs; a half-build (no _DONE) is wiped first.
+      // deterministic per-dataset root + _DONE marker: a finished build is
+      // reused across JVM runs instead of littering fresh temp dirs; a
+      // half-build (no _DONE) is wiped first.
       // Keyed on a CONTENT fingerprint of the embeddings source (file
       // names + sizes + mtimes), not just the path string: regenerated
       // testdata at the same path gets a fresh fixture instead of silently

@@ -2,10 +2,10 @@ package graft.tools
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.dedup.Dedup
 
 /** Multi-executor execution evidence (builder-side; the driver never runs
@@ -17,8 +17,8 @@ import graft.dedup.Dedup
   * Modes:
   *  - `smoke`      session + executor roll call + one shuffle round-trip
   *  - `tier`       the heavy query tier: walls + order-independent result
-  *                 signatures in the Scratch `sig` format, so a diff against
-  *                 the local[32] `sig` output proves results are IDENTICAL
+  *                 signatures, so a diff against the same mode run with
+  *                 GRAFT_CLUSTER_MASTER=local[32] proves results are IDENTICAL
   *                 across execution modes, not merely "both completed"
   *  - `cckill`     [[Dedup.dupClusters]] in RELIABLE-checkpoint mode with an
   *                 executor SIGKILLed mid-loop: the single job must survive
@@ -36,7 +36,31 @@ import graft.dedup.Dedup
   */
 object ClusterEvidence {
 
-  private def session(): SparkSession = {
+  // Default shape: 8 cores per executor, NOT 16 (VERDICT r13 #3 / PERF.md
+  // r13 residual): 16 concurrent heavy-text tasks peaking together in a
+  // long shared session can OOM an 8-24 GiB executor through unmanaged
+  // per-task transients (regexp/tokenizer scratch). The characterized
+  // deployment guidance — <= 8 concurrent heavy-text tasks per executor —
+  // is now the harness DEFAULT rather than a PERF.md footnote; widen via
+  // GRAFT_CLUSTER_MASTER only for experiments that probe the hazard.
+  // `local[N]` runs the same modes in one JVM: the local baseline.
+  private def master: String =
+    sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,8,8192]")
+
+  private val LocalCluster = """local-cluster\[(\d+),(\d+),(\d+)\]""".r
+  private val Local = """local\[(\d+)\]""".r
+
+  /** Executor count, total cores and worker MB a master string declares;
+    * any other master declares no executors and is sized as 16 cores. */
+  private def shape(master: String): (Int, Int, Option[Int]) = master match {
+    case LocalCluster(n, c, m) => (n.toInt, n.toInt * c.toInt, Some(m.toInt))
+    case Local(c) => (0, c.toInt, None)
+    case _ => (0, 16, None)
+  }
+
+  /** The session config for `master`: the engine's settings sized to the
+    * master's total cores, plus this tool's deployment keys. */
+  private[graft] def conf(master: String): Seq[(String, String)] = {
     // Executor JVMs are launched by the in-process Worker: they need the
     // repo classes + spark jars on their classpath and the same JDK17
     // --add-opens set the driver runs with.
@@ -49,71 +73,39 @@ object ClusterEvidence {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    // Default shape: 8 cores per executor, NOT 16 (VERDICT r13 #3 / PERF.md
-    // r13 residual): 16 concurrent heavy-text tasks peaking together in a
-    // long shared session can OOM an 8-24 GiB executor through unmanaged
-    // per-task transients (regexp/tokenizer scratch). The characterized
-    // deployment guidance — <= 8 concurrent heavy-text tasks per executor —
-    // is now the harness DEFAULT rather than a PERF.md footnote; widen via
-    // GRAFT_CLUSTER_MASTER only for experiments that probe the hazard.
-    val master = sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,8,8192]")
-    // local-cluster[n,c,m]'s m sizes the WORKER'S OFFER, not the executor
-    // JVM: executor heap comes from spark.executor.memory, whose 1g
-    // DEFAULT silently applied to every earlier run (found when the 100x
-    // tier hit AGGREGATE_OUT_OF_MEMORY on "16 GiB" executors whose
-    // launch line read -Xmx1024M). Size the heap to the worker offer so
-    // the master string means what it says.
-    val workerMb = "local-cluster\\[\\d+,\\d+,(\\d+)\\]".r
-      .findFirstMatchIn(master).map(_.group(1).toInt)
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.executor.memory",
-        workerMb.map(m => s"${m}m").getOrElse("1g"))
-      .appName("graft-cluster-evidence")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Mirror GraftSession's r15 reducer-sizing default on real
-      // executors: seed coalescing at 8x the cluster's total cores and
-      // let the advisory target size each stage (same env overrides).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("GRAFT_INITIAL_PARTITIONS", {
-          val totalCores = "local-cluster\\[(\\d+),(\\d+),\\d+\\]".r
-            .findFirstMatchIn(master).map(m => m.group(1).toInt * m.group(2).toInt)
-            .getOrElse(16)
-          (totalCores * 8).toString
-        }))
-      // parallelism floor + small-stage target, same reasoning and env
-      // overrides as GraftSession (advisory still governs big stages)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_BYTES", "64m"))
-      // AQE for cached plans, same reasoning and env override as
-      // GraftSession (r16): persisted loop state must coalesce too.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_AQE_CACHED_PLANS", "true"))
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "5")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-cluster")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.executor.extraClassPath", cp)
-      .config("spark.executor.extraJavaOptions", addOpens)
+    val (_, totalCores, workerMb) = shape(master)
     // extra confs for sizing experiments, e.g.
     // GRAFT_CLUSTER_CONF="spark.sql.adaptive.autoBroadcastJoinThreshold=2m"
-    val withExtra = sys.env.get("GRAFT_CLUSTER_CONF").toSeq
+    val extra = sys.env.get("GRAFT_CLUSTER_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    val spark = withExtra.getOrCreate()
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    GraftSession.settings(totalCores) ++ Seq(
+      "spark.master" -> master,
+      "spark.app.name" -> "graft-cluster-evidence",
+      // local-cluster[n,c,m]'s m sizes the WORKER'S OFFER, not the executor
+      // JVM: executor heap comes from spark.executor.memory, whose 1g
+      // DEFAULT silently applied to every earlier run (found when the 100x
+      // tier hit AGGREGATE_OUT_OF_MEMORY on "16 GiB" executors whose
+      // launch line read -Xmx1024M). Size the heap to the worker offer so
+      // the master string means what it says.
+      "spark.executor.memory" -> workerMb.map(m => s"${m}m").getOrElse("1g"),
+      "spark.sql.warehouse.dir" -> "/tmp/graft-warehouse-cluster",
+      "spark.executor.extraClassPath" -> cp,
+      "spark.executor.extraJavaOptions" -> addOpens) ++ extra
+  }
+
+  private def session(master: String): SparkSession = {
+    val spark = SparkSession.builder().config(conf(master).toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Order-independent result signature: row count and the sum of every
+    * row's xxhash64 over its JSON form, columns in name order. */
+  private def signature(df: DataFrame): Row =
+    df.select(xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))).as("h"))
+      .agg(count(lit(1)).as("n"), coalesce(sum(col("h")), lit(0L)).as("sig"))
+      .collect()(0)
 
   /** SIGKILL one live executor JVM. The in-process Worker spawns executors
     * as the driver JVM's only java child processes, so any java descendant
@@ -141,16 +133,17 @@ object ClusterEvidence {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mode = if (args.length > 1) args(1) else "smoke"
-    val spark = session()
+    val (executors, _, _) = shape(master)
+    val spark = session(master)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
       println(f"[cluster] $label: ${(System.nanoTime() - t0) / 1e9}%.1fs")
       r
     }
-    // wait for both executors to register before timing anything
+    // wait for the declared executors to register before timing anything
     val t0 = System.currentTimeMillis()
-    while (liveExecutors(spark) < 2 && System.currentTimeMillis() - t0 < 60000)
+    while (liveExecutors(spark) < executors && System.currentTimeMillis() - t0 < 60000)
       Thread.sleep(250)
     println(s"[cluster] executors up: ${liveExecutors(spark)} " +
       s"(master ${spark.sparkContext.master})")
@@ -164,9 +157,8 @@ object ClusterEvidence {
         println(s"[cluster] smoke rows=$n")
 
       case "tier" =>
-        // Heavy tier + the `sig` queries: wall + order-independent result
-        // signature per query (same construction as Scratch `sig`, so the
-        // lines diff cleanly against a local[32] run).
+        // Heavy tier: wall + order-independent result signature per query,
+        // so the lines diff cleanly against a local[32] run of this mode.
         val tier = if (args.length > 2) args.drop(2).toSeq else Seq(
           "q_dd1_jaccard_top", "q_dd11_fuzzy_pipeline", "q_dd12_fuzzy_clusters",
           "q_dd13_lsh_recall", "q_dd2b_minhash_recall", "q_dd3b_simhash_recall",
@@ -180,13 +172,7 @@ object ClusterEvidence {
           try {
             // plan construction INSIDE the timer: several tier queries
             // (streams, CC loops) execute eagerly in the query function
-            val row = time(q) {
-              val df = graft.queries.Corpus.all(q)(spark, d)
-              df.select(
-                  xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))).as("h"))
-                .agg(count(lit(1)).as("n"), coalesce(sum(col("h")), lit(0L)).as("sig"))
-                .collect()(0)
-            }
+            val row = time(q)(signature(graft.queries.Corpus.all(q)(spark, d)))
             println(s"[cluster] sig $q n=${row.getLong(0)} sig=${row.getLong(1)}")
           } catch { case e: Throwable =>
             failed ::= q
@@ -300,13 +286,8 @@ object ClusterEvidence {
         })
         killer.setDaemon(true)
         killer.start()
-        val rowQ = time(s"$q reliable with executor kill") {
-          val df = graft.queries.Corpus.all(q)(spark, d)
-          df.select(
-              xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))).as("h"))
-            .agg(count(lit(1)).as("n"), coalesce(sum(col("h")), lit(0L)).as("sig"))
-            .collect()(0)
-        }
+        val rowQ = time(s"$q reliable with executor kill")(
+          signature(graft.queries.Corpus.all(q)(spark, d)))
         killer.join(1000)
         val ckBytes = java.nio.file.Files.walk(ckdir)
           .filter(java.nio.file.Files.isRegularFile(_))
@@ -454,10 +435,10 @@ object ClusterEvidence {
         // WHERE do q_tp1's seconds go under real executors? At 100x the
         // cluster wall is 3.9x the same-day local[32] wall (133.6 s vs
         // 34.3 s on half the cores) — the biggest shape change in the
-        // r14 tier run. Stage the chain exactly like Scratch `tp1diag`
+        // r14 tier run. Stage the chain
         // (quality+exact-dedup -> shingle index -> prune -> posting
         // self-join + pair agg -> scoring+anti-join), then A/B the
-        // pair-generation shapes from Scratch `pairx` (v0 = production
+        // pair-generation shapes (v0 = production
         // SMJ self-join, shuffles the posting mass twice; v1 = one
         // groupBy(shingle).collect_list + in-list expansion, shuffles it
         // once). Locally v0-vs-v1 was a measured WASH (PERF.md r12 —

@@ -1,17 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.ListenerBusDrain
 
-import graft.{GraftSession, Tables}
-import graft.dedup.Dedup
-import graft.text.TextFunctions
+import graft.GraftSession
 
-/** Builder-side phase profiler for slow-query diagnosis (not part of the
-  * library surface; the driver never runs it). */
+/** Builder-side plan audit for slow-query diagnosis (not part of the
+  * library surface; the driver never runs it).
+  *
+  * Usage: `Scratch <sfDir> <mode> <query>...` with mode one of
+  *  - `explain`     the formatted physical plan, before execution
+  *  - `explainexec` the final adaptive plan, after a noop-sink run
+  *  - `stageprof`   per-stage wall, task count and I/O of a noop-sink run
+  */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val what = if (args.length > 1) args(1) else "dd1"
+    val what = if (args.length > 1) args(1) else "explain"
     val spark = GraftSession.local(appName = "graft-scratch")
 
     def time[T](label: String)(f: => T): T = {
@@ -19,100 +23,6 @@ object Scratch {
       val r = f
       println(f"[scratch] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       r
-    }
-
-    // The listener bus delivers task-end events asynchronously, and under
-    // heavy spill it can lag past a fixed sleep — crediting one stage's
-    // spill to the next (ADVICE r12). Poll the listener's own event counter
-    // until it is quiet for two consecutive 150 ms windows (cap 10 s):
-    // stability observed, not guessed.
-    def drainTaskEvents(events: java.util.concurrent.atomic.AtomicLong): Unit = {
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      var quiet = 0
-      var last = events.get
-      while (quiet < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(150)
-        val now = events.get
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-    }
-
-    // Staging fixtures are identified by a RECIPE TAG written INTO the
-    // _DONE marker: a fixture built by an older recipe is deleted and
-    // rebuilt instead of silently reused (ADVICE r13 — the r12 embedding
-    // jitter fix was once maskable by a stale marker-guarded fixture).
-    def stagingReady(dir: String, recipe: String): Boolean = {
-      val f = new java.io.File(s"$dir/_DONE")
-      f.exists() && {
-        val src = scala.io.Source.fromFile(f)
-        try src.mkString.trim == recipe finally src.close()
-      }
-    }
-    def rebuildDir(dir: String): Unit = {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      new java.io.File(dir).mkdirs()
-    }
-    def markReady(dir: String, recipe: String): Unit = {
-      val w = new java.io.FileWriter(s"$dir/_DONE")
-      try w.write(recipe) finally w.close()
-    }
-
-    // v3 document copy recipe (r14): suffix every token EXCEPT the
-    // gate-bearing function words. The v2 all-token suffix destroyed
-    // stopword statistics ("the" -> "thex3"), so every language/quality
-    // gate rejected every staged doc and the tp capstones processed
-    // EMPTY survivor sets above sf0.1 (VERDICT r13 #1). Preserving
-    // exactly the tokens the gates count — the en/de/fr/es/it
-    // function-word profiles (langid/stop_ratio), Gopher's
-    // stopword-presence list, and the funnel's "the" — keeps every
-    // copy's stop_ratio/langid/gopher statistics identical to sf0.1
-    // (measured: gopher pass rate 0.489 at sf0.1 for original AND v3;
-    // 0.000 under v2), while all content tokens still carry the copy
-    // index, so cross-copy word-shingle similarity stays near zero (a
-    // shared 3-shingle needs 3 consecutive function words; measured
-    // all-preserved shingle fraction 0.0003, cross-copy jaccard bound
-    // mean 0.0002 / max 0.03 — far under every dedup threshold). The
-    // suffix is base-36 ("x0".."xrr"), so even at 1000 copies mean word
-    // length grows < 3 chars and stays clear of Gopher's 10-char cap
-    // (measured 7.30 at k=999 vs the 4.50 base).
-    val preservedWords: Seq[String] = (
-      TextFunctions.Stopwords ++ TextFunctions.StopwordsDe ++
-        TextFunctions.StopwordsFr ++ TextFunctions.StopwordsEs ++
-        TextFunctions.StopwordsIt ++ Seq("be", "have") // Gopher's extras
-      ).distinct
-    val suffixPattern: String =
-      s"(?i)(?<!\\S)(?!(?:${preservedWords.mkString("|")})(?!\\S))(\\S+)"
-    def suffixedText(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      regexp_replace(col("text"), lit(suffixPattern),
-        concat(lit("$1x"), lower(conv(k, 10, 36))))
-    val DocsRecipe = "docs-v3-stop-preserve"
-    val EmbRecipe = "emb-v2-mod997-eps"
-
-    // The shared 10x staging: each copy k of documents gets
-    // doc_id + k*10M and the v3 non-function-word token suffix, so
-    // cross-copy similarity is near zero, dup-density AND gate-pass
-    // statistics per copy match sf0.1 — 10x the data, same structure;
-    // source/lang/n_chars carried so the mixing/packing tier runs too.
-    def ensureStaging10(base: String): String = {
-      val dir10 = "/tmp/sf1x10"
-      // drop the superseded unversioned-marker dirs
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("/tmp/sf1x10_v2"))
-      if (!stagingReady(dir10, DocsRecipe)) {
-        rebuildDir(dir10)
-        val docs = Tables.documents(spark, base)
-          .select("doc_id", "text", "source", "lang", "n_chars")
-        val copies = (0 until 10).map { k =>
-          docs.select(
-            (col("doc_id") + k * 10000000L).as("doc_id"),
-            suffixedText(lit(k)).as("text"),
-            col("source"), col("lang"), col("n_chars"))
-        }
-        time("build documents x10")(
-          copies.reduce(_ unionByName _).coalesce(8)
-            .write.mode("overwrite").parquet(s"$dir10/documents.parquet"))
-        markReady(dir10, DocsRecipe)
-      }
-      dir10
     }
 
     what match {
@@ -176,1826 +86,15 @@ object Scratch {
           time(s"stageprof $q")(
             graft.queries.Corpus.all(q)(spark, d)
               .write.format("noop").mode("overwrite").save())
-          Thread.sleep(1500) // listener bus drain
+          // every stage-completed event delivered, so no stage is credited
+          // to the next query
+          ListenerBusDrain(spark.sparkContext)
           println(s"===== stages for $q (stageId tasks wall io) =====")
           rows.forEach(r => println(r))
         }
 
-      case "qpart" =>
-        // Run corpus queries with an overridden spark.sql.shuffle.partitions
-        // (a RUNTIME conf — what a deployment sizes to data volume): the
-        // end-to-end companion to `dpart`'s single-stage A/B. Pass "aqe"
-        // instead of a number to leave the session's AQE sizing in charge
-        // (pair with GRAFT_INITIAL_PARTITIONS / GRAFT_ADVISORY_BYTES) —
-        // the r15 directive's arm. Wall AND spill per query, so the A/B
-        // shows whether the sizing removed the I/O, not just the seconds.
-        val qpLabel = args(2)
-        if (qpLabel != "aqe") {
-          // a NUMERIC arm means "fixed N reducers": disable coalescing so
-          // the session's seeded-AQE default (r15) can't re-size it — the
-          // fixed arm must stay a true baseline for the A/B
-          spark.conf.set("spark.sql.shuffle.partitions", qpLabel.toInt.toString)
-          spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        }
-        val spillMq = new java.util.concurrent.atomic.AtomicLong()
-        val spillDq = new java.util.concurrent.atomic.AtomicLong()
-        val evQ = new java.util.concurrent.atomic.AtomicLong()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            evQ.incrementAndGet()
-            if (te.taskMetrics != null) {
-              spillMq.addAndGet(te.taskMetrics.memoryBytesSpilled)
-              spillDq.addAndGet(te.taskMetrics.diskBytesSpilled)
-            }
-          }
-        })
-        args.drop(3).foreach { q =>
-          val m0 = (spillMq.get, spillDq.get)
-          time(s"$q @$qpLabel partitions") {
-            graft.queries.Corpus.all(q)(spark, d)
-              .write.format("noop").mode("overwrite").save()
-          }
-          drainTaskEvents(evQ)
-          println(f"[scratch] qpart $q @$qpLabel spill mem ${(spillMq.get - m0._1) / 1e6}%.0f MB" +
-            f" / disk ${(spillDq.get - m0._2) / 1e6}%.0f MB")
-        }
-
-      case "pairmass" =>
-        // Candidate-pair budget of the q_tp1 near-dup chain at d WITHOUT
-        // running the self-join: over the df-capped posting index, the
-        // pair mass is exactly sum C(df,2) and the per-shingle worst case
-        // is C(cap,2). One narrow aggregate — explains wall scaling
-        // (the r14 100x->1000x cold ratio is 16x on 10x data BECAUSE this
-        // mass grows quadratically in the copy count until the cap bites,
-        // not because any operator degrades).
-        val cfgP = graft.pipeline.CorpusCleaner.Config()
-        val docsP = Tables.documents(spark, d)
-        val qualP = docsP.select(col("doc_id"), col("text"),
-            graft.text.TextFunctions.qualityScore(col("text")).as("quality"))
-          .filter(col("quality") >= cfgP.minQuality)
-        val keepP = qualP.groupBy(
-            graft.text.TextFunctions.fingerprintMd5(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-        val exactP = qualP.join(keepP, Seq("doc_id"), "left_semi")
-        val dfP = Dedup.withShingles(exactP, "text", cfgP.shingleK)
-          .select(col("doc_id").as("doc"), explode(col("shingles")).as("shingle"))
-          .groupBy("shingle").agg(count(lit(1)).as("df"))
-        val r = dfP.agg(
-            count(lit(1)).as("shingles"),
-            sum(when(col("df") > cfgP.maxShingleDf, 1).otherwise(0)).as("hot_dropped"),
-            sum(when(col("df") <= cfgP.maxShingleDf,
-              (col("df") * (col("df") - 1) / 2).cast("long")).otherwise(0L)).as("pair_mass"),
-            sum(when(col("df") <= cfgP.maxShingleDf && col("df") >= cfgP.maxShingleDf / 2,
-              (col("df") * (col("df") - 1) / 2).cast("long")).otherwise(0L)).as("pair_mass_near_cap"))
-          .head()
-        println(s"[scratch] pairmass @$d: shingles=${r.getLong(0)} " +
-          s"hot_dropped=${r.getLong(1)} pair_mass=${r.getLong(2)} " +
-          s"near_cap_share=${r.getLong(3)}")
-
-      case "dpart" =>
-        // Per-reducer-mass A/B for the q_tp1 pair stage at d: the r14
-        // 1000x tp1diag showed stage D spilling 200 GB where 100x spills
-        // ZERO — per-reducer pair mass at the harness's fixed 32
-        // partitions grows linearly with data and crosses task memory
-        // between 100x and 1000x. If that diagnosis is right, more
-        // reducers (set as a RUNTIME conf, which is what AQE's
-        // initialPartitionNum is on a real cluster) should un-spill the
-        // stage at 1000x — the same knob that LOST 2.3x at 100x (PERF.md
-        // r12: post-shuffle coalescing can't pay back pre-shuffle
-        // fragmentation when nothing spills). Measures wall + spill per
-        // partition setting on the IDENTICAL checkpointed input.
-        val cfgD = graft.pipeline.CorpusCleaner.Config()
-        val spillM2 = new java.util.concurrent.atomic.AtomicLong()
-        val spillD2 = new java.util.concurrent.atomic.AtomicLong()
-        val ev2 = new java.util.concurrent.atomic.AtomicLong()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            ev2.incrementAndGet()
-            if (te.taskMetrics != null) {
-              spillM2.addAndGet(te.taskMetrics.memoryBytesSpilled)
-              spillD2.addAndGet(te.taskMetrics.diskBytesSpilled)
-            }
-          }
-        })
-        val docsD2 = Tables.documents(spark, d)
-        val qualD2 = docsD2.select(col("doc_id"), col("text"),
-            graft.text.TextFunctions.qualityScore(col("text")).as("quality"))
-          .filter(col("quality") >= cfgD.minQuality)
-        val keepD2 = qualD2.groupBy(
-            graft.text.TextFunctions.fingerprintMd5(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-        // Stage the input EXACTLY like tp1diag (checkpoint per stage):
-        // fusing tokenize+shingle+explode+agg+anti-join+checkpoint into one
-        // job OOMs 48g at 5M docs — measured here first try, exit 52.
-        val exactD2 = time("exact checkpoint (shared input)")(
-          qualD2.join(keepD2, Seq("doc_id"), "left_semi").localCheckpoint(true))
-        val shingD2 = time("shingle checkpoint (shared input)")(
-          Dedup.withShingles(exactD2, "text", cfgD.shingleK)
-            .select(col("doc_id").as("doc"), col("shingles")).localCheckpoint(true))
-        val shD2 = shingD2.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hotD2 = shD2.groupBy("shingle").count()
-          .filter(col("count") > cfgD.maxShingleDf).select("shingle")
-        val prunedD2 = time("pruned-index checkpoint (shared input)")(
-          shD2.join(hotD2, Seq("shingle"), "left_anti").localCheckpoint(true))
-        val baseD2 = prunedD2.select("doc", "shingle")
-        // fixed-N arms: keep AQE coalescing out of the loop so `parts`
-        // means what it says under the r15 seeded-AQE session default
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        for (parts <- args.drop(2).map(_.toInt).toSeq match {
-          case s if s.nonEmpty => s; case _ => Seq(32, 128, 256) }) {
-          spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          val m0 = (spillM2.get, spillD2.get)
-          val n = time(s"pair stage @$parts partitions") {
-            baseD2.toDF("id1", "shingle")
-              .join(baseD2.toDF("id2", "shingle_r"),
-                col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-              .groupBy("id1", "id2").agg(count(lit(1)).as("nc"))
-              .count()
-          }
-          drainTaskEvents(ev2)
-          println(f"[scratch] dpart parts=$parts pairs=$n " +
-            f"spill mem ${(spillM2.get - m0._1) / 1e6}%.0f MB / disk ${(spillD2.get - m0._2) / 1e6}%.0f MB")
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-
-      case "t4" =>
-        // attribute q_t4/q_t8 cost: norm vs char-shingles vs word-shingles
-        val docs = Tables.documents(spark, d).cache()
-        docs.count()
-        def run(label: String)(c: org.apache.spark.sql.Column): Unit =
-          time(label)(docs.select(c.as("x")).agg(sum(col("x"))).collect())
-        val norm = TextFunctions.normText(col("text"))
-        run("raw-length")(length(col("text")))
-        run("lower-trim")(length(lower(trim(col("text")))))
-        run("norm-length")(length(norm))
-        run("norm-length-2")(length(norm))
-        run("char5-count")(TextFunctions.charShingleCount(norm, 5))
-        run("char5-raw")(TextFunctions.charShingleCount(col("text"), 5))
-        run("tokenize")(size(TextFunctions.tokens(norm)))
-        run("word3-shingles")(size(TextFunctions.wordShingles(TextFunctions.tokens(norm), 3)))
-        run("norm-length-3")(length(norm))
-
-      case "dd1" =>
-        val docs = Tables.documents(spark, d)
-        val shingled = time("shingle+checkpoint") {
-          Dedup.withShingles(docs, "text", 3)
-            .select(col("doc_id").as("doc"), col("shingles"))
-            .localCheckpoint(true)
-        }
-        val sh = shingled.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hot = sh.groupBy("shingle").count().filter(col("count") > 1000).select("shingle")
-        val pruned = sh.join(hot, Seq("shingle"), "left_anti")
-        val base = pruned.select("doc", "shingle")
-        val left = base.toDF("id1", "shingle")
-        val right = base.toDF("id2", "shingle_r")
-        val cand = left
-          .join(right, col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-          .select("id1", "id2").distinct()
-        val nCand = time("candidate join+distinct")(cand.count())
-        println(s"[scratch] candidates: $nCand")
-        val sets = shingled.toDF("doc", "sh_set")
-        val scored = cand
-          .join(sets.select(col("doc").as("id1"), col("sh_set").as("sh1")), "id1")
-          .join(sets.select(col("doc").as("id2"), col("sh_set").as("sh2")), "id2")
-          .withColumn("n_common", size(array_intersect(col("sh1"), col("sh2"))).cast("long"))
-          .withColumn("jaccard",
-            col("n_common").cast("double") /
-              (size(col("sh1")) + size(col("sh2")) - col("n_common")).cast("double"))
-          .select("id1", "id2", "n_common", "jaccard")
-        time("score join")(scored.write.format("noop").mode("overwrite").save())
-        val top = scored.orderBy(col("jaccard").desc, col("id1"), col("id2")).limit(50)
-        time("full with top-50")(top.write.format("noop").mode("overwrite").save())
-        top.explain("formatted")
-
-      case "plans" =>
-        // explain("formatted") for the named queries (args(2) = csv names)
-        val names = if (args.length > 2) args(2).split(",").toSeq
-          else Seq("q_j6_asof_clicks", "q_j7_interval_clicks", "q_w8_group_topk",
-            "q_p9_hash_sample", "q_dd1_jaccard_top", "q_w4c_papprox_window")
-        names.foreach { n =>
-          println(s"===== $n =====")
-          graft.SparkEntry.queries(n)(spark, d).explain("formatted")
-        }
-
-      case "dates" =>
-        val df = spark.createDataFrame(Seq(
-          Tuple1("12/1/10 8:26"), Tuple1("12/3/10 8:5"), Tuple1("1/9/11 17:3"),
-          Tuple1("12/5/10 14:55"))).toDF("raw")
-        df.select(col("raw"),
-          to_timestamp(col("raw"), "M/d/yy H:mm").as("ts"),
-          to_date(to_timestamp(col("raw"), "M/d/yy H:mm")).as("d"),
-          dayofweek(to_date(to_timestamp(col("raw"), "M/d/yy H:mm"))).as("dow"))
-          .show(false)
-
-      case "seq" =>
-        // Replays the bench sequence with per-pass timings + storage stats to
-        // find what session state accumulates between queries.
-        def pass(label: String)(df: => org.apache.spark.sql.DataFrame): Unit =
-          (1 to 3).foreach { i =>
-            time(s"$label pass$i")(df.write.format("noop").mode("overwrite").save())
-            val sc = spark.sparkContext
-            val rddBlocks = sc.getPersistentRDDs.size
-            val mem = sc.getExecutorMemoryStatus.values.map { case (max, free) => (max - free) / 1e6 }.sum
-            println(f"[scratch]   persistentRDDs=$rddBlocks storageUsedMB=$mem%.0f")
-          }
-        pass("dd1")(graft.queries.Corpus.jaccardTop(spark, d))
-        pass("w4b")(graft.queries.Corpus.percentileApprox(spark, d))
-
-      case "t3" =>
-        // Steady-state timing of the text hot path after the langScores5
-        // fused-expression rewiring (round 6): 3 passes each.
-        (1 to 6).foreach { i =>
-          time(s"q_t2 pass$i")(graft.queries.Corpus.textQuality(spark, d)
-            .write.format("noop").mode("overwrite").save())
-        }
-        (1 to 6).foreach { i =>
-          time(s"q_t3 pass$i")(graft.queries.Corpus.textLangId(spark, d)
-            .write.format("noop").mode("overwrite").save())
-        }
-
-      case "scale8" =>
-        // Round-8 scale spot-check: the classifier/markup/domain tier plus
-        // the batched BPE trainer at 10x sf0.1 (same v2 staging as
-        // scale10: copy-suffixed tokens, per-copy id offsets, source/lang
-        // carried — 10x docs, 10x vocabulary, sources 10x bigger).
-        val dir10b = ensureStaging10(d)
-        def bench8(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        for (q <- Seq("q_t18b_bpe_train_batched", "q_t21_quality_classifier",
-            "q_t22_markup_strip", "q_t23_domain_curation",
-            "q_tp7_clean_classified", "q_tp8_clean_stripped")) {
-          bench8(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench8(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10b))
-        }
-        // Batched BPE toward a real vocabulary: wide pool on the 10x corpus
-        // (10x word types). Merges must scale with poolK at O(rounds) jobs.
-        locally {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          val m = try {
-            val r = graft.text.BpeTrain.trainBatched(
-              Tables.documents(spark, dir10b), "text", rounds = 32, poolK = 64).collect()
-            Thread.sleep(500)
-            r
-          } finally spark.sparkContext.removeSparkListener(listener)
-          println(f"[scratch] bpe batched 10x: ${m.length}%d merges / 32 rounds / " +
-            f"${jobs.get()}%d jobs in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-
-      case "bpe32" =>
-        // Greedy vs declarative batch density on the 10x corpus: the
-        // production-vocabulary path (greedy packs denser per round at the
-        // same O(rounds) job count).
-        val dirB = ensureStaging10(d)
-        for ((label, greedy, poolK) <- Seq(
-            ("declarative poolK=64", false, 64),
-            ("greedy poolK=64", true, 64),
-            ("greedy poolK=256", true, 256))) {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          val m = try {
-            val r = graft.text.BpeTrain.trainBatched(
-              Tables.documents(spark, dirB), "text",
-              rounds = 32, poolK = poolK, greedy = greedy).collect()
-            Thread.sleep(500)
-            r
-          } finally spark.sparkContext.removeSparkListener(listener)
-          println(f"[scratch] bpe32 $label: ${m.length}%d merges / 32 rounds / " +
-            f"${jobs.get()}%d jobs in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-
-      case "scale10" =>
-        // Round-6 scale spot-check: the iterative/heavy tier at 10× sf0.1
-        // (~5k docs -> 50k docs, ~600k lineitem rows -> 10x series). Each
-        // copy k of documents gets doc_id + k*10M and every token suffixed
-        // with the copy index, so cross-copy similarity is zero and
-        // dup-density per copy matches sf0.1 — 10x the data, same structure.
-        // v2 staging carries source/lang/n_chars so the mixing/packing tier
-        // (q_p13/q_tp5) runs too — sources keep their names, so each source
-        // is 10x bigger (the per-source window/quota stress shape).
-        val dir10 = ensureStaging10(d)
-        def bench2(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          val cc = graft.dedup.Dedup.lastCcRounds
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")}) ccRounds=$cc")
-        }
-        for (q <- Seq("q_dd6_dup_clusters", "q_dd8_star_clusters",
-            "q_tp2_clean_clustered", "q_t13_heavy_hitters",
-            "q_dd9_incremental_dedup")) {
-          bench2(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench2(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10))
-        }
-        // round-7 heavy text tier: LM counts, BPE training loop, BPE encode,
-        // hashed features, temperature mix, and the tp5 composition.
-        // Copy-suffixed tokens give 10x the vocabulary and bigram space —
-        // the dimension these ops actually scale in. (q_p13/q_tp5 also read
-        // `source`/`lang`/`n_chars`; the 10x staging writes those columns.)
-        for (q <- Seq("q_t16_ngram_lm", "q_t18_bpe_train", "q_t19_bpe_encode",
-            "q_t17_hashed_tfidf", "q_p13_temperature_mix", "q_tp5_training_dataset")) {
-          bench2(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench2(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10))
-        }
-
-        // q_dd10's scale knob: numSeeds grows with the corpus so cluster
-        // sizes stay bounded (pair work = Σ cluster·(cluster−1)/2). Same
-        // 2000-vector input, 8 vs 64 seeds — candidate pairs must drop.
-        locally {
-          val emb = Tables.embeddings(spark, d).select("vec_id", "embedding")
-          def candidatePairs(k: Int): Long =
-            graft.dedup.Dedup.semanticDedup(emb, "vec_id", "embedding", numSeeds = k)
-              .groupBy("cluster").count().collect()
-              .map(_.getLong(1)).map(n => n * (n - 1) / 2).sum
-          val p8 = candidatePairs(8)
-          val p64 = candidatePairs(64)
-          println(f"[scratch] dd10 candidate pairs: numSeeds=8 -> $p8%d, numSeeds=64 -> $p64%d (${p8.toDouble / p64}%.1fx fewer)")
-        }
-
-        // w14 runs on the daily grain; scale by suffixing Country per copy —
-        // 10x the series count at identical per-series length (the shape a
-        // 10x corpus has), salting/window structure unchanged.
-        val dailyBase = graft.queries.Corpus.all("q_w14_salted_trailing")
-        bench2("q_w14_salted_trailing sf0.1")(dailyBase(spark, d))
-        locally {
-          import graft.operators.Skew
-          val daily1 = graft.forecast.Forecast.dailySales(Tables.salesLines(spark, d))
-            .select("Country", "InvoiceDate", "NetDailyQuantity")
-          val daily10 = (0 until 10).map { k =>
-            daily1.select(
-              concat(col("Country"), lit(s"_$k")).as("Country"),
-              col("InvoiceDate"), col("NetDailyQuantity"))
-          }.reduce(_ unionByName _).localCheckpoint(true)
-          bench2("q_w14_salted_trailing 10x")(
-            Skew.saltedTrailingSum(daily10, Seq("Country"), "InvoiceDate",
-              "NetDailyQuantity", days = 7, salts = 16, out = "trail7"))
-        }
-
-      case "bpe1k" =>
-        // The 32k-vocabulary trajectory demo: greedy batching with a wide
-        // pool over MANY rounds on the 10x corpus — merges must keep
-        // outpacing jobs by a wide margin as the vocabulary grows (the
-        // whole point of batched rounds: job count is O(rounds), never
-        // O(merges)).
-        val dirV = ensureStaging10(d)
-        for ((rounds, poolK) <- Seq((64, 512), (128, 512))) {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          val m = try {
-            val r = graft.text.BpeTrain.trainBatched(
-              Tables.documents(spark, dirV), "text",
-              rounds = rounds, poolK = poolK, greedy = true).collect()
-            Thread.sleep(500)
-            r
-          } finally spark.sparkContext.removeSparkListener(listener)
-          println(f"[scratch] bpe1k rounds=$rounds poolK=$poolK: ${m.length}%d merges / " +
-            f"${jobs.get()}%d jobs in ${(System.nanoTime() - t0) / 1e9}%.1fs " +
-            f"(${m.length.toDouble / jobs.get()}%.1f merges/job)")
-        }
-
-      case "bpe1kv" =>
-        // Round-9 directive: demonstrate >=1k merges with jobs << merges.
-        // The copy-suffix 10x staging tops out at 427 merges (its COMPLETE
-        // mergeable vocabulary — every word type collapses to one symbol,
-        // measured r8). A web corpus's vocabulary is effectively
-        // inexhaustible, so this harness diversifies the staging's
-        // vocabulary instead of its volume: each token gains a 2-hex-char
-        // code keyed off (token, doc_id mod 64) — up to 64 variants per
-        // base type, a vocabulary deep enough that the trainer runs out of
-        // ROUNDS, not material.
-        val dirV9 = ensureStaging10(d)
-        val vocabDir = "/tmp/sf1x10_vocab"
-        if (!stagingReady(vocabDir, s"vocab-$DocsRecipe")) {
-          rebuildDir(vocabDir)
-          time("build vocab-diversified staging") {
-            Tables.documents(spark, dirV9)
-              .select(col("doc_id"),
-                array_join(
-                  transform(split(col("text"), "\\s+"), t =>
-                    concat(t, substring(md5(concat(t,
-                      (col("doc_id") % 64).cast("string"))), 1, 2))),
-                  " ").as("text"),
-                col("source"), col("lang"), col("n_chars"))
-              .coalesce(8)
-              .write.mode("overwrite").parquet(s"$vocabDir/documents.parquet")
-          }
-          markReady(vocabDir, s"vocab-$DocsRecipe")
-        }
-        val configs = sys.env.get("GRAFT_BPE32K") match {
-          case Some(_) => Seq((640, 2048)) // the full 32k-vocab trajectory
-          case None => Seq((192, 2048))
-        }
-        for ((rounds, poolK) <- configs) {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-          val roundWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          val m = try {
-            val r = graft.text.BpeTrain.trainBatched(
-              Tables.documents(spark, vocabDir), "text",
-              rounds = rounds, poolK = poolK, greedy = true).collect()
-            Thread.sleep(500)
-            r
-          } finally spark.sparkContext.removeSparkListener(listener)
-          val wall = (System.nanoTime() - t0) / 1e9
-          val nRounds = m.map(_.getInt(1)).max
-          val perRound = m.groupBy(_.getInt(1)).view.mapValues(_.length)
-          val firstQ = (1 to nRounds / 4).map(perRound.getOrElse(_, 0)).sum
-          val lastQ = (3 * nRounds / 4 + 1 to nRounds).map(perRound.getOrElse(_, 0)).sum
-          println(f"[scratch] bpe1kv rounds=$rounds poolK=$poolK: ${m.length}%d merges / " +
-            f"$nRounds%d rounds / ${jobs.get()}%d jobs in $wall%.1fs " +
-            f"(${m.length.toDouble / jobs.get()}%.1f merges/job, " +
-            f"${wall / nRounds}%.2fs/round; merges in first/last round-quartile: $firstQ/$lastQ)")
-        }
-
-      case "mm10diag" =>
-        // Round-10 q_mm10 scale diagnosis: is the 10x blowup identical
-        // signatures (collapse helps) or hot band VALUES across distinct
-        // signatures (needs a bucket cap)?
-        val blobs = graft.multimodal.Multimodal.toPngBlobs(spark, Tables.documents(spark, d))
-        val h = graft.multimodal.Multimodal.imageAHash(spark, blobs).toDF.localCheckpoint(true)
-        println(s"[scratch] docs=${h.count()} distinct_ahash=${h.select("ahash").distinct.count()}")
-        val bandCols = (0 until 4).map(b =>
-          conv(substring(col("ahash"), b * 16 + 1, 16), 2, 10).cast("long").as(s"b$b"))
-        val hb = h.select(col("doc_id") +: bandCols: _*).localCheckpoint(true)
-        for (b <- 0 until 4) {
-          val top = hb.groupBy(s"b$b").count.orderBy(desc("count")).limit(5).collect()
-          println(s"[scratch] band$b top bucket sizes: " + top.map(_.getLong(1)).mkString(","))
-          val sq = hb.groupBy(s"b$b").count.agg(sum(col("count") * col("count"))).head.getLong(0)
-          println(s"[scratch] band$b sum(sz^2) = $sq")
-        }
-        println("[scratch] top sig group sizes: " + h.groupBy("ahash").count
-          .orderBy(desc("count")).limit(5).collect().map(_.getLong(1)).mkString(","))
-
-      case "mm10count" =>
-        time("q_mm10 count")(
-          println(s"[scratch] mm10 pairs = ${graft.queries.Corpus.all("q_mm10_image_neardup")(spark, d).count()}"))
-        time("q_dd3 count")(
-          println(s"[scratch] dd3 pairs = ${graft.queries.Corpus.all("q_dd3_simhash_pairs")(spark, d).count()}"))
-
-      case "staging10full" =>
-        // Round-10 directive: a FULL-table 10x staging so the whole query
-        // sweep (graft.Bench with SPARK_GRAFT_SF_DIR=/tmp/sf10full) runs at
-        // 10x — one artifact instead of per-query spot checks. Fact tables
-        // are replicated 10x with shifted keys, keeping join integrity
-        // (lineitem.l_orderkey <-> orders.o_orderkey and orders.o_custkey
-        // <-> customer.c_custkey move together); documents use the v3
-        // stop-preserving token-suffix recipe (cross-copy similarity near
-        // zero, dup density AND gate-pass statistics per copy preserved);
-        // embeddings keep copy 0 byte-exact (the vec_id-0
-        // query fixture) and deterministically jitter copies 1..9 so no
-        // cross-copy vector is identical; dimension tables copy as-is —
-        // exactly how a real 10x grows (facts grow, dims don't).
-        val out10 = "/tmp/sf10full"
-        if (!stagingReady(out10, s"full10-$DocsRecipe")) {
-          rebuildDir(out10)
-          def copies(name: String, src: org.apache.spark.sql.DataFrame)(
-              shift: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit =
-            time(s"build $name x10") {
-              (0 until 10).map(k => shift(src, k)).reduce(_ unionByName _)
-                .coalesce(16).write.mode("overwrite").parquet(s"$out10/$name.parquet")
-            }
-          for (dim <- Seq("region", "nation", "part", "supplier"))
-            time(s"copy $dim")(Tables.table(spark, d, dim)
-              .write.mode("overwrite").parquet(s"$out10/$dim.parquet"))
-          copies("customer", Tables.customer(spark, d))((df, k) =>
-            df.withColumn("c_custkey", col("c_custkey") + k * 10000000L))
-          copies("orders", Tables.orders(spark, d))((df, k) =>
-            df.withColumn("o_orderkey", col("o_orderkey") + k * 100000000L)
-              .withColumn("o_custkey", col("o_custkey") + k * 10000000L))
-          copies("lineitem", Tables.lineitem(spark, d))((df, k) =>
-            df.withColumn("l_orderkey", col("l_orderkey") + k * 100000000L))
-          // events must round-trip through Tables.events (TIMESTAMP(NANOS)
-          // normalization); the rewrite lands as plain micros
-          copies("events", Tables.events(spark, d))((df, k) =>
-            df.withColumn("event_id", col("event_id") + k * 1000000000L)
-              .withColumn("user_id", col("user_id") + k * 10000000L))
-          copies("documents", Tables.documents(spark, d))((df, k) =>
-            df.select(
-              (col("doc_id") + k * 10000000L).as("doc_id"),
-              suffixedText(lit(k)).as("text"),
-              col("lang"), col("source"), col("n_chars")))
-          copies("embeddings", Tables.embeddings(spark, d))((df, k) =>
-            if (k == 0) df
-            else df.select(
-              (col("vec_id") + k * 10000000L).as("vec_id"),
-              transform(col("embedding"), (x, i) =>
-                (x + (pmod(col("vec_id") * 31 + i + lit(k), lit(997)) - 498)
-                  .cast("double") / 10000.0).cast("float")).as("embedding"),
-              col("label")))
-          markReady(out10, s"full10-$DocsRecipe")
-        }
-        println(s"[scratch] staging10full ready at $out10")
-
-      case "staging100docs" =>
-        // Round-10: a 100x DOCUMENTS staging (sf0.1 x 100 = 500k docs) for
-        // the text/dedup tier — one order beyond the 10x artifact. Same
-        // v3 stop-preserving recipe at 100 copies: doc_id + k*10M,
-        // non-function-word tokens suffixed with the copy index (regexp
-        // replacement as a COLUMN, so one explode covers all copies — no
-        // 100-way union plan), hence near-zero cross-copy similarity with
-        // per-copy dup density AND gate statistics identical to sf0.1.
-        // Documents only: the 100x run targets Tables.documents
-        // consumers via SPARK_GRAFT_BENCH_ONLY.
-        val out100 = "/tmp/sf100docs"
-        if (!stagingReady(out100, DocsRecipe)) {
-          rebuildDir(out100)
-          time("build documents x100") {
-            Tables.documents(spark, d)
-              .select(col("doc_id"), col("text"), col("lang"), col("source"),
-                col("n_chars"), explode(sequence(lit(0), lit(99))).as("k"))
-              .select(
-                (col("doc_id") + col("k") * 10000000L).as("doc_id"),
-                suffixedText(col("k")).as("text"),
-                col("lang"), col("source"), col("n_chars"))
-              .repartition(64)
-              .write.mode("overwrite").parquet(s"$out100/documents.parquet")
-          }
-          markReady(out100, DocsRecipe)
-        }
-        println(s"[scratch] staging100docs ready at $out100")
-
-      case "staging1000docs" =>
-        // Round-10 capstone: 1000x documents (5M docs) — two orders beyond
-        // the full-sweep staging, same v3 stop-preserving recipe.
-        // Only the flagship dedup/text queries run here (the point is the
-        // scaling exponent of the shapes that matter at 100 TB).
-        val out1k = "/tmp/sf1000docs"
-        if (!stagingReady(out1k, DocsRecipe)) {
-          rebuildDir(out1k)
-          time("build documents x1000") {
-            Tables.documents(spark, d)
-              .select(col("doc_id"), col("text"), col("lang"), col("source"),
-                col("n_chars"), explode(sequence(lit(0), lit(999))).as("k"))
-              .select(
-                (col("doc_id") + col("k") * 10000000L).as("doc_id"),
-                suffixedText(col("k")).as("text"),
-                col("lang"), col("source"), col("n_chars"))
-              .repartition(128)
-              .write.mode("overwrite").parquet(s"$out1k/documents.parquet")
-          }
-          for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "embeddings")) {
-            val src = new java.io.File(s"$d/$t.parquet")
-            val dst = new java.io.File(s"$out1k/$t.parquet")
-            if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-            else org.apache.commons.io.FileUtils.copyFile(src, dst)
-          }
-          markReady(out1k, DocsRecipe)
-        }
-        println(s"[scratch] staging1000docs ready at $out1k")
-
-      case "staging100events" =>
-        // r14 directive #5: the streaming tier one order past the 10x
-        // measurement. Events x100 with the staging10full shift recipe —
-        // event_id +k*1e9 and user_id +k*10M per copy, timestamps
-        // untouched (same time range, 100x the event mass and 100x the
-        // distinct users: watermark/session/dedup state grows in exactly
-        // the dimension the state stores are keyed on). Read AND written
-        // through Tables.events so the TIMESTAMP(NANOS) source normalizes
-        // to micros once; every other table rides along at 1x so the dir
-        // serves as a full SPARK_GRAFT_SF_DIR for the 16-query q_e family.
-        val outEv = "/tmp/sf100events"
-        val EvRecipe = "events100-v1-shift"
-        if (!stagingReady(outEv, EvRecipe)) {
-          rebuildDir(outEv)
-          time("build events x100") {
-            Tables.events(spark, d)
-              .withColumn("k", explode(sequence(lit(0), lit(99))))
-              .withColumn("event_id", col("event_id") + col("k") * 1000000000L)
-              .withColumn("user_id", col("user_id") + col("k") * 10000000L)
-              .drop("k")
-              .repartition(32)
-              .write.mode("overwrite").parquet(s"$outEv/events.parquet")
-          }
-          for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "documents", "embeddings")) {
-            // testdata parquet may be a single file rather than a directory
-            val src = new java.io.File(s"$d/$t.parquet")
-            val dst = new java.io.File(s"$outEv/$t.parquet")
-            if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-            else org.apache.commons.io.FileUtils.copyFile(src, dst)
-          }
-          markReady(outEv, EvRecipe)
-        }
-        println(s"[scratch] staging100events ready at $outEv")
-
-      case "staging100emb" =>
-        // Round-11 directive: a 100x EMBEDDINGS staging (sf0.1 x 100 = 200k
-        // vectors) — the geometry-dependent tier (IVF cell balance, PQ
-        // shortlist mass, SemDeDup cluster growth) had no evidence past
-        // 10x. Copy 0 is byte-exact (the vec_id-0 query fixture and every
-        // planted-clone recall contract survive verbatim); copies 1..99
-        // jitter each dimension deterministically (pmod hash of (vec_id,
-        // dim, copy) — the staging10full recipe) so no cross-copy vector
-        // is identical. One explode covers all copies — no 100-way union
-        // plan. Other tables ride along at 1x so the dir serves as a full
-        // SPARK_GRAFT_SF_DIR.
-        val outE = "/tmp/sf100emb"
-        // recipe tag "v1": 100 copies never hit the mod-997 collision, so
-        // the 1000x epsilon term is deliberately absent here
-        if (!stagingReady(outE, "emb-v1-mod997")) {
-          rebuildDir(outE)
-          time("build embeddings x100") {
-            Tables.embeddings(spark, d)
-              .select(col("vec_id"), col("embedding"), col("label"),
-                explode(sequence(lit(0), lit(99))).as("k"))
-              .select(
-                (col("vec_id") + col("k") * 10000000L).as("vec_id"),
-                when(col("k") === 0, col("embedding")).otherwise(
-                  transform(col("embedding"), (x, i) =>
-                    (x + (pmod(col("vec_id") * 31 + i + col("k"), lit(997)) - 498)
-                      .cast("double") / 10000.0).cast("float"))).as("embedding"),
-                col("label"))
-              .repartition(32)
-              .write.mode("overwrite").parquet(s"$outE/embeddings.parquet")
-          }
-          for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents")) {
-            val src = new java.io.File(s"$d/$t.parquet")
-            val dst = new java.io.File(s"$outE/$t.parquet")
-            if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-            else org.apache.commons.io.FileUtils.copyFile(src, dst)
-          }
-          markReady(outE, "emb-v1-mod997")
-        }
-        println(s"[scratch] staging100emb ready at $outE")
-
-      case "staging1000emb" =>
-        // Round-12: one decade beyond staging100emb — sf0.1 x 1000 = 2M
-        // vectors, same copy-0-byte-exact + deterministic-jitter recipe, so
-        // the embedding tier's evidence ladder matches the text tier's
-        // (sf0.1 → 10x → 100x → 1000x on one recipe).
-        // Jitter recipe, two hard-won properties (both MEASURED failures):
-        // 1. Copies k and k+997 under the plain mod-997 formula shared an
-        //    identical jitter pattern -> byte-identical vectors (ADVICE
-        //    r12), violating "no cross-copy vector is identical".
-        // 2. The naive fix (one big modulus, 99991) KEPT distinctness but
-        //    destroyed per-dimension DIVERSITY: v*31+i+k < 99991 for all
-        //    small v, so the jitter never wrapped and was near-constant
-        //    across dims/copies — every copy family collapsed into a tight
-        //    uniformly-shifted cluster whose identical PQ codes flooded the
-        //    ADC shortlist and broke q_ann8's planted-clone recall at 2M
-        //    vectors (exact clones pruned before the rerank tier).
-        // So: keep mod 997 (arguments wrap -> genuinely varied per-dim
-        // jitter, the geometry every r12 contract was proven on) and add a
-        // copy-unique epsilon (k-500)(i+1)/1e7. Copies with the same mod
-        // pattern (|k-k'|=997) differ by 997(i+1)/1e7 >= 1e-4 in EVERY
-        // dim; copies with different patterns differ in >= 62 of 64 dims
-        // (the linear epsilon can cancel the mod delta in at most 2 dims).
-        // Magnitude stays ±0.05 mod-term dominated.
-        val outE1k = "/tmp/sf1000emb"
-        if (!stagingReady(outE1k, EmbRecipe)) {
-          rebuildDir(outE1k)
-          time("build embeddings x1000") {
-            Tables.embeddings(spark, d)
-              .select(col("vec_id"), col("embedding"), col("label"),
-                explode(sequence(lit(0), lit(999))).as("k"))
-              .select(
-                (col("vec_id") + col("k") * 10000000L).as("vec_id"),
-                when(col("k") === 0, col("embedding")).otherwise(
-                  transform(col("embedding"), (x, i) =>
-                    (x + (pmod(col("vec_id") * 31 + i + col("k"), lit(997)) - 498)
-                      .cast("double") / 10000.0
-                      + (col("k") - 500).cast("double") * (i + 1).cast("double")
-                        / 10000000.0).cast("float"))).as("embedding"),
-                col("label"))
-              .repartition(64)
-              .write.mode("overwrite").parquet(s"$outE1k/embeddings.parquet")
-          }
-          for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents")) {
-            val src = new java.io.File(s"$d/$t.parquet")
-            val dst = new java.io.File(s"$outE1k/$t.parquet")
-            if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-            else org.apache.commons.io.FileUtils.copyFile(src, dst)
-          }
-          markReady(outE1k, EmbRecipe)
-        }
-        println(s"[scratch] staging1000emb ready at $outE1k")
-
-      case "staginghardemb" =>
-        // r14 directive #2: a 100x embedding staging with NATURAL cosine
-        // spread — the jitter recipes keep copies within ±0.05 of their
-        // base, so every staged corpus so far was clone-dominated and the
-        // IVF operating curve measured there saturates at recall 1.0 for
-        // any nprobe (every neighbor sits in the query's own cell). Here
-        // copies 1..99 are DECORRELATED from their base instead: copy k
-        // reads the base coordinates ROTATED by k positions with a
-        // deterministic per-(vec,dim,copy) sign flip and the mod-997
-        // jitter on top. Rotation+sign preserve the corpus' norm/marginal
-        // statistics (the coordinates are the same numbers), but the
-        // expected cross-copy cosine is 0 with std ~1/sqrt(64) — 200k
-        // vectors that behave like a natural isotropic corpus, the
-        // geometry where nprobe genuinely trades recall for scan cost.
-        // Copy 0 stays byte-exact.
-        val outH = "/tmp/sfhardemb"
-        val HardRecipe = "emb-hard-v1-rot-sign-mod997"
-        if (!stagingReady(outH, HardRecipe)) {
-          rebuildDir(outH)
-          time("build hard embeddings x100") {
-            val dim = 64
-            Tables.embeddings(spark, d)
-              .select(col("vec_id"), col("embedding"), col("label"),
-                explode(sequence(lit(0), lit(99))).as("k"))
-              .select(
-                (col("vec_id") + col("k") * 10000000L).as("vec_id"),
-                when(col("k") === 0, col("embedding")).otherwise(
-                  transform(sequence(lit(0), lit(dim - 1)), i =>
-                    ((lit(1) - lit(2) * pmod(col("vec_id") * 131 + i * 17 + col("k") * 7, lit(2)))
-                      .cast("double") *
-                      element_at(col("embedding"), (pmod(i + col("k"), lit(dim)) + 1).cast("int"))
-                      + (pmod(col("vec_id") * 31 + i + col("k"), lit(997)) - 498)
-                        .cast("double") / 10000.0)
-                      .cast("float"))).as("embedding"),
-                col("label"))
-              .repartition(32)
-              .write.mode("overwrite").parquet(s"$outH/embeddings.parquet")
-          }
-          for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents")) {
-            val src = new java.io.File(s"$d/$t.parquet")
-            val dst = new java.io.File(s"$outH/$t.parquet")
-            if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-            else org.apache.commons.io.FileUtils.copyFile(src, dst)
-          }
-          markReady(outH, HardRecipe)
-        }
-        println(s"[scratch] staginghardemb ready at $outH")
-
-      case "staginghardemb1k" =>
-        // The hard regime one order further: 2M decorrelated vectors.
-        // The x100 recipe CANNOT just take 1000 copies: its rotation is
-        // (i + k) mod 64 and its sign parity is linear in k, so copies k
-        // and k+64 share BOTH rotation and sign pattern — past 64 copies
-        // the corpus silently re-enters the clone regime the hard staging
-        // exists to escape. Here rotation offset and per-coordinate sign
-        // both come from xxhash64 over (vec, k[, i]) — no arithmetic
-        // structure for any copy pair to collide on. Norm/marginal stats
-        // are preserved exactly as in the x100 recipe (permutation + sign
-        // flips of the same coordinates + the mod-997 jitter).
-        val outH2 = "/tmp/sfhardemb1k"
-        val HardRecipe2 = "emb-hard-v2-xxrot-xxsign-mod997-x1000"
-        if (!stagingReady(outH2, HardRecipe2)) {
-          rebuildDir(outH2)
-          time("build hard embeddings x1000") {
-            val dim = 64
-            Tables.embeddings(spark, d)
-              .select(col("vec_id"), col("embedding"), col("label"),
-                explode(sequence(lit(0), lit(999))).as("k"))
-              .select(
-                (col("vec_id") + col("k") * 10000000L).as("vec_id"),
-                when(col("k") === 0, col("embedding")).otherwise(
-                  transform(sequence(lit(0), lit(dim - 1)), i =>
-                    ((lit(1) - lit(2) * pmod(xxhash64(col("vec_id"), i, col("k")), lit(2)))
-                      .cast("double") *
-                      element_at(col("embedding"),
-                        (pmod(i + pmod(xxhash64(col("vec_id"), col("k")), lit(dim)),
-                          lit(dim)) + 1).cast("int"))
-                      + (pmod(col("vec_id") * 31 + i + col("k"), lit(997)) - 498)
-                        .cast("double") / 10000.0)
-                      .cast("float"))).as("embedding"),
-                col("label"))
-              .repartition(64)
-              .write.mode("overwrite").parquet(s"$outH2/embeddings.parquet")
-          }
-          markReady(outH2, HardRecipe2)
-        }
-        println(s"[scratch] staginghardemb1k ready at $outH2")
-
-      case "annhard" =>
-        // r14 directive #2: the production-shaped IVF operating curve —
-        // recall@10 vs nprobe at d (the hard staging), with nlist scaled
-        // ~sqrt(n) instead of the gate-scale 16. Ground truth is exact
-        // brute-force cosine top-10 on the same 10-query set. Also prints
-        // cell-balance stats (a skewed quantizer would make the scanned
-        // fraction lie about cost).
-        val embH = Tables.embeddings(spark, d).select("vec_id", "embedding")
-          .localCheckpoint(true)
-        val nH = embH.count()
-        val nlist = sys.env.get("GRAFT_ANN_NLIST").map(_.toInt)
-          .getOrElse(math.max(16, math.sqrt(nH.toDouble).round.toInt))
-        println(s"[scratch] annhard n=$nH nlist=$nlist")
-        val idx = time(s"IVF fit nlist=$nlist (sampled Lloyd)") {
-          graft.similarity.Ivf.fit(embH, "embedding", nlist = nlist, maxSample = 16384)
-        }
-        val assigned = time("assign corpus") {
-          val a = graft.similarity.Ivf.assign(embH, "embedding", idx).localCheckpoint(true)
-          a.count(); a
-        }
-        val cells = assigned.groupBy("cell").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val sizes = (0 until nlist).map(c => cells.getOrElse(c, 0L))
-        println(s"[scratch] cell balance: mean=${nH / nlist} " +
-          s"max=${sizes.max} p99=${sizes.sorted.apply(nlist * 99 / 100)} empty=${sizes.count(_ == 0L)}")
-        val queriesH: Array[(Long, Array[Float])] =
-          embH.filter(col("vec_id") < 10000000L && pmod(col("vec_id"), lit(50)) === 7)
-            .orderBy("vec_id").limit(10).collect()
-            .map(r => (r.getLong(0), r.getSeq[Number](1).map(_.floatValue()).toArray))
-        val truthH: Map[Long, Set[Long]] = time("exact ground truth (10 queries)") {
-          queriesH.map { case (qid, qv) =>
-            qid -> graft.similarity.Ann.exactTopKReproducible(
-                embH, "vec_id", "embedding", qv.map(_.toDouble), 10)
-              .select("vec_id").collect().map(_.getLong(0)).toSet
-          }.toMap
-        }
-        val nprobes = sys.env.get("GRAFT_ANN_NPROBES")
-          .map(_.split(",").map(_.trim.toInt).toSeq)
-          .getOrElse(Seq(1, 2, 4, 8, 16, 32, 64, 128))
-        for (nprobe <- nprobes) {
-          var hits = 0
-          var scanned = 0L
-          time(s"nprobe=$nprobe (10 queries)") {
-            queriesH.foreach { case (qid, qv) =>
-              val probed = graft.similarity.Ivf.probeCells(idx, qv, nprobe)
-              scanned += probed.map(c => cells.getOrElse(c, 0L)).sum
-              val got = assigned.filter(col("cell").isin(probed: _*))
-                .select(col("vec_id"),
-                  graft.similarity.Ann.cosineCol(spark, col("embedding"), qv).as("cosine"))
-                .orderBy(col("cosine").desc, col("vec_id")).limit(10)
-                .collect().map(_.getLong(0)).toSet
-              hits += (got intersect truthH(qid)).size
-            }
-          }
-          println(f"[scratch] ivf-hard nprobe=$nprobe recall@10=${hits / 100.0}%.2f " +
-            f"scanned=${scanned.toDouble / (10.0 * nH)}%.4f of corpus")
-        }
-
-      case "hybrid100" =>
-        // r14 extension: the RAG-serving capstone (q_r1/q_r2 shape) with
-        // BOTH legs at 100x. The gate-scale hybrid is oracle-exact but
-        // tiny; the hard-regime ANN curve is 100x but vector-only. Here
-        // the composed retrieval runs on documents x100 (v3
-        // stop-preserving recipe — BM25/gate statistics per copy match
-        // sf0.1) joined to embeddings x100 (hard decorrelated recipe —
-        // natural cosine spread, the geometry where the IVF prune
-        // genuinely trades recall for scan cost). Both recipes shift ids
-        // by the SAME +k*10M, so the doc_id==vec_id alignment of the gate
-        // corpus survives staging: a 200k-doc corpus with text AND
-        // embeddings under a 500k-doc lexical index. The lexical query
-        // uses the gate terms' copy-0 surface forms ("sparkx0", ...):
-        // content tokens carry the copy suffix by recipe, so the postings
-        // mass stays df-bound while the tokenize/dl scan underneath is
-        // the full 100x corpus — exactly how a fixed query behaves when
-        // the corpus grows around it. Measures per-leg walls, the IVF
-        // leg's recall of the exact vector top-50 at nlist=sqrt(n), and
-        // whether vector-leg approximation SURVIVES FUSION (fused top-20
-        // overlap vs the exact-leg hybrid).
-        val outHy = "/tmp/sfhybrid100"
-        val HyRecipe = "hybrid100-docsv3-embhardv1"
-        require(stagingReady("/tmp/sf100docs", DocsRecipe),
-          "run staging100docs first (v3 documents x100)")
-        require(stagingReady("/tmp/sfhardemb", "emb-hard-v1-rot-sign-mod997"),
-          "run staginghardemb first (hard embeddings x100)")
-        if (!stagingReady(outHy, HyRecipe)) {
-          rebuildDir(outHy)
-          org.apache.commons.io.FileUtils.copyDirectory(
-            new java.io.File("/tmp/sf100docs/documents.parquet"),
-            new java.io.File(s"$outHy/documents.parquet"))
-          org.apache.commons.io.FileUtils.copyDirectory(
-            new java.io.File("/tmp/sfhardemb/embeddings.parquet"),
-            new java.io.File(s"$outHy/embeddings.parquet"))
-          markReady(outHy, HyRecipe)
-        }
-        import org.apache.spark.sql.expressions.Window
-        val embHy = Tables.embeddings(spark, outHy)
-          .select(col("vec_id").as("doc_id"), col("embedding"))
-        val corpusHy = time("join corpus (docs x100 into emb x100)") {
-          Tables.documents(spark, outHy).select("doc_id", "text")
-            .join(embHy, "doc_id").localCheckpoint(true)
-        }
-        val nHy = corpusHy.count()
-        println(s"[scratch] hybrid100 corpus n=$nHy")
-        val qvHy = graft.queries.Corpus.queryVector(spark, outHy)
-        def rrfMicro(r: Option[Int]): Long =
-          r.map(x => math.floor(1000000.0 / (60.0 + x)).toLong).getOrElse(0L)
-        // driver-side RRF over two <=50-row legs (the q_r1 integer-rank
-        // fusion, replayed in plain Scala — bounded state)
-        def fuseTop20(lex: Seq[(Long, Int)], vec: Seq[(Long, Int)]): Seq[Long] = {
-          val lm = lex.toMap; val vm = vec.toMap
-          (lm.keySet ++ vm.keySet).toSeq
-            .map(id => (id, rrfMicro(lm.get(id)) + rrfMicro(vm.get(id))))
-            .sortBy { case (id, sc) => (-sc, id) }.take(20).map(_._1)
-        }
-        val lexHy: Seq[(Long, Int)] = time("BM25 leg (100x tokenize scan, df-bound postings)") {
-          graft.text.Bm25.topK(corpusHy, "doc_id", "text",
-              Seq("sparkx0", "mergex0", "windowx0", "streamx0"), k = 50)
-            .withColumn("r_lex", row_number().over(
-              Window.orderBy(col("bm25").desc, col("doc_id"))).cast("int"))
-            .select("doc_id", "r_lex")
-            .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-        }
-        println(s"[scratch] lex leg: ${lexHy.length} docs")
-        val vecTruthHy: Seq[Long] = time("exact vector leg (truth)") {
-          graft.similarity.Ann.exactTopKReproducible(
-              corpusHy, "doc_id", "embedding", qvHy.map(_.toDouble), 50)
-            .select("doc_id").collect().map(_.getLong(0)).toSeq
-        }
-        val truthFused = fuseTop20(lexHy,
-          vecTruthHy.zipWithIndex.map { case (id, i) => (id, i + 1) })
-        val nlistHy = math.max(16, math.sqrt(nHy.toDouble).round.toInt)
-        val idxHy = time(s"IVF fit nlist=$nlistHy (sampled Lloyd)") {
-          graft.similarity.Ivf.fit(
-            corpusHy.select("doc_id", "embedding"), "embedding",
-            nlist = nlistHy, maxSample = 16384)
-        }
-        val assignedHy = time("assign corpus") {
-          val a = graft.similarity.Ivf.assign(
-            corpusHy.select("doc_id", "embedding"), "embedding", idxHy)
-            .localCheckpoint(true)
-          a.count(); a
-        }
-        val cellsHy = assignedHy.groupBy("cell").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val truthSetHy = vecTruthHy.toSet
-        for (nprobe <- Seq(1, 4, 8, 16, 32, 64)) {
-          val probed = graft.similarity.Ivf.probeCells(idxHy, qvHy, nprobe)
-          val scanned = probed.map(c => cellsHy.getOrElse(c, 0L)).sum
-          val got: Seq[Long] = time(s"IVF leg nprobe=$nprobe") {
-            assignedHy.filter(col("cell").isin(probed: _*))
-              .select(col("doc_id"),
-                graft.similarity.Ann.cosineCol(spark, col("embedding"), qvHy).as("cosine"))
-              .orderBy(col("cosine").desc, col("doc_id")).limit(50)
-              .collect().map(_.getLong(0)).toSeq
-          }
-          val vecRecall = got.toSet.intersect(truthSetHy).size / 50.0
-          val fused = fuseTop20(lexHy,
-            got.zipWithIndex.map { case (id, i) => (id, i + 1) })
-          val overlap = fused.toSet.intersect(truthFused.toSet).size
-          println(f"[scratch] hybrid100 nprobe=$nprobe " +
-            f"scan=${scanned.toDouble / nHy}%.4f vecRecall@50=$vecRecall%.2f " +
-            f"fusedTop20Overlap=$overlap/20")
-        }
-
-      case "hybrid1000" =>
-        // r14 directive #4: the composed RAG capstone one order past
-        // hybrid100 — documents x1000 (5M docs, v3 stop-preserving) joined
-        // to embeddings x1000 (2M vectors, xxhash-decorrelated v2 recipe;
-        // both shift ids by the same +k*10M, so doc_id==vec_id alignment
-        // survives and the corpus is the 2M docs carrying text AND
-        // embeddings, under a 5M-doc lexical scan). Same measurement as
-        // hybrid100: per-leg walls (the one-pass BM25 leg must stay
-        // ~linear: <= ~10x the 19.5s 100x leg), IVF recall of the exact
-        // vector top-50 at nlist=sqrt(n), and fusion survival (fused
-        // top-20 overlap vs the exact-leg hybrid).
-        val outHk = "/tmp/sfhybrid1000"
-        val HyRecipe1k = "hybrid1000-docsv3-embhardv2"
-        require(stagingReady("/tmp/sf1000docs", DocsRecipe),
-          "run staging1000docs first (v3 documents x1000)")
-        require(stagingReady("/tmp/sfhardemb1k", "emb-hard-v2-xxrot-xxsign-mod997-x1000"),
-          "run staginghardemb1k first (hard embeddings x1000)")
-        if (!stagingReady(outHk, HyRecipe1k)) {
-          rebuildDir(outHk)
-          org.apache.commons.io.FileUtils.copyDirectory(
-            new java.io.File("/tmp/sf1000docs/documents.parquet"),
-            new java.io.File(s"$outHk/documents.parquet"))
-          org.apache.commons.io.FileUtils.copyDirectory(
-            new java.io.File("/tmp/sfhardemb1k/embeddings.parquet"),
-            new java.io.File(s"$outHk/embeddings.parquet"))
-          markReady(outHk, HyRecipe1k)
-        }
-        import org.apache.spark.sql.expressions.Window
-        val embHk = Tables.embeddings(spark, outHk)
-          .select(col("vec_id").as("doc_id"), col("embedding"))
-        val corpusHk = time("join corpus (docs x1000 into emb x1000)") {
-          Tables.documents(spark, outHk).select("doc_id", "text")
-            .join(embHk, "doc_id").localCheckpoint(true)
-        }
-        val nHk = corpusHk.count()
-        println(s"[scratch] hybrid1000 corpus n=$nHk")
-        val qvHk = graft.queries.Corpus.queryVector(spark, outHk)
-        def rrfMicroK(r: Option[Int]): Long =
-          r.map(x => math.floor(1000000.0 / (60.0 + x)).toLong).getOrElse(0L)
-        def fuseTop20K(lex: Seq[(Long, Int)], vec: Seq[(Long, Int)]): Seq[Long] = {
-          val lm = lex.toMap; val vm = vec.toMap
-          (lm.keySet ++ vm.keySet).toSeq
-            .map(id => (id, rrfMicroK(lm.get(id)) + rrfMicroK(vm.get(id))))
-            .sortBy { case (id, sc) => (-sc, id) }.take(20).map(_._1)
-        }
-        val lexHk: Seq[(Long, Int)] = time("BM25 leg (1000x tokenize scan, df-bound postings)") {
-          graft.text.Bm25.topK(corpusHk, "doc_id", "text",
-              Seq("sparkx0", "mergex0", "windowx0", "streamx0"), k = 50)
-            .withColumn("r_lex", row_number().over(
-              Window.orderBy(col("bm25").desc, col("doc_id"))).cast("int"))
-            .select("doc_id", "r_lex")
-            .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-        }
-        println(s"[scratch] lex leg: ${lexHk.length} docs")
-        val vecTruthHk: Seq[Long] = time("exact vector leg (truth)") {
-          graft.similarity.Ann.exactTopKReproducible(
-              corpusHk, "doc_id", "embedding", qvHk.map(_.toDouble), 50)
-            .select("doc_id").collect().map(_.getLong(0)).toSeq
-        }
-        val truthFusedK = fuseTop20K(lexHk,
-          vecTruthHk.zipWithIndex.map { case (id, i) => (id, i + 1) })
-        val nlistHk = math.max(16, math.sqrt(nHk.toDouble).round.toInt)
-        val idxHk = time(s"IVF fit nlist=$nlistHk (sampled Lloyd)") {
-          graft.similarity.Ivf.fit(
-            corpusHk.select("doc_id", "embedding"), "embedding",
-            nlist = nlistHk, maxSample = 16384)
-        }
-        val assignedHk = time("assign corpus") {
-          val a = graft.similarity.Ivf.assign(
-            corpusHk.select("doc_id", "embedding"), "embedding", idxHk)
-            .localCheckpoint(true)
-          a.count(); a
-        }
-        val cellsHk = assignedHk.groupBy("cell").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val truthSetHk = vecTruthHk.toSet
-        for (nprobe <- Seq(1, 4, 8, 16, 32, 64, 128)) {
-          val probed = graft.similarity.Ivf.probeCells(idxHk, qvHk, nprobe)
-          val scanned = probed.map(c => cellsHk.getOrElse(c, 0L)).sum
-          val got: Seq[Long] = time(s"IVF leg nprobe=$nprobe") {
-            assignedHk.filter(col("cell").isin(probed: _*))
-              .select(col("doc_id"),
-                graft.similarity.Ann.cosineCol(spark, col("embedding"), qvHk).as("cosine"))
-              .orderBy(col("cosine").desc, col("doc_id")).limit(50)
-              .collect().map(_.getLong(0)).toSeq
-          }
-          val vecRecall = got.toSet.intersect(truthSetHk).size / 50.0
-          val fused = fuseTop20K(lexHk,
-            got.zipWithIndex.map { case (id, i) => (id, i + 1) })
-          val overlap = fused.toSet.intersect(truthFusedK.toSet).size
-          println(f"[scratch] hybrid1000 nprobe=$nprobe " +
-            f"scan=${scanned.toDouble / nHk}%.4f vecRecall@50=$vecRecall%.2f " +
-            f"fusedTop20Overlap=$overlap/20")
-        }
-
-      case "ann100" | "ann1000" =>
-        // Runs the embedding/ANN tier against d (sf0.1 or a staging dir)
-        // with 2-pass min timings AND the planted-clone recall contracts
-        // re-asserted — scale evidence is only evidence if the contracts
-        // stay green at that scale. ann1000 drops q_dd4 (its OUTPUT is
-        // ~1e9 genuine pairs at 1000x — every jittered copy family is
-        // mutually near-dup by construction, measured 6.5M pairs at 100x —
-        // so the wall would time output mass, not the operator).
-        def benchA(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        val cloneRange = (0 until 25).map(1000000L + _).toSet + 0L
-        // clone-injected paths (ann2/3/5/8/9, e16): every returned id must
-        // be the query vector or a planted exact clone — jittered staging
-        // copies may never outrank a cosine-1.0 match
-        def topkContract(q: String): Unit = {
-          val ids = graft.queries.Corpus.all(q)(spark, d)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
-          assert(ids.nonEmpty && ids.subsetOf(cloneRange),
-            s"$q recall broke at scale: got ${ids.toSeq.sorted.take(25)}")
-          println(s"[scratch] $q recall contract OK (${ids.size} ids, all planted)")
-        }
-        // natural-corpus paths (ann1/ann7 rank the corpus itself, no
-        // clones): the query vector must come back rank 1 at cosine 1
-        def selfTopContract(q: String): Unit = {
-          val ids = graft.queries.Corpus.all(q)(spark, d)
-            .select("vec_id").collect().map(_.getLong(0))
-          assert(ids.length == 20 && ids.head == 0L,
-            s"$q self-match broke at scale: got ${ids.take(5).toSeq}")
-          println(s"[scratch] $q self-top contract OK")
-        }
-        for (q <- Seq("q_ann1_cosine_topk", "q_ann7_int8_topk")) {
-          benchA(q)(graft.queries.Corpus.all(q)(spark, d))
-          selfTopContract(q)
-        }
-        for (q <- Seq("q_ann2_lsh_topk", "q_ann3_ivf_topk",
-            "q_ann5_pq_topk", "q_ann8_ivfpq_topk",
-            "q_ann9_ivf_incremental", "q_e16_stream_ivf")) {
-          benchA(q)(graft.queries.Corpus.all(q)(spark, d))
-          topkContract(q)
-        }
-        for (q <- Seq("q_ann4_centroids", "q_ann6_hard_negatives",
-            "q_dd5_embed_pairs_top")) {
-          benchA(q)(graft.queries.Corpus.all(q)(spark, d))
-          println(s"[scratch] $q rows=${graft.queries.Corpus.all(q)(spark, d).count()}")
-        }
-        if (what == "ann100") {
-          benchA("q_dd4_embed_neardup")(
-            graft.queries.Corpus.all("q_dd4_embed_neardup")(spark, d))
-          val pairs = graft.queries.Corpus.all("q_dd4_embed_neardup")(spark, d)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          val missing = (0L until 50L).filterNot(i => pairs.contains((i, i + 1000000L)))
-          assert(missing.isEmpty, s"dd4 planted pairs missing: $missing")
-          println(s"[scratch] q_dd4 planted-pair recall OK (${pairs.size} pairs)")
-        }
-        for (q <- Seq("q_dd10_semantic_dedup", "q_dd10b_semantic_kmeans")) {
-          benchA(q)(graft.queries.Corpus.all(q)(spark, d))
-          // exact planted ids only (1000000..1000039) — staged copy ids
-          // live at >= 10M and must not inflate the recall count
-          val dropped = graft.queries.Corpus.all(q)(spark, d)
-            .filter(col("status") === "dropped" &&
-              col("vec_id") >= 1000000L && col("vec_id") < 1000040L)
-            .count()
-          assert(dropped == 40L,
-            s"$q planted clones must ALL drop at scale: dropped=$dropped/40")
-          println(s"[scratch] $q planted-clone drops OK ($dropped/40)")
-        }
-
-      case "annrecall" =>
-        // r12 directive #5: the ANN operating curves a user actually tunes
-        // with, at staging scale — recall@10 vs scan cost as a function of
-        // nprobe (IVF; the oracle-gated q_ann10 run here at d) and of m
-        // (PQ; ADC-only shortlist AND the rerank path), all against EXACT
-        // brute-force ground truth on the same bounded 10-query set.
-        time("IVF nprobe curve (q_ann10)") {
-          graft.queries.Corpus.all("q_ann10_recall_curve")(spark, d)
-            .collect().foreach(r => println(s"[scratch] ivf $r"))
-        }
-        val embR = Tables.embeddings(spark, d).select("vec_id", "embedding")
-        val queriesR: Array[(Long, Array[Float])] =
-          embR.filter(pmod(col("vec_id"), lit(50)) === 7).orderBy("vec_id").limit(10)
-            .collect()
-            .map(r => (r.getLong(0), r.getSeq[Number](1).map(_.floatValue()).toArray))
-        val truthR: Map[Long, Set[Long]] = queriesR.map { case (qid, qv) =>
-          qid -> graft.similarity.Ann.exactTopKReproducible(
-              embR, "vec_id", "embedding", qv.map(_.toDouble), 10)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
-        }.toMap
-        for (m <- Seq(4, 8, 16)) {
-          val cb = graft.similarity.Pq.fit(embR, "embedding", m = m, k = 16)
-          val enc = graft.similarity.Pq.encode(embR, "embedding", cb)
-            .select("vec_id", "embedding", "code").localCheckpoint(true)
-          var adcHits = 0
-          var rrHits = 0
-          time(s"pq m=$m (10 queries, adc + rerank)") {
-            queriesR.foreach { case (qid, qv) =>
-              val adc = enc.select(col("vec_id"),
-                  graft.similarity.Pq.adcCosineCol(cb, qv).as("a"))
-                .orderBy(col("a").desc, col("vec_id")).limit(10)
-                .collect().map(_.getLong(0)).toSet
-              adcHits += (adc intersect truthR(qid)).size
-              val rr = graft.similarity.Pq.topK(
-                  spark, embR, "vec_id", "embedding", cb, qv, 10)
-                .select("vec_id").collect().map(_.getLong(0)).toSet
-              rrHits += (rr intersect truthR(qid)).size
-            }
-          }
-          println(f"[scratch] pq m=$m codes/vec=$m (vs 64 floats) " +
-            f"adc_recall@10=${adcHits / 100.0}%.2f rerank_recall@10=${rrHits / 100.0}%.2f")
-        }
-
-      case "tier100" =>
-        // Round-11 directive: run the 100x documents tier MEMORY-
-        // CONSTRAINED and prove the plans SPILL instead of OOM — at
-        // 100 TB executors are always memory-pressured, and the repo had
-        // partition-invariance and scale evidence but no spill evidence.
-        // Drive with SPARK_DRIVER_MEM=8g (the local[32] JVM then holds
-        // roughly ONE production executor's heap while running 32-way
-        // parallel): completion + recorded spill bytes are the evidence.
-        println(s"[scratch] tier100 heap: max ${Runtime.getRuntime.maxMemory / (1L << 20)} MiB")
-        val spillMem = new java.util.concurrent.atomic.AtomicLong()
-        val spillDisk = new java.util.concurrent.atomic.AtomicLong()
-        val peakExec = new java.util.concurrent.atomic.AtomicLong()
-        val taskEvents = new java.util.concurrent.atomic.AtomicLong()
-        val lst = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            taskEvents.incrementAndGet()
-            if (te.taskMetrics != null) {
-              spillMem.addAndGet(te.taskMetrics.memoryBytesSpilled)
-              spillDisk.addAndGet(te.taskMetrics.diskBytesSpilled)
-              peakExec.updateAndGet(p => math.max(p, te.taskMetrics.peakExecutionMemory))
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(lst)
-        val tier = Seq(
-          "q_dd11_fuzzy_pipeline", "q_dd12_fuzzy_clusters", "q_dd13_lsh_recall",
-          "q_dd2b_minhash_recall", "q_dd1_jaccard_top", "q_dd6_dup_clusters",
-          "q_tp1_clean_corpus", "q_t21_quality_classifier", "q_t24_gopher_rules",
-          "q_tp9_span_dedup", "q_dd3_simhash_pairs",
-          "q_t3_langid", "q_t14_bpe_tokens", "q_t15_sequence_pack",
-          "q_t25_url_canonical", "q_p13_temperature_mix", "q_p16_epoch_repeat",
-          "q_d3_dedup_fingerprint", "q_s13_shard_manifest")
-        var failed = List.empty[String]
-        val walls = tier.map { q =>
-          val m0 = (spillMem.get, spillDisk.get)
-          val t0 = System.nanoTime()
-          try {
-            graft.queries.Corpus.all(q)(spark, d)
-              .write.format("noop").mode("overwrite").save()
-          } catch { case e: Throwable =>
-            failed ::= q
-            println(s"[scratch] $q FAILED: ${e.getMessage}")
-          }
-          val w = (System.nanoTime() - t0) / 1e9
-          drainTaskEvents(taskEvents) // straggler task-end events must land
-          println(f"[scratch] $q: $w%.1fs, spill mem ${(spillMem.get - m0._1) / 1e6}%.0f MB / disk ${(spillDisk.get - m0._2) / 1e6}%.0f MB")
-          q -> w
-        }
-        spark.sparkContext.removeSparkListener(lst)
-        println(f"[scratch] tier100 TOTAL ${walls.map(_._2).sum}%.1fs, failed=${failed.size}, " +
-          f"spill mem ${spillMem.get / 1e6}%.0f MB / disk ${spillDisk.get / 1e6}%.0f MB, " +
-          f"peak task exec mem ${peakExec.get / 1e6}%.0f MB")
-
-      case "tp1000" =>
-        // Round-11 directive: the composed capstones (q_tp1 clean chain —
-        // 9.4x at 100x/10x, slightly super-proportional, watch it — and
-        // q_tp16 publish) at the 1000x staging (5M docs).
-        def benchT(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          println(f"[scratch] $label: ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        for (q <- Seq("q_tp1_clean_corpus", "q_tp16_publish"))
-          benchT(s"$q @$d")(graft.queries.Corpus.all(q)(spark, d))
-
-      case "tp1diag" =>
-        // Stage-level breakdown of the q_tp1 clean chain at d: where do the
-        // seconds go at 100x/1000x — the quality+exact-dedup checkpoint, the
-        // shingle index build, the posting self-join, or the final
-        // anti-join+sort? Each stage forces the next materialization only,
-        // with per-stage spill deltas from the task metrics.
-        import graft.text.{TextFunctions => TF}
-        val spillM = new java.util.concurrent.atomic.AtomicLong()
-        val spillD = new java.util.concurrent.atomic.AtomicLong()
-        val eventsD = new java.util.concurrent.atomic.AtomicLong()
-        val lstD = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            eventsD.incrementAndGet()
-            if (te.taskMetrics != null) {
-              spillM.addAndGet(te.taskMetrics.memoryBytesSpilled)
-              spillD.addAndGet(te.taskMetrics.diskBytesSpilled)
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(lstD)
-        def stage[T](label: String)(f: => T): T = {
-          val m0 = (spillM.get, spillD.get)
-          val t0 = System.nanoTime()
-          val r = f
-          drainTaskEvents(eventsD)
-          println(f"[scratch] tp1diag $label: ${(System.nanoTime() - t0) / 1e9}%.1fs, " +
-            f"spill mem ${(spillM.get - m0._1) / 1e6}%.0f MB / disk ${(spillD.get - m0._2) / 1e6}%.0f MB")
-          r
-        }
-        val cfg = graft.pipeline.CorpusCleaner.Config()
-        val docsD = Tables.documents(spark, d)
-        val qualifiedD = docsD.select(
-          col("doc_id"), col("text"),
-          TF.qualityScore(col("text")).as("quality"))
-          .filter(col("quality") >= cfg.minQuality)
-        val keepersD = qualifiedD
-          .groupBy(TF.fingerprintMd5(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select("doc_id")
-        val exactD = stage("A quality+exact-dedup checkpoint")(
-          qualifiedD.join(keepersD, Seq("doc_id"), "left_semi").localCheckpoint(true))
-        val shingledD = stage("B shingle checkpoint")(
-          Dedup.withShingles(exactD, "text", cfg.shingleK)
-            .select(col("doc_id").as("doc"), col("shingles")).localCheckpoint(true))
-        val shD = shingledD.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hotD = shD.groupBy("shingle").count().filter(col("count") > cfg.maxShingleDf)
-          .select("shingle")
-        val prunedD = stage("C pruned-index checkpoint")(
-          shD.join(hotD, Seq("shingle"), "left_anti").localCheckpoint(true))
-        val countsD = prunedD.groupBy("doc").agg(count(lit(1)).as("n_shingles"))
-        val baseD = prunedD.select("doc", "shingle")
-        val interD = baseD.toDF("id1", "shingle")
-          .join(baseD.toDF("id2", "shingle_r"),
-            col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-          .groupBy("id1", "id2").agg(count(lit(1)).as("n_common"))
-        val nInter = stage("D posting self-join + pair agg")(interD.count())
-        println(s"[scratch] tp1diag candidate pairs: $nInter")
-        val pairsD = interD
-          .join(countsD.toDF("id1", "n1"), "id1")
-          .join(countsD.toDF("id2", "n2"), "id2")
-          .withColumn("jaccard",
-            col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")).cast("double"))
-          .filter(col("jaccard") >= cfg.jaccardThreshold)
-        val removedD = pairsD.select(col("id2").as("doc_id")).distinct()
-        stage("E anti-join + sort + noop")(
-          exactD.join(removedD, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("quality")).orderBy("doc_id")
-            .write.format("noop").mode("overwrite").save())
-        spark.sparkContext.removeSparkListener(lstD)
-
-      case "pairx" =>
-        // A/B the posting-pair generation strategies feeding jaccardPairs'
-        // n_common aggregate: v0 = the production SMJ self-join (shuffles
-        // the pruned posting mass twice and sorts both sides), v1 = one
-        // groupBy(shingle).collect_list + in-list combination expansion
-        // (shuffles the posting mass once; expansion emits the identical
-        // pair multiset because shingles are DISTINCT per doc).
-        val docsX = Tables.documents(spark, d)
-        val shingledX = Dedup.withShingles(docsX, "text", 3)
-          .select(col("doc_id").as("doc"), col("shingles")).localCheckpoint(true)
-        val shX = shingledX.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hotX = shX.groupBy("shingle").count().filter(col("count") > 1000)
-          .select("shingle")
-        val prunedX = time("prune checkpoint")(
-          shX.join(hotX, Seq("shingle"), "left_anti").localCheckpoint(true))
-        val baseX = prunedX.select("doc", "shingle")
-        def v0() = baseX.toDF("id1", "shingle")
-          .join(baseX.toDF("id2", "shingle_r"),
-            col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-          .groupBy("id1", "id2").agg(count(lit(1)).as("nc"))
-        def v1() = {
-          val posting = prunedX.groupBy("shingle")
-            .agg(collect_list(col("doc")).as("ds"))
-          val pairsCol = flatten(transform(col("ds"), (x, i) =>
-            transform(slice(col("ds"), i + lit(2),
-              greatest(size(col("ds")) - i - 1, lit(0))),
-              y => struct(least(x, y).as("a"), greatest(x, y).as("b")))))
-          posting.select(explode(pairsCol).as("p"))
-            .select(col("p.a").as("id1"), col("p.b").as("id2"))
-            .groupBy("id1", "id2").agg(count(lit(1)).as("nc"))
-        }
-        for (r <- 1 to 2) {
-          val n0 = time(s"v0 self-join pass $r")(v0().count())
-          val n1 = time(s"v1 collect+expand pass $r")(v1().count())
-          println(s"[scratch] pairx v0=$n0 v1=$n1 ${if (n0 == n1) "MATCH" else "MISMATCH"}")
-        }
-
-      case "pairx2" =>
-        // A/B the SCORING side of jaccardPairs: w0 = production shape
-        // (pair agg, then two equi-joins against the per-doc counts — two
-        // more full shuffles of the pair table unless AQE broadcasts the
-        // counts, which stops being possible once counts outgrow the
-        // broadcast budget), w1 = widened self-join (n_shingles attached to
-        // every posting row by one doc-keyed join BEFORE the pair
-        // expansion, so the pair aggregate carries n1/n2 and no post-agg
-        // join exists at any scale).
-        val docsY = Tables.documents(spark, d)
-        val shingledY = Dedup.withShingles(docsY, "text", 3)
-          .select(col("doc_id").as("doc"), col("shingles")).localCheckpoint(true)
-        val shY = shingledY.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hotY = shY.groupBy("shingle").count().filter(col("count") > 1000)
-          .select("shingle")
-        val prunedY = time("prune checkpoint")(
-          shY.join(hotY, Seq("shingle"), "left_anti").localCheckpoint(true))
-        val countsY = prunedY.groupBy("doc").agg(count(lit(1)).as("n_shingles"))
-        def score(df: org.apache.spark.sql.DataFrame) = df.withColumn("jaccard",
-          col("n_common").cast("double") / (col("n1") + col("n2") - col("n_common")).cast("double"))
-        def w0() = {
-          val baseY = prunedY.select("doc", "shingle")
-          val inter = baseY.toDF("id1", "shingle")
-            .join(baseY.toDF("id2", "shingle_r"),
-              col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-            .groupBy("id1", "id2").agg(count(lit(1)).as("n_common"))
-          score(inter
-            .join(countsY.toDF("id1", "n1"), "id1")
-            .join(countsY.toDF("id2", "n2"), "id2"))
-        }
-        def w1() = {
-          val baseY = prunedY.join(countsY, "doc")
-            .select(col("doc"), col("shingle"), col("n_shingles"))
-          val inter = baseY.toDF("id1", "shingle", "n1")
-            .join(baseY.toDF("id2", "shingle_r", "n2"),
-              col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-            .groupBy("id1", "id2")
-            .agg(count(lit(1)).as("n_common"), max("n1").as("n1"), max("n2").as("n2"))
-          score(inter)
-        }
-        def force(df: org.apache.spark.sql.DataFrame) = df
-          .filter(col("jaccard") >= 0.1)
-          .agg(count(lit(1)).as("n"), sum(col("n_common")).as("s")).collect()(0)
-        for (r <- 1 to 2) {
-          val a = time(s"w0 post-agg joins pass $r")(force(w0()))
-          val b = time(s"w1 widened self-join pass $r")(force(w1()))
-          println(s"[scratch] pairx2 w0=$a w1=$b ${if (a == b) "MATCH" else "MISMATCH"}")
-        }
-
-      case "sig" =>
-        // Layout-invariance signatures at staging scale: count + order-
-        // independent checksum (sum of xxhash64 over the name-sorted
-        // JSON row) for representative tier outputs. Run under two
-        // layouts (default local[32] vs SPARK_GRAFT_CPUS=5) and diff the
-        // printed lines — the sf0.01 oracle gate proves layout-invariance
-        // at gate scale, this proves it at 100x/1000x where no oracle
-        // runs. Queries chosen for fully deterministic output sets.
-        val sigQs = if (args.length > 2) args.drop(2).toSeq else Seq(
-          "q_dd1_jaccard_top", "q_dd11_fuzzy_pipeline", "q_dd12_fuzzy_clusters",
-          "q_tp1_clean_corpus", "q_d3_dedup_fingerprint", "q_t21_quality_classifier",
-          "q_tp9_span_dedup", "q_s13_shard_manifest")
-        for (q <- sigQs) {
-          val df = graft.queries.Corpus.all(q)(spark, d)
-          // coalesce: an empty output (legitimate at stagings whose token
-          // suffixes defeat stopword/language gates, e.g. q_tp16 at 10x)
-          // must sign as n=0 sig=0, not NULL-crash the harness
-          val row = df.select(
-              xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))).as("h"))
-            .agg(count(lit(1)).as("n"), coalesce(sum(col("h")), lit(0L)).as("sig"))
-            .collect()(0)
-          println(s"[scratch] sig $q n=${row.getLong(0)} sig=${row.getLong(1)}")
-        }
-
-      case "show" =>
-        // print any query's collected rows (bounded use: small outputs only)
-        args.drop(2).foreach { q =>
-          graft.queries.Corpus.all(q)(spark, d).collect()
-            .foreach(r => println(s"[scratch] $q row: $r"))
-        }
-
-      case "tpshow" =>
-        // Survivor-mass evidence for the publish capstones (VERDICT r13
-        // #1): the r13 token-suffix staging zeroed every survivor set, so
-        // walls above sf0.1 timed empty pipelines. Prints the tp15 gate
-        // breakdown and the full tp16 shard manifest at d.
-        val gate = graft.queries.Corpus.all("q_tp15_ensemble_gate")(spark, d)
-        gate.agg(count(lit(1)).as("docs"),
-            sum(col("pass_classifier").cast("long")).as("cls"),
-            sum(col("pass_gopher").cast("long")).as("gopher"),
-            sum(col("pass_repetition").cast("long")).as("rep"),
-            sum(col("keep").cast("long")).as("keep"))
-          .collect().foreach(r => println(s"[scratch] tp15 gate: $r"))
-        graft.queries.Corpus.all("q_tp16_publish")(spark, d)
-          .collect().foreach(r => println(s"[scratch] tp16 shard: $r"))
-
-      case "dd3count" =>
-        // pair-set count + order-independent checksum of q_dd3 at d — used
-        // to assert the band-bucket cap changes nothing where it never binds
-        val (p, tel) = time("dd3 plan build (incl. eager probe+checkpoint)") {
-          Dedup.simhashNearDupsWithTelemetry(spark, Tables.documents(spark, d), "doc_id", "text",
-            maxHamming = sys.env.get("GRAFT_DD3_RADIUS").map(_.toInt).getOrElse(7),
-            maxBandBucket = sys.env.get("GRAFT_DD3_CAP").map(_.toInt).getOrElse(1000))
-        }
-        println(s"[scratch] dd3 telemetry: $tel")
-        val r = time("dd3 execute")(p.agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("id1"), col("id2"), col("hamming"))).as("chk")).head())
-        println(s"[scratch] dd3 pairs=${r.getLong(0)} checksum=${r.getLong(1)}")
-        val r2 = time("dd3 execute pass 2 (warm)")(p.agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("id1"), col("id2"), col("hamming"))).as("chk")).head())
-        println(s"[scratch] dd3 pass2 pairs=${r2.getLong(0)}")
-        p.groupBy("hamming").count().orderBy("hamming").collect()
-          .foreach(r => println(s"[scratch] hamming=${r.get(0)} n=${r.getLong(1)}"))
-
-      case "dd3buckets" =>
-        // SimHash band-bucket skew diagnosis: per-(block, value) population
-        // over DISTINCT sketches — the candidate mass of the q_dd3 band
-        // join is Σ bucket² per block.
-        val sk = Dedup.withSimhash(spark, Tables.documents(spark, d), "text")
-          .select("simhash").distinct().localCheckpoint(true)
-        println(s"[scratch] distinct sketches: ${sk.count()}")
-        val starts = (0 to 4).map(i => i * 64 / 4)
-        val blockCols = (0 until 4).map { i =>
-          val width = starts(i + 1) - starts(i)
-          val mask = if (width >= 64) -1L else (1L << width) - 1L
-          call_function("shiftrightunsigned", col("simhash"), lit(starts(i)))
-            .bitwiseAND(lit(mask)).as(s"b$i")
-        }
-        val blocks = sk.select(blockCols: _*)
-          .select(posexplode(array((0 until 4).map(i => col(s"b$i")): _*)))
-          .toDF("block", "value")
-        val hist = blocks.groupBy("block", "value").count()
-          .agg(max("count").as("max_bucket"),
-            sum(col("count") * col("count")).as("sum_sq"),
-            count(lit(1)).as("n_buckets"))
-          .head()
-        println(s"[scratch] max bucket=${hist.getLong(0)} sum(sq)=${hist.getLong(1)} buckets=${hist.getLong(2)}")
-
-      case "scale9" =>
-        // Round-9 scale spot-check: graph tier round-count telemetry, the
-        // streaming frontier, and the three new r9 queries at 10x.
-        val dir9 = ensureStaging10(d)
-        def bench9(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        for (q <- Seq("q_g1_pagerank", "q_g1b_pagerank_redist",
-            "q_g3_rank_convergence", "q_e14_stream_urls",
-            "q_dd11_fuzzy_pipeline", "q_t25b_salted_urls")) {
-          bench9(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench9(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir9))
-        }
-        // g3 telemetry at both scales: the L1 series is the round-budget
-        // evidence — print it so the PERF row can carry round counts.
-        for (dd <- Seq(("sf0.1", d), ("10x", dir9))) {
-          val ds = graft.queries.Corpus.all("q_g3_rank_convergence")(spark, dd._2)
-            .collect().map(r => (r.getInt(0), r.getLong(1)))
-          println(s"[scratch] g3 ${dd._1} L1 deltas: ${ds.mkString(", ")}")
-        }
-      case "dd11x" =>
-        // isolated re-measure (scale9's first capture overlapped a
-        // concurrent build JVM)
-        val dirX = ensureStaging10(d)
-        def benchX(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        benchX("q_dd11_fuzzy_pipeline sf0.1")(
-          graft.queries.Corpus.all("q_dd11_fuzzy_pipeline")(spark, d))
-        benchX("q_dd11_fuzzy_pipeline 10x")(
-          graft.queries.Corpus.all("q_dd11_fuzzy_pipeline")(spark, dirX))
-        benchX("q_g4_hits sf0.1")(
-          graft.queries.Corpus.all("q_g4_hits")(spark, d))
-        benchX("q_g4_hits 10x")(
-          graft.queries.Corpus.all("q_g4_hits")(spark, dirX))
-        benchX("q_dd12_fuzzy_clusters sf0.1")(
-          graft.queries.Corpus.all("q_dd12_fuzzy_clusters")(spark, d))
-        benchX("q_dd12_fuzzy_clusters 10x")(
-          graft.queries.Corpus.all("q_dd12_fuzzy_clusters")(spark, dirX))
-        benchX("q_p17_importance_resample sf0.1")(
-          graft.queries.Corpus.all("q_p17_importance_resample")(spark, d))
-        benchX("q_p17_importance_resample 10x")(
-          graft.queries.Corpus.all("q_p17_importance_resample")(spark, dirX))
-        for (q <- Seq("q_t29_nfc_normalize", "q_t30_code_detect",
-            "q_t31_chunk_overlap", "q_t32_zipf_fit")) {
-          benchX(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          benchX(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dirX))
-        }
-
-      case "t25skew" =>
-        // URL-layer hot-key evidence (the q_t23b experiment for t25b): a
-        // crawl-loop-shaped frame where 80% of raw URLs canonicalize to
-        // ONE url; the windowed form funnels them through one partition,
-        // the salted two-phase must stay flat and agree exactly.
-        locally {
-          import org.apache.spark.sql.expressions.Window
-          val n = 20000000L
-          val hotRaw = spark.range(n).select(
-            col("id").as("doc_id"),
-            when(col("id") % 5 < 4,
-              concat(lit("https://Loop.Example.com:443/cal//page/?utm_source=x&p="),
-                (col("id") % 7).cast("string"), lit("#frag")))
-              .otherwise(concat(lit("https://ok.example.com/doc/"),
-                col("id").cast("string"))).as("url_raw"))
-            .localCheckpoint(true)
-          def canon = graft.text.TextFunctions.canonicalUrl(col("url_raw"))
-          def timeIt(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            println(f"[scratch] $label: ${(System.nanoTime() - t0) / 1e9}%.1fs")
-          }
-          val w = Window.partitionBy("url_canon")
-          // doubles as the JIT/codegen warmup: the FIRST 20M-row regexp
-          // pass in a JVM runs ~3x slower than warm (measured 41s vs 13s)
-          timeIt("canon-only pass (warmup + cost attribution)") {
-            hotRaw.withColumn("url_canon", canon).select(length(col("url_canon")).as("x"))
-          }
-          timeIt("canon-only pass (warm)") {
-            hotRaw.withColumn("url_canon", canon).select(length(col("url_canon")).as("x"))
-          }
-          timeIt("t25 window, 80% hot canonical key") {
-            hotRaw.withColumn("url_canon", canon)
-              .withColumn("keep", col("doc_id") === min("doc_id").over(w))
-              .withColumn("group_size", count(lit(1)).over(w))
-          }
-          timeIt("t25b aggregate+join (AQE skew-split), same input") {
-            graft.queries.Corpus.skewSplitUrlDedup(
-              hotRaw.withColumn("url_canon", canon))
-          }
-          // show AQE actually split the hot partition: re-run and print
-          // the final adaptive plan's skew markers + shuffle volume
-          locally {
-            val sc = spark.sparkContext
-            var shuffleWrite = 0L
-            val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-            val lst = new org.apache.spark.scheduler.SparkListener {
-              override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-                if (te.taskMetrics != null) {
-                  shuffleWrite += te.taskMetrics.shuffleWriteMetrics.bytesWritten
-                  val rb = te.taskMetrics.shuffleReadMetrics.totalBytesRead
-                  if (rb > 0) reads.add((te.stageId, rb))
-                }
-            }
-            sc.addSparkListener(lst)
-            val df = graft.queries.Corpus.skewSplitUrlDedup(
-              hotRaw.withColumn("url_canon", canon))
-            // drive the AdaptiveSparkPlanExec itself: Dataset actions
-            // (.write, .foreach) each build their OWN QueryExecution, so
-            // the df's plan would stay isFinalPlan=false forever
-            val aqe = df.queryExecution.executedPlan
-            aqe.execute().foreach(_ => ())
-            Thread.sleep(500)
-            sc.removeSparkListener(lst)
-            val plan = aqe.toString
-            val skewMarks = "skew=true".r.findAllIn(plan).length
-            println(f"[scratch] t25b final plan skew=true markers: $skewMarks, " +
-              f"total shuffle write ${shuffleWrite / 1e6}%.0f MB")
-            println("[scratch] t25b join line: " +
-              plan.linesIterator.filter(_.contains("Join")).mkString(" | "))
-            import scala.jdk.CollectionConverters._
-            val topReads = reads.asScala.toSeq.sortBy(-_._2).take(6)
-              .map { case (st, b) => f"stage$st:${b / 1e6}%.0fMB" }.mkString(", ")
-            println(s"[scratch] top shuffle-read tasks: $topReads")
-            println("[scratch] FULL FINAL PLAN:\n" + plan)
-            println("[scratch] skew conf: thr=" +
-              spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes") +
-              " factor=" + spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor") +
-              " enabled=" + spark.conf.get("spark.sql.adaptive.skewJoin.enabled") +
-              " advisory=" + spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-          }
-        }
-
-      case "g4" =>
-        // q_g4 phase attribution
-        val he = time("edges materialize") {
-          val e = graft.queries.Corpus.hostGraphEdges(spark, d).localCheckpoint(true)
-          e.count(); e
-        }
-        for (r <- Seq(1, 2)) {
-          time(s"hits rounds=$r") {
-            graft.operators.Graph.hits(he, "src", "dst", "w", rounds = r).count()
-          }
-        }
-        time("pagerank rounds=3 (comparison)") {
-          graft.operators.Graph.pageRank(he, "src", "dst", "w", rounds = 3).count()
-        }
-
-      case "scale8b" =>
-        // Round-8 second-wave spot-check: the new document-grain tier at
-        // 10x sf0.1 (same copy-suffixed staging as scale10 — dup/span
-        // structure per copy matches sf0.1, vocabulary and doc count 10x).
-        val dir10 = ensureStaging10(d)
-        def bench2(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        for (q <- Seq("q_tp9_span_dedup", "q_p14_perplexity_mix",
-            "q_ml6_threshold_sweep", "q_p15_group_split", "q_t21_quality_classifier")) {
-          bench2(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench2(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10))
-        }
-
-      case "scale8c" =>
-        // Round-8 third-wave spot-check: crawl-front tier at 10x sf0.1.
-        val dir10 = ensureStaging10(d)
-        def bench3(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        for (q <- Seq("q_t24_gopher_rules", "q_t25_url_canonical",
-            "q_g1_pagerank", "q_s13_shard_manifest", "q_tp12_crawl_pipeline",
-            "q_tp13_decontam_scrub", "q_tp14_line_dedup")) {
-          bench3(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench3(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10))
-        }
-
-      case "scale8d" =>
-        // Round-8 fourth/fifth-wave spot-check at 10x sf0.1.
-        val dir10 = ensureStaging10(d)
-        def bench4(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[scratch] $label: min ${times.min}%.1fs (passes ${times.map(t => f"$t%.1f").mkString("/")})")
-        }
-        for (q <- Seq("q_mm7_image_dedup", "q_mm8_audio_dedup",
-            "q_t26_filter_funnel", "q_p16_epoch_repeat", "q_tp15_ensemble_gate",
-            "q_tp16_publish", "q_t27_bpe_token_ids", "q_t23b_salted_cap",
-            "q_s14_incr_manifest")) {
-          bench4(s"$q sf0.1")(graft.queries.Corpus.all(q)(spark, d))
-          bench4(s"$q 10x")(graft.queries.Corpus.all(q)(spark, dir10))
-        }
-
-      case "ml1" =>
-        // attribute q_ml1_forecast_kpi cost stage by stage
-        import graft.ml.ForecastModels
-        import graft.forecast.Forecast
-        val dl = time("daily materialize") {
-          val df = Forecast.dailySales(Tables.salesLines(spark, d)).cache()
-          df.count()
-          df
-        }
-        val features = time("lag features persist+count") {
-          val f = Forecast.lagFeatures(dl, 1 to 3)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          f.count(); f
-        }
-        val (train, test) = ForecastModels.timeSplit(features, "1999-09-01")
-        val featureCols = ForecastModels.numericFeatureCols(features)
-        val fp = time("feature pipeline fit (2 indexers)") {
-          ForecastModels.featurePipeline(featureCols).fit(train)
-        }
-        val assembled = time("assemble train persist+count") {
-          val a = fp.transform(train)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          a.count(); a
-        }
-        val model = time("lasso fit (OWL-QN, 20 iters)") {
-          ForecastModels.lasso(0.05).fit(assembled)
-        }
-        val pred = time("transform test persist+count") {
-          val p = model.transform(fp.transform(test))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          p.count(); p
-        }
-        time("evaluate 3 metrics")(ForecastModels.evaluate("lr", pred))
-        time("kpi by country") {
-          Forecast.kpiByCountry(Forecast.evalAgainstBaseline(dl, pred))
-            .write.format("noop").mode("overwrite").save()
-        }
-
-      case "ml1b" =>
-        // candidate fast path for q_ml1
-        import graft.ml.ForecastModels
-        import graft.forecast.Forecast
-        import org.apache.spark.ml.Pipeline
-        import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
-        val dl = time("daily materialize") {
-          val df = Forecast.dailySales(Tables.salesLines(spark, d)).cache()
-          df.count()
-          df
-        }
-        val features = Forecast.lagFeatures(dl, 1 to 3)
-        val (train, test) = ForecastModels.timeSplit(features, "1999-09-01")
-        val featureCols = ForecastModels.numericFeatureCols(features)
-        val fp = time("multi-col indexer fit on daily") {
-          val (trainD, _) = ForecastModels.timeSplit(dl, "1999-09-01")
-          val idx = new StringIndexer()
-            .setInputCols(Array("Country", "StockCode"))
-            .setOutputCols(Array("CountryIndex", "StockCodeIndex"))
-            .setHandleInvalid("keep").setStringOrderType("frequencyDesc")
-            .fit(trainD)
-          val assembler = new VectorAssembler()
-            .setInputCols((featureCols ++ Seq("CountryIndex", "StockCodeIndex")).toArray)
-            .setOutputCol("features")
-            .setHandleInvalid("skip")
-          new Pipeline().setStages(Array(idx, assembler)).fit(train)
-        }
-        val model = time("lasso fit (internal persistence)") {
-          ForecastModels.lasso(0.05).fit(fp.transform(train))
-        }
-        val pred = time("transform test persist+count") {
-          val p = model.transform(fp.transform(test))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          p.count(); p
-        }
-        time("kpi by country") {
-          Forecast.kpiByCountry(Forecast.evalAgainstBaseline(dl, pred))
-            .write.format("noop").mode("overwrite").save()
-        }
-        time("kpi by country (2nd)") {
-          Forecast.kpiByCountry(Forecast.evalAgainstBaseline(dl, pred))
-            .write.format("noop").mode("overwrite").save()
-        }
-
-      case "w4b" =>
-        val daily = time("daily materialize") {
-          val df = graft.forecast.Forecast.dailySales(Tables.salesLines(spark, d)).cache()
-          df.count()
-          df
-        }
-        time("groupBy count only") {
-          daily.groupBy("Country").agg(count(lit(1)).as("n"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        time("percentile exact") {
-          daily.groupBy("Country")
-            .agg(percentile(col("NetDailyQuantity"), lit(0.5)).as("m"), count(lit(1)).as("n"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        time("percentile_approx acc=100") {
-          daily.groupBy("Country")
-            .agg(percentile_approx(col("NetDailyQuantity"), lit(0.5), lit(100)).as("m"),
-              count(lit(1)).as("n"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        time("percentile_approx acc=10000") {
-          daily.groupBy("Country")
-            .agg(percentile_approx(col("NetDailyQuantity"), lit(0.5), lit(10000)).as("m"),
-              count(lit(1)).as("n"))
-            .write.format("noop").mode("overwrite").save()
-        }
+      case other =>
+        println(s"[scratch] unknown mode $other (explain | explainexec | stageprof)")
     }
     spark.stop()
   }
