@@ -66,10 +66,15 @@ object Forecast {
     * quantity and price lags over the plain series order, the 6-day cycle
     * (offset 6i), and the same-weekday series. Nulls (insufficient history)
     * are coalesced to 0 as in the reference. All columns in ONE select. */
-  def lagFeatures(daily: DataFrame, lags: Seq[Int] = 1 to 6): DataFrame = {
+  def lagFeatures(daily: DataFrame, lags: Seq[Int] = 1 to 6): DataFrame =
+    daily.select(daily.columns.map(col).toSeq ++ lagCols(lags): _*)
+
+  /** The [[lagFeatures]] columns, for a select that adds other window
+    * columns over the same two partitionings. */
+  def lagCols(lags: Seq[Int] = 1 to 6): Seq[Column] = {
     val qty = col("NetDailyQuantity")
     val price = col("AvgUnitPrice")
-    val lagCols = lags.flatMap { i =>
+    lags.flatMap { i =>
       Seq(
         coalesce(lag(qty, i).over(seriesW), lit(0L)).as(s"lag_qty_${i}_day"),
         coalesce(lag(price, i).over(seriesW), lit(0.0)).as(s"lag_price_${i}_day"),
@@ -78,7 +83,6 @@ object Forecast {
         coalesce(lag(qty, i).over(dowW), lit(0L)).as(s"lag_qty_${i}_dow"),
         coalesce(lag(price, i).over(dowW), lit(0.0)).as(s"lag_price_${i}_dow"))
     }
-    daily.select(daily.columns.map(col).toSeq ++ lagCols: _*)
   }
 
   /** Rolling mean/std/median over the trailing frame [-n, -1] (current row
@@ -105,12 +109,15 @@ object Forecast {
   def rollingFeatures(
       daily: DataFrame,
       dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame = {
-    val cols = daily.columns.map(col).toSeq ++
-      dayFrames.flatMap(n => rollStats(seriesW, n, s"${n}d")) ++
+      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame =
+    daily.select(daily.columns.map(col).toSeq ++ rollCols(dayFrames, dowFrames): _*)
+
+  /** The [[rollingFeatures]] columns. */
+  def rollCols(
+      dayFrames: Seq[Int] = Seq(3, 6, 12),
+      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
+    dayFrames.flatMap(n => rollStats(seriesW, n, s"${n}d")) ++
       dowFrames.flatMap(n => rollStats(dowW, n, s"${n}_dow"))
-    daily.select(cols: _*)
-  }
 
   /** Diff-vs-rolling features (W5, Sales_forecast_pyspark.py:948-966):
     * current value minus the rolling mean/median, for the series frames and
@@ -160,10 +167,14 @@ object Forecast {
     * (lag_quantity_N and lag_price_N over day/6daycycle/dow families,
     * Sales_forecast_pyspark.py:611-647). All 36 columns in one select —
     * still exactly two window partitionings. */
-  def lagFeaturesCompat(daily: DataFrame): DataFrame = {
+  def lagFeaturesCompat(daily: DataFrame): DataFrame =
+    daily.select(daily.columns.map(col).toSeq ++ lagColsCompat: _*)
+
+  /** The [[lagFeaturesCompat]] columns. */
+  def lagColsCompat: Seq[Column] = {
     val qty = col("NetDailyQuantity")
     val price = col("AvgUnitPrice")
-    val lagCols = (1 to 6).flatMap { i =>
+    (1 to 6).flatMap { i =>
       Seq(
         round(coalesce(lag(qty, i).over(seriesW), lit(0)), 0).as(s"lag_quantity_${i}_day"),
         round(coalesce(lag(price, i).over(seriesW), lit(0)), 0).as(s"lag_price_${i}_day"),
@@ -172,7 +183,6 @@ object Forecast {
         round(coalesce(lag(qty, i).over(dowW), lit(0)), 0).as(s"lag_quantity_${i}_dow"),
         round(coalesce(lag(price, i).over(dowW), lit(0)), 0).as(s"lag_price_${i}_dow"))
     }
-    daily.select(daily.columns.map(col).toSeq ++ lagCols: _*)
   }
 
   /** The reference's literal rolling stats: avg / stddev_samp /
@@ -190,24 +200,37 @@ object Forecast {
   def rollingFeaturesCompat(
       daily: DataFrame,
       dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame = {
-    val cols = daily.columns.map(col).toSeq ++
-      dayFrames.flatMap(n => rollStatsCompat(seriesW, n, s"${n}d")) ++
+      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame =
+    daily.select(daily.columns.map(col).toSeq ++ rollColsCompat(dayFrames, dowFrames): _*)
+
+  /** The [[rollingFeaturesCompat]] columns. */
+  def rollColsCompat(
+      dayFrames: Seq[Int] = Seq(3, 6, 12),
+      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
+    dayFrames.flatMap(n => rollStatsCompat(seriesW, n, s"${n}d")) ++
       dowFrames.flatMap(n => rollStatsCompat(dowW, n, s"${n}_dow"))
-    daily.select(cols: _*)
-  }
 
   /** 6-day moving-average baseline with last-value fallback (W6,
     * Sales_forecast_pyspark.py:1270-1294) — the forecast every model is
     * judged against. */
-  def maBaseline(daily: DataFrame, window: Int = 6): DataFrame = {
+  def maBaseline(daily: DataFrame, window: Int = 6): DataFrame =
+    daily.withColumn("baseline_qty", maBaselineCol(window))
+
+  /** The [[maBaseline]] column: a series-window expression, so it can ride
+    * in the same select as the lag and rolling features. */
+  def maBaselineCol(window: Int = 6): Column = {
     val qty = col("NetDailyQuantity")
     val f = seriesW.rowsBetween(-window, -1)
     val ma = sum(qty).over(f).cast(DoubleType) / count(qty).over(f).cast(DoubleType)
-    daily.withColumn(
-      "baseline_qty",
-      coalesce(ma, lag(qty, 1).over(seriesW).cast(DoubleType)))
+    coalesce(ma, lag(qty, 1).over(seriesW).cast(DoubleType))
   }
+
+  /** [[maBaselineCol]] as the `baseline_qty` that [[evalAgainstBaseline]]'s
+    * left join on (Country, StockCode, InvoiceDate) attaches: a row with a
+    * null key matches no baseline row there, so it gets null here. */
+  def joinedBaselineCol(window: Int = 6): Column =
+    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), maBaselineCol(window))
+      .as("baseline_qty")
 
   /** The six error columns over a frame that already carries `prediction`,
     * `baseline_qty` and the actual (Sales_forecast_pyspark.py:1339-1345).
@@ -238,9 +261,14 @@ object Forecast {
   /** Evaluation join (J2 + error columns): model predictions ⟕ the MA
     * baseline on the composite (Country, StockCode, InvoiceDate) key, over
     * the full history (a test row's trailing baseline window legitimately
-    * reaches into train days, as in the reference). */
+    * reaches into train days, as in the reference).
+    *
+    * The reference pipeline no longer joins: its feature frame carries the
+    * same baseline as [[joinedBaselineCol]], computed in the feature window
+    * pass over the same full history, and its predictions keep it. This
+    * join is the specs' oracle for that column, and q_ml1 still uses it. */
   def evalAgainstBaseline(dailyAll: DataFrame, predictions: DataFrame): DataFrame = {
-    val keys = Seq("Country", "StockCode", "InvoiceDate")
+    val keys = SeriesKeys :+ "InvoiceDate"
     val base = maBaseline(dailyAll)
       .select((keys :+ "baseline_qty").map(col): _*)
     val pred = predictions.select(

@@ -1,6 +1,6 @@
 package graft.forecast
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,12 +14,18 @@ import graft.ml.ForecastModels.RegMetrics
   * feature pipeline + regressors → three-metric scorecards → KPI evaluation
   * against the 6-day MA baseline (global, per-country, value-weighted).
   *
-  * The daily grain is computed ONCE per call: it is cached, the cache
-  * barrier fills it together with the feature frame, and the split counts,
-  * the indexer fit and the KPI baseline all read it from the cache, so the
-  * sales input is scanned by exactly one Spark job. Every pin a call creates
-  * (daily grain, features, each model's predictions) is released before the
-  * `Report` is returned.
+  * The daily grain is computed ONCE per call and cached; the split-count
+  * aggregate fills it, so the sales input is scanned by exactly one Spark
+  * job. The indexers are fitted on the cached grain. The feature frame is
+  * one window pass per partitioning, and it carries the MA(6) baseline. It
+  * is never cached itself: one slim assembled pin (keys, label, price,
+  * baseline, feature vector) is filled over the full history, every model
+  * fits on its train rows and predicts its test rows, and the KPIs read the
+  * baseline from the predictions, without a join. On CSV input
+  * (`CsvSource.cleaned`) the lines are already partitioned by series key,
+  * so the dedup, the grain and the windows add no shuffle. Every pin a call
+  * creates (daily grain, assembled frame, each model's predictions) is
+  * released before the `Report` is returned.
   *
   * A user of the reference runs exactly this flow; `main` prints the same
   * scorecard shape the reference's README publishes.
@@ -35,25 +41,34 @@ object ReferencePipeline {
       valueWeightedReductionPct: Double)
 
   /** Feature frame: calendar + 36 lag cols + 18 rolling + 6 diff, rolling
-    * nulls filled with 0 (Sales_forecast_pyspark.py:968-982). */
-  def featureFrame(daily: DataFrame): DataFrame = {
-    val built = Forecast.diffFeatures(
-      Forecast.rollingFeatures(Forecast.lagFeatures(daily)))
-    val fillCols = built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
-    built.na.fill(0.0, fillCols)
-  }
+    * nulls filled with 0 (Sales_forecast_pyspark.py:968-982), plus the
+    * MA(6) `baseline_qty` the KPIs are judged against. */
+  def featureFrame(daily: DataFrame): DataFrame =
+    featureFrameOf(daily, Forecast.lagCols() ++ Forecast.rollCols(), Forecast.diffFeatures(_))
 
   /** The reference's LITERAL full-width frame: its 36 rounded lag columns,
     * avg/stddev_samp/percentile_approx rolling stats over both window
     * families, and diffs against both families (12 diff cols) — 71 numeric
     * features which, with the two category indexers, form exactly the
     * 73-column assembler set of feature_columns_v3
-    * (Sales_forecast_pyspark.py:611-647, 900-982, 1006-1061). */
-  def featureFrameCompat(daily: DataFrame): DataFrame = {
-    val built = Forecast.diffFeatures(
-      Forecast.rollingFeaturesCompat(Forecast.lagFeaturesCompat(daily)),
-      dayFrames = Seq(3, 6, 12),
-      dowFrames = Seq(3, 4, 5))
+    * (Sales_forecast_pyspark.py:611-647, 900-982, 1006-1061). Carries
+    * `baseline_qty` too. */
+  def featureFrameCompat(daily: DataFrame): DataFrame =
+    featureFrameOf(daily, Forecast.lagColsCompat ++ Forecast.rollColsCompat(),
+      Forecast.diffFeatures(_, dayFrames = Seq(3, 6, 12), dowFrames = Seq(3, 4, 5)))
+
+  /** Every lag and rolling column of both window families, and the MA(6)
+    * baseline, in ONE select: one Window and one sort per partitioning.
+    * The diffs and the null fill are projections over it. The columns equal
+    * the `diffFeatures(rollingFeatures(lagFeatures(daily)))` composition in
+    * name, order and value, with `baseline_qty` between the rolling and the
+    * diff columns. */
+  private def featureFrameOf(
+      daily: DataFrame,
+      windowCols: Seq[Column],
+      diffs: DataFrame => DataFrame): DataFrame = {
+    val built = diffs(daily.select(
+      daily.columns.map(col).toSeq ++ windowCols :+ Forecast.joinedBaselineCol(): _*))
     val fillCols = built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
     built.na.fill(0.0, fillCols)
   }
@@ -77,31 +92,31 @@ object ReferencePipeline {
       referenceCompat: Boolean = false): Report = {
     val daily = (if (referenceCompat) Forecast.dailySalesCompat(sales)
       else Forecast.dailySales(sales)).persist(StorageLevel.MEMORY_AND_DISK)
-    val features =
-      (if (referenceCompat) featureFrameCompat(daily) else featureFrame(daily)).cache()
-    features.count() // cache barrier before the model fits (C1); fills the daily grain's pin too
-
-    // the feature frame has exactly the daily grain's rows, so the split
-    // counts and the indexers read the small cached grain
-    val (trainRows, testRows) = ForecastModels.timeSplitCounts(daily, cutoff)
-    val (train, test) = ForecastModels.timeSplit(features, cutoff)
-    val featureCols = ForecastModels.numericFeatureCols(features)
+    // the split counts come from the grain, before the assembler drops rows;
+    // their aggregate is the grain's cache barrier (C1)
+    val counts = ForecastModels.splitCounts(daily, cutoff).head() // fills the grain under the features
+    val wide = if (referenceCompat) featureFrameCompat(daily) else featureFrame(daily)
     val fp = ForecastModels.featurePipelineOn(
-      featureCols, ForecastModels.timeSplit(daily, cutoff)._1, train)
+      ForecastModels.numericFeatureCols(wide), ForecastModels.timeSplit(daily, cutoff)._1, wide)
+    val features = ForecastModels.assembled(fp, wide, "baseline_qty").persist(StorageLevel.MEMORY_AND_DISK)
+    // a noop write of no columns fills the pin in one job (a count takes two)
+    features.select().write.format("noop").mode("overwrite").save() // fills the slim features pin (C1)
+    val (train, test) = ForecastModels.timeSplit(features, cutoff)
 
     val fitted = models.map {
-      case "lr" => ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), fp, train, test)
-      case "rf" => ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), fp, train, test)
-      case "gbt" => ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), fp, train, test)
+      case "lr" => ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), train, test)
+      case "rf" => ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), train, test)
+      case "gbt" => ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), train, test)
       case other => throw new IllegalArgumentException(s"unknown model: $other")
     }
 
-    // KPI for the first model (the reference uses its best LR for the KPI cut)
-    val kpi = Forecast.kpiGlobalValueWeighted(Forecast.evalAgainstBaseline(daily, fitted.head._1)).head()
+    // KPI for the first model (the reference uses its best LR for the KPI
+    // cut); its predictions carry the baseline, so no join is needed
+    val kpi = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(fitted.head._1)).head()
     (fitted.map(_._1) :+ features :+ daily).foreach(_.unpersist()) // every consumer has materialized
 
     Report(
-      trainRows, testRows,
+      counts.getAs[Long]("train_rows"), counts.getAs[Long]("test_rows"),
       fitted.map(_._2),
       kpi.getAs[Double]("mae_model"),
       kpi.getAs[Double]("mae_baseline"),

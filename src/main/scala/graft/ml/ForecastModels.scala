@@ -7,6 +7,7 @@ import org.apache.spark.ml.regression.{
   GBTRegressor, LinearRegression, LinearRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's ML surface (SURVEY §2.11, M1-M9) with its exact
   * hyperparameter presets: categorical indexing, vector assembly, the seven
@@ -66,27 +67,38 @@ object ForecastModels {
     new Pipeline().setStages(Array(idx, assembler)).fit(train)
   }
 
+  /** The slim assembled frame every model fits and predicts on: the
+    * (Country, StockCode, InvoiceDate) keys, the label, `AvgUnitPrice`, the
+    * `carry` columns and the feature vector — not the wide frame's
+    * individual feature columns. Assemble-then-split equals
+    * split-then-assemble: the time filter is row-local and the assembler's
+    * handleInvalid=skip drops the same null rows either way. Callers pin it
+    * once over the full history and filter it with [[timeSplit]]. */
+  def assembled(features: PipelineModel, frame: DataFrame, carry: String*): DataFrame =
+    features.transform(frame).select(
+      (Seq("Country", "StockCode", "InvoiceDate", LabelCol, "AvgUnitPrice") ++ carry :+ "features")
+        .map(col): _*)
+
   /** Fit + transform WITHOUT the evaluation — for pipelines that only
-    * consume the predictions. An iterative solver (OWL-QN/L-BFGS) re-reads
-    * its input every iteration, so the assembled training frame is pinned
-    * for the fit; the predictions are pinned for their consumers (metrics,
-    * KPIs) and filled by the first of them. Without the pins each pass would
-    * replay the lag-feature window lineage end to end. The caller
-    * unpersists the returned predictions. */
+    * consume the predictions. `train` and `test` are assembled frames
+    * (see [[assembled]]).
+    *
+    * The estimator reads `train` as given. The lasso preset (squared loss,
+    * at most 4,096 features, auto solver) makes one normal-equation pass
+    * over it (WeightedLeastSquares) plus one column-statistics pass, and
+    * solves the L1 problem with OWL-QN on the driver: its passes do not
+    * grow with the iterations. RandomForest and GBT read their input many
+    * times: give them the train rows of a pinned frame.
+    *
+    * The predictions (without the feature vector) are pinned for their
+    * consumers (metrics, KPIs) and filled by the first of them. The caller
+    * unpersists them. */
   def fitPredict(
       estimator: Estimator[_ <: Model[_]],
-      features: PipelineModel,
       train: DataFrame,
       test: DataFrame): DataFrame = {
-    // the solver reads only (label, features) — pinning the full assembled
-    // row (daily + lag columns + vector) would store and deserialize ~3×
-    // the bytes on every iteration
-    val assembled = features.transform(train).select(LabelCol, "features")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model: Model[_] = estimator.fit(assembled)
-    assembled.unpersist(false) // the predictions read `test`, never this pin
-    model.transform(features.transform(test))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val model: Model[_] = estimator.fit(train)
+    model.transform(test).drop("features").persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Numeric feature columns present in a feature frame: calendar + lag +
@@ -145,16 +157,17 @@ object ForecastModels {
   def trainAndEval(
       name: String,
       estimator: Estimator[_ <: Model[_]],
-      features: PipelineModel,
       train: DataFrame,
       test: DataFrame): (DataFrame, RegMetrics) = {
-    val predictions = fitPredict(estimator, features, train, test)
+    val predictions = fitPredict(estimator, train, test)
     (predictions, evaluate(name, predictions))
   }
 
   /** M8: segmented harness — train one model per segment predicate, evaluate
     * each, recombine predictions with unionByName (U1,
-    * Sales_forecast_pyspark.py:1457-1539, 1594). */
+    * Sales_forecast_pyspark.py:1457-1539, 1594). The union is pinned and
+    * filled from the segments' pins, which are then released, so the
+    * caller owns exactly one pin. */
   def segmented(
       segments: Seq[(String, DataFrame => DataFrame)],
       mkEstimator: () => Estimator[_ <: Model[_]],
@@ -164,9 +177,12 @@ object ForecastModels {
     val results = segments.map { case (name, filterFn) =>
       val trainSeg = filterFn(train)
       val features = featurePipeline(featureCols).fit(trainSeg)
-      trainAndEval(name, mkEstimator(), features, trainSeg, filterFn(test))
+      trainAndEval(name, mkEstimator(), features.transform(trainSeg), features.transform(filterFn(test)))
     }
-    val combined = results.map(_._1).reduce(_ unionByName _)
+    val parts = results.map(_._1)
+    val combined = parts.reduce(_ unionByName _).persist(StorageLevel.MEMORY_AND_DISK)
+    combined.count()
+    parts.foreach(_.unpersist())
     (combined, results.map(_._2))
   }
 
@@ -184,13 +200,14 @@ object ForecastModels {
     (df.filter(inTrain), df.filter(!inTrain))
   }
 
-  /** Row counts of the two [[timeSplit]] sides from ONE conditional-count
-    * aggregate instead of a count job per side. A null InvoiceDate matches
-    * neither side, as in the filters. */
-  def timeSplitCounts(df: DataFrame, cutoff: String): (Long, Long) = {
+  /** Row counts of the two [[timeSplit]] sides, `train_rows` and
+    * `test_rows`, from ONE conditional-count aggregate instead of a count
+    * job per side. A null InvoiceDate matches neither side, as in the
+    * filters. The one-row frame is lazy, so the caller's action on it can be
+    * the barrier that fills a pinned input. */
+  def splitCounts(df: DataFrame, cutoff: String): DataFrame = {
     val inTrain = onOrBefore(cutoff)
-    val r = df.agg(count(when(inTrain, true)), count(when(!inTrain, true))).head()
-    (r.getLong(0), r.getLong(1))
+    df.agg(count(when(inTrain, true)).as("train_rows"), count(when(!inTrain, true)).as("test_rows"))
   }
 
   private def onOrBefore(cutoff: String): Column = col("InvoiceDate") <= to_date(lit(cutoff))

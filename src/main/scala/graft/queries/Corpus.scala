@@ -5394,25 +5394,18 @@ object Corpus {
     // pre-feature daily grain in one multi-column pass (identical indices,
     // no lag-lineage replay); the window + assembly lineage is materialized
     // ONCE over the full history into a slim pin (keys, label, price,
-    // vector) from which both the solver's train filter and the prediction's
-    // test filter read; the three-metric evaluation — whose output this
-    // query discards — is skipped entirely. Assemble-then-split equals
-    // split-then-assemble: the time filter is row-local and the assembler's
-    // handleInvalid=skip drops the same null rows either way.
+    // vector; the same `ForecastModels.assembled` frame the reference
+    // pipeline pins) from which both the solver's train filter and the
+    // prediction's test filter read; the three-metric evaluation — whose
+    // output this query discards — is skipped entirely.
     val features = Forecast.lagFeatures(dl, 1 to 3)
     val featureCols = ForecastModels.numericFeatureCols(features)
     val (trainDaily, _) = ForecastModels.timeSplit(dl, "1999-09-01")
     val fp = ForecastModels.featurePipelineOn(featureCols, trainDaily, features)
-    val assembled = fp.transform(features)
-      .select(
-        col("Country"), col("StockCode"), col("InvoiceDate"),
-        col(ForecastModels.LabelCol), col("AvgUnitPrice"), col("features"))
+    val assembled = ForecastModels.assembled(fp, features)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (train, test) = ForecastModels.timeSplit(assembled, "1999-09-01")
-    val model = ForecastModels.lasso(0.05).fit(
-      train.select(ForecastModels.LabelCol, "features"))
-    val pred = model.transform(test)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
     pred.count() // materialize before dropping the assembled pin
     assembled.unpersist(false)
     Forecast.kpiByCountry(Forecast.evalAgainstBaseline(dl, pred)).orderBy("Country")

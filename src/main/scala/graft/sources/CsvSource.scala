@@ -47,8 +47,15 @@ object CsvSource {
       to_date(to_timestamp(col("InvoiceDate"), "M/d/yy H:mm")))
 
   /** Line revenue + dedup, completing the reference's ingest steps
-    * (D2 + F9, Sales_forecast_pyspark.py:99,141-144). */
+    * (D2 + F9, Sales_forecast_pyspark.py:99,141-144).
+    *
+    * The lines are hash-partitioned by the series key (Country, StockCode)
+    * before the dedup. Every later operator of the forecast flow groups or
+    * partitions by a superset of that key — the dedup (all columns), the
+    * daily aggregate and both feature window families — so this is the
+    * flow's only shuffle. */
   def cleaned(df: DataFrame): DataFrame =
-    df.dropDuplicates()
+    df.repartition(col("Country"), col("StockCode"))
+      .dropDuplicates()
       .withColumn("LineRevenue", col("UnitPrice") * col("Quantity"))
 }

@@ -1,0 +1,155 @@
+package graft.forecast
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{SparkSpec, Tables}
+import graft.ml.ForecastModels
+import graft.sources.CsvSource
+
+/** The fused feature frame on sf0.001: it equals the lag → rolling → diff
+  * composition bit for bit, its `baseline_qty` equals the MA(6) baseline
+  * joined on the keys, KPIs read from it equal the join-based evaluation,
+  * and its plan has the shape the reference pipeline relies on. */
+class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val Keys = Seq("Country", "StockCode", "InvoiceDate")
+
+  private lazy val sales = Tables.salesLines(spark, SparkSpec.Sf0001)
+
+  /** Row count and an order-independent digest: the sum over rows of
+    * xxhash64 of the values cast to string. A double's string is its
+    * shortest round-trip form, so equal digests mean equal bits. */
+  private def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val r = df.agg(
+      count(lit(1)),
+      sum(xxhash64(df.columns.toSeq.map(c => col(c).cast("string")): _*).cast("decimal(38,0)")))
+      .head()
+    (r.getLong(0), r.getDecimal(1))
+  }
+
+  private def filled(df: DataFrame): DataFrame =
+    df.na.fill(0.0, df.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_")))
+
+  /** The daily grain plus two copies each of one row with a null
+    * InvoiceDate and with a null Country, cached so every reader sees the
+    * same rows. The second copy has the first in its trailing window, so
+    * only the null-key guard keeps its baseline null, as the join does. */
+  private def withNullKeys(daily: DataFrame): DataFrame = {
+    val row = daily.orderBy(Keys.map(col): _*).limit(1)
+    val nulls = Seq("InvoiceDate" -> "date", "Country" -> "string")
+      .map { case (c, t) => row.withColumn(c, lit(null).cast(t)) }
+    (nulls ++ nulls).foldLeft(daily)(_ union _).cache()
+  }
+
+  private def executed(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  test("featureFrame and featureFrameCompat equal the lag, rolling and diff composition") {
+    val cases = Seq(
+      (ReferencePipeline.featureFrame _, Forecast.dailySales(sales),
+        (d: DataFrame) => Forecast.diffFeatures(Forecast.rollingFeatures(Forecast.lagFeatures(d)))),
+      (ReferencePipeline.featureFrameCompat _, Forecast.dailySalesCompat(sales),
+        (d: DataFrame) => Forecast.diffFeatures(
+          Forecast.rollingFeaturesCompat(Forecast.lagFeaturesCompat(d)), Seq(3, 6, 12), Seq(3, 4, 5))))
+    for ((fused, daily, composed) <- cases) {
+      val got = fused(daily).drop("baseline_qty")
+      val want = filled(composed(daily))
+      assert(got.columns.toSeq === want.columns.toSeq)
+      assert(digest(got) === digest(want))
+    }
+  }
+
+  test("the carried baseline_qty equals maBaseline joined on the keys, null keys included") {
+    val daily = withNullKeys(Forecast.dailySales(sales))
+    try {
+      val carried = ReferencePipeline.featureFrame(daily).select((Keys :+ "baseline_qty").map(col): _*)
+      val joined = daily.select(Keys.map(col): _*)
+        .join(Forecast.maBaseline(daily).select((Keys :+ "baseline_qty").map(col): _*), Keys, "left")
+      assert(digest(carried) === digest(joined))
+      for (k <- Seq("InvoiceDate", "Country"))
+        assert(carried.filter(col(k).isNull && col("baseline_qty").isNull).count() === 2)
+    } finally daily.unpersist()
+  }
+
+  test("KPIs from frames carrying baseline_qty equal the join-based evaluation bit for bit") {
+    val daily = withNullKeys(Forecast.dailySales(sales))
+    val wide = ReferencePipeline.featureFrame(daily)
+    // the slim pin's predictions, as runOnSales builds them (the assembler
+    // drops the null-date rows: their calendar features are null) ...
+    val fp = ForecastModels.featurePipelineOn(
+      ForecastModels.numericFeatureCols(wide), daily, wide)
+    val pin = ForecastModels.assembled(fp, wide, "baseline_qty").cache()
+    val (train, test) = ForecastModels.timeSplit(pin, "1999-09-01")
+    val modelPred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
+    // ... and the whole feature frame with a fixed forecast, null-key rows kept
+    val lagPred = wide.withColumn("prediction", col("lag_qty_1_day").cast("double") * 0.9)
+    assert(lagPred.filter(col("InvoiceDate").isNull || col("Country").isNull).count() === 4)
+    try for (pred <- Seq(modelPred, lagPred)) {
+      val got = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(pred)).head()
+      val want = Forecast.kpiGlobalValueWeighted(
+        Forecast.evalAgainstBaseline(daily, pred.drop("baseline_qty"))).head()
+      assert(got.schema === want.schema)
+      for (f <- want.schema.fieldNames) {
+        val (a, b) = (got.getAs[AnyRef](f), want.getAs[AnyRef](f))
+        // boxed equals: bit equality for doubles, value equality for the count
+        assert(a != null && a.equals(b), s"$f: carried $a, joined $b")
+      }
+    } finally Seq(modelPred, pin, daily).foreach(_.unpersist())
+  }
+
+  test("the feature frames run every window column in exactly two window sorts") {
+    val daily = Forecast.dailySales(sales).cache()
+    try for (frame <- Seq(ReferencePipeline.featureFrame(daily), ReferencePipeline.featureFrameCompat(daily))) {
+      val plan = executed(frame)
+      assert(collect(plan) { case w: WindowExec => w }.size === 2, plan)
+      assert(collect(plan) { case s: SortExec => s }.size === 2, plan)
+    } finally daily.unpersist()
+  }
+
+  test("over a cached grain partitioned by series key, the features need no exchange") {
+    val lines = CsvSource.cleaned(sales.drop("LineRevenue"))
+    val daily = Forecast.dailySales(lines).cache()
+    try {
+      val wide = ReferencePipeline.featureFrame(daily)
+      val fp = ForecastModels.featurePipelineOn(ForecastModels.numericFeatureCols(wide), daily, wide)
+      for (frame <- Seq(wide, ForecastModels.assembled(fp, wide, "baseline_qty"))) {
+        val plan = executed(frame)
+        assert(collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
+        assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan)
+      }
+    } finally daily.unpersist()
+  }
+
+  test("runOnSales executes no join") {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ReferencePipeline.runOnSales(sales, "1999-09-01", Seq("lr"))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.asScala.toSeq
+    assert(all.nonEmpty)
+    val joins = all.flatMap(p => collect(p) { case j: BaseJoinExec => j.nodeName })
+    assert(joins.isEmpty, s"joins executed: $joins")
+  }
+}

@@ -41,8 +41,8 @@ class ReferencePipelineSpec extends SparkSpec {
   }
 
   test("runOnSales scans its sales input in exactly one Spark job, with and without referenceCompat") {
-    // the daily grain is cached once; the split counts, indexers and KPIs
-    // read it from the cache instead of replaying the input lineage
+    // the daily grain is cached once; the split counts, indexers and
+    // features read it from the cache instead of replaying the input lineage
     for (compat <- Seq(false, true)) {
       val sales = spark.read.parquet(salesFile)
       val jobs = fileScanJobs {

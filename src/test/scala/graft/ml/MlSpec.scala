@@ -50,10 +50,10 @@ class MlSpec extends SparkSpec {
   }
 
   test("fitPredict returns the same predictions as trainAndEval without the eval passes") {
-    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
+    val assembled = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame).transform(frame)
     val (predEval, _) = ForecastModels.trainAndEval(
-      "lr_test", ForecastModels.lasso(0.0), features, frame, frame)
-    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.0), features, frame, frame)
+      "lr_test", ForecastModels.lasso(0.0), assembled, assembled)
+    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.0), assembled, assembled)
     val key = Seq("Country", "StockCode", "InvoiceDate").map(col)
     val a = predEval.select(key :+ col("prediction"): _*).orderBy(key: _*).collect().map(_.toSeq)
     val b = pred.select(key :+ col("prediction"): _*).orderBy(key: _*).collect().map(_.toSeq)
@@ -65,7 +65,8 @@ class MlSpec extends SparkSpec {
     // a regularized fit on a noisy label keeps every metric away from 0 and 1
     val noisy = frame.withColumn(ForecastModels.LabelCol,
       col(ForecastModels.LabelCol) + (col("lag_qty_1_day") % 7) * (col("lag_qty_1_day") % 3))
-    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), features, noisy, noisy)
+    val assembled = features.transform(noisy)
+    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), assembled, assembled)
     try {
       val got = ForecastModels.evaluate("lr_test", pred)
       def metric(m: String): Double = new RegressionEvaluator()
@@ -83,13 +84,14 @@ class MlSpec extends SparkSpec {
   test("lasso recovers a noiseless linear relation and evaluates near-perfect") {
     val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val (pred, metrics) = ForecastModels.trainAndEval(
-      "lr_test", ForecastModels.lasso(0.0), features, frame, frame)
+      "lr_test", ForecastModels.lasso(0.0), features.transform(frame), features.transform(frame))
     assert(metrics.r2 > 0.999, s"r2 was ${metrics.r2}")
     assert(metrics.mae < 1.0)
     assert(pred.columns.contains("prediction"))
   }
 
   test("segmented harness trains per segment and recombines with unionByName") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val (pred, metrics) = ForecastModels.segmented(
       Seq(
         "seg_a" -> ((df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") === "A")),
@@ -100,6 +102,11 @@ class MlSpec extends SparkSpec {
     assert(metrics.map(_.name) === Seq("seg_a", "seg_rest"))
     assert(pred.count() === frame.count())
     metrics.foreach(m => assert(m.r2 > 0.99))
+    // the caller owns one pin: releasing it releases every pin the harness
+    // made (a key-set check: the map holds weak values, so its size can shrink)
+    pred.unpersist()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
   }
 
   test("coefficient ranking orders features by absolute weight") {
@@ -111,10 +118,12 @@ class MlSpec extends SparkSpec {
     assert(math.abs(ranked.head._2 - 3.0) < 0.05)
   }
 
-  test("timeSplitCounts counts both timeSplit sides in one aggregate; null dates match neither") {
+  test("splitCounts counts both timeSplit sides in one aggregate; null dates match neither") {
     val withNullDate = frame.union(frame.limit(1).withColumn("InvoiceDate", lit(null).cast("date")))
     val (train, test) = ForecastModels.timeSplit(withNullDate, "2024-01-10")
-    assert(ForecastModels.timeSplitCounts(withNullDate, "2024-01-10") === ((train.count(), test.count())))
+    val counts = ForecastModels.splitCounts(withNullDate, "2024-01-10").head()
+    assert(counts.getAs[Long]("train_rows") === train.count())
+    assert(counts.getAs[Long]("test_rows") === test.count())
     assert(train.count() + test.count() === frame.count())
   }
 

@@ -89,9 +89,9 @@ class RetailFixtureSpec extends SparkSpec {
     val cols = ForecastModels.numericFeatureCols(features)
     val fp = ForecastModels.featurePipeline(cols).fit(train)
     val (_, v2) = ForecastModels.trainAndEval(
-      "lr_v2", ForecastModels.lasso(0.05), fp, train, testDf)
+      "lr_v2", ForecastModels.lasso(0.05), fp.transform(train), fp.transform(testDf))
     val (_, v1drift) = ForecastModels.trainAndEval(
-      "lr_v1", ForecastModels.lasso(0.1), fp, train, testDf)
+      "lr_v1", ForecastModels.lasso(0.1), fp.transform(train), fp.transform(testDf))
     features.unpersist()
     info(f"v2    mae=${v2.mae}%.6f rmse=${v2.rmse}%.6f r2=${v2.r2}%.6f")
     info(f"drift mae=${v1drift.mae}%.6f rmse=${v1drift.rmse}%.6f r2=${v1drift.r2}%.6f")
