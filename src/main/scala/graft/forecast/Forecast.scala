@@ -225,9 +225,11 @@ object Forecast {
     coalesce(ma, lag(qty, 1).over(seriesW).cast(DoubleType))
   }
 
-  /** [[maBaselineCol]] as the `baseline_qty` that [[evalAgainstBaseline]]'s
-    * left join on (Country, StockCode, InvoiceDate) attaches: a row with a
-    * null key matches no baseline row there, so it gets null here. */
+  /** [[maBaselineCol]] as the `baseline_qty` that [[maBaseline]], left-joined
+    * on (Country, StockCode, InvoiceDate), attaches to a row: a row with a
+    * null key matches no baseline row in such a join, so it gets null here.
+    * Selected with the features, it lets predictions carry their baseline
+    * to [[withErrorColumns]] without a join. */
   def joinedBaselineCol(window: Int = 6): Column =
     when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), maBaselineCol(window))
       .as("baseline_qty")
@@ -252,29 +254,11 @@ object Forecast {
     * column, the MA baseline, and the six error columns. `prediction`
     * defaults to the naive last-value forecast so the frame is fully
     * deterministic; ML models plug their own prediction column in via
-    * [[evalAgainstBaseline]]. */
+    * [[joinedBaselineCol]]. */
   def evalFrame(daily: DataFrame): DataFrame =
     withErrorColumns(
       maBaseline(daily)
         .withColumn("prediction", lag(col("NetDailyQuantity"), 1).over(seriesW).cast(DoubleType)))
-
-  /** Evaluation join (J2 + error columns): model predictions ⟕ the MA
-    * baseline on the composite (Country, StockCode, InvoiceDate) key, over
-    * the full history (a test row's trailing baseline window legitimately
-    * reaches into train days, as in the reference).
-    *
-    * The reference pipeline no longer joins: its feature frame carries the
-    * same baseline as [[joinedBaselineCol]], computed in the feature window
-    * pass over the same full history, and its predictions keep it. This
-    * join is the specs' oracle for that column, and q_ml1 still uses it. */
-  def evalAgainstBaseline(dailyAll: DataFrame, predictions: DataFrame): DataFrame = {
-    val keys = SeriesKeys :+ "InvoiceDate"
-    val base = maBaseline(dailyAll)
-      .select((keys :+ "baseline_qty").map(col): _*)
-    val pred = predictions.select(
-      (keys ++ Seq("NetDailyQuantity", "AvgUnitPrice", "prediction")).map(col): _*)
-    withErrorColumns(pred.join(base, keys, "left"))
-  }
 
   private def kpiAggs: Seq[Column] = Seq(
     Exact.floorAvg(col("abs_err_model"), 9).as("mae_model"),

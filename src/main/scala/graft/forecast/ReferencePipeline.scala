@@ -11,8 +11,8 @@ import graft.ml.ForecastModels.RegMetrics
 /** End-to-end replay of the reference pipeline (SURVEY §3.1-§3.3) on a
   * testdata scale-factor directory: daily aggregation → 105-column feature
   * build (lags + rolling + diffs, null-filled) → cache barrier → time split →
-  * feature pipeline + regressors → three-metric scorecards → KPI evaluation
-  * against the 6-day MA baseline (global, per-country, value-weighted).
+  * feature pipeline + regressors (global or UK/others) → three-metric
+  * scorecards → KPIs against the 6-day MA baseline (global, value-weighted).
   *
   * The daily grain is computed ONCE per call and cached; the split-count
   * aggregate fills it, so the sales input is scanned by exactly one Spark
@@ -21,11 +21,12 @@ import graft.ml.ForecastModels.RegMetrics
   * is never cached itself: one slim assembled pin (keys, label, price,
   * baseline, feature vector) is filled over the full history, every model
   * fits on its train rows and predicts its test rows, and the KPIs read the
-  * baseline from the predictions, without a join. On CSV input
+  * baseline from the predictions, without a join. The segmented model reads
+  * the same pin, with its own indices in place of the global ones. On CSV input
   * (`CsvSource.cleaned`) the lines are already partitioned by series key,
   * so the dedup, the grain and the windows add no shuffle. Every pin a call
   * creates (daily grain, assembled frame, each model's predictions) is
-  * released before the `Report` is returned.
+  * released before the `Report` is returned, or the call fails.
   *
   * A user of the reference runs exactly this flow; `main` prints the same
   * scorecard shape the reference's README publishes.
@@ -81,48 +82,72 @@ object ReferencePipeline {
       referenceCompat: Boolean = false): Report =
     runOnSales(Tables.salesLines(spark, dir), cutoff, models, referenceCompat)
 
+  /** [[runOnSales]]'s model names, and the country `lr_seg` fits its own
+    * model for (Sales_forecast_pyspark.py:1457-1539). */
+  val Models: Seq[String] = Seq("lr", "lr_seg", "rf", "gbt")
+  val UK = "United Kingdom"
+
   /** Same replay on an already-ingested invoice-line frame (columns Country,
     * StockCode, InvoiceDate, Quantity, UnitPrice, LineRevenue) — the entry
     * point for the Online-Retail-shaped fixture (CsvSource → here is exactly
-    * the reference's flow). */
+    * the reference's flow). `models` names one or more of [[Models]]; the
+    * KPIs judge the first. `lr_seg` fits a Lasso on the UK rows and one on the
+    * others, each on [[ForecastModels.segmentFeatures]] of the one pin. */
   def runOnSales(
       sales: DataFrame,
       cutoff: String,
       models: Seq[String],
       referenceCompat: Boolean = false): Report = {
-    val daily = (if (referenceCompat) Forecast.dailySalesCompat(sales)
-      else Forecast.dailySales(sales)).persist(StorageLevel.MEMORY_AND_DISK)
-    // the split counts come from the grain, before the assembler drops rows;
-    // their aggregate is the grain's cache barrier (C1)
-    val counts = ForecastModels.splitCounts(daily, cutoff).head() // fills the grain under the features
-    val wide = if (referenceCompat) featureFrameCompat(daily) else featureFrame(daily)
-    val fp = ForecastModels.featurePipelineOn(
-      ForecastModels.numericFeatureCols(wide), ForecastModels.timeSplit(daily, cutoff)._1, wide)
-    val features = ForecastModels.assembled(fp, wide, "baseline_qty").persist(StorageLevel.MEMORY_AND_DISK)
-    // a noop write of no columns fills the pin in one job (a count takes two)
-    features.select().write.format("noop").mode("overwrite").save() // fills the slim features pin (C1)
-    val (train, test) = ForecastModels.timeSplit(features, cutoff)
+    require(models.nonEmpty, s"no model named; known models: ${Models.mkString(",")}")
+    models.foreach(m => require(Models.contains(m), s"unknown model: $m; known models: ${Models.mkString(",")}"))
+    // every pin, newest first, so each is released before the pins it reads
+    var pins = List.empty[DataFrame]
+    def held(df: DataFrame): DataFrame = { pins ::= df; df }
+    def scored(run: (DataFrame, RegMetrics)): (DataFrame, Seq[RegMetrics]) = (held(run._1), Seq(run._2))
+    try {
+      val daily = held((if (referenceCompat) Forecast.dailySalesCompat(sales)
+        else Forecast.dailySales(sales)).persist(StorageLevel.MEMORY_AND_DISK))
+      // the split counts come from the grain, before the assembler drops rows;
+      // their aggregate is the grain's cache barrier (C1)
+      val counts = ForecastModels.splitCounts(daily, cutoff).head() // fills the grain under the features
+      val wide = if (referenceCompat) featureFrameCompat(daily) else featureFrame(daily)
+      val numeric = ForecastModels.numericFeatureCols(wide)
+      val trainDaily = ForecastModels.timeSplit(daily, cutoff)._1
+      val fp = ForecastModels.featurePipelineOn(numeric, trainDaily, wide)
+      val features = held(ForecastModels.assembled(fp, wide, "baseline_qty").persist(StorageLevel.MEMORY_AND_DISK))
+      // a noop write of no columns fills the pin in one job (a count takes two)
+      features.select().write.format("noop").mode("overwrite").save() // fills the slim features pin (C1)
+      val (train, test) = ForecastModels.timeSplit(features, cutoff)
 
-    val fitted = models.map {
-      case "lr" => ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), train, test)
-      case "rf" => ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), train, test)
-      case "gbt" => ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), train, test)
-      case other => throw new IllegalArgumentException(s"unknown model: $other")
-    }
+      val fitted = models.map {
+        case "lr" => scored(ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), train, test))
+        case "rf" => scored(ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), train, test))
+        case "gbt" => scored(ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), train, test))
+        case "lr_seg" =>
+          val parts = Seq("lr_seg_uk" -> (col("Country") === UK), "lr_seg_others" -> (col("Country") =!= UK))
+            .map { case (name, in) =>
+              val seg = ForecastModels.segmentFeatures(features, numeric.size, trainDaily.filter(in))
+              scored(ForecastModels.trainAndEval(name, ForecastModels.lasso(0.05), seg(train.filter(in)), seg(test.filter(in))))
+            }
+          val union = held(parts.map(_._1).reduce(_ unionByName _).persist(StorageLevel.MEMORY_AND_DISK))
+          union.select().write.format("noop").mode("overwrite").save() // fills the union, so the segment pins can go
+          parts.foreach(_._1.unpersist())
+          (union, parts.flatMap(_._2))
+      }
 
-    // KPI for the first model (the reference uses its best LR for the KPI
-    // cut); its predictions carry the baseline, so no join is needed
-    val kpi = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(fitted.head._1)).head()
-    (fitted.map(_._1) :+ features :+ daily).foreach(_.unpersist()) // every consumer has materialized
-
-    Report(
-      counts.getAs[Long]("train_rows"), counts.getAs[Long]("test_rows"),
-      fitted.map(_._2),
-      kpi.getAs[Double]("mae_model"),
-      kpi.getAs[Double]("mae_baseline"),
-      kpi.getAs[Double]("pct_reduction"))
+      // KPI for the first model (the reference uses its best LR for the KPI
+      // cut); its predictions carry the baseline, so no join is needed
+      val kpi = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(fitted.head._1)).head()
+      Report(
+        counts.getAs[Long]("train_rows"), counts.getAs[Long]("test_rows"),
+        fitted.flatMap(_._2),
+        kpi.getAs[Double]("mae_model"),
+        kpi.getAs[Double]("mae_baseline"),
+        kpi.getAs[Double]("pct_reduction"))
+    } finally pins.foreach(_.unpersist()) // every consumer has materialized, or the call failed
   }
 
+  /** Args: [sfDir] [models, comma-separated from lr,lr_seg,rf,gbt; default lr] [cutoff]. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))

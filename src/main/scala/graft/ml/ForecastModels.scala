@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.{Estimator, Model, Pipeline, PipelineModel}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
-import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel, VectorAssembler, VectorSlicer}
 import org.apache.spark.ml.regression.{
   GBTRegressor, LinearRegression, LinearRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** The reference's ML surface (SURVEY §2.11, M1-M9) with its exact
   * hyperparameter presets: categorical indexing, vector assembly, the seven
-  * regressor variants, three-metric evaluation, segmented training, and
+  * regressor variants, three-metric evaluation, per-segment re-indexing, and
   * coefficient introspection.
   *
   * PySpark's pyspark.ml is a thin wrapper over these same Scala classes, so
@@ -23,32 +23,14 @@ object ForecastModels {
 
   case class RegMetrics(name: String, mae: Double, rmse: Double, r2: Double)
 
-  /** M1+M2: Country/StockCode indexers (handleInvalid=keep maps unseen
-    * categories to an extra index, Sales_forecast_pyspark.py:389-400) +
-    * assembler (handleInvalid=skip silently DROPS rows with null/NaN
-    * features — row counts downstream shrink; reference behavior,
-    * Sales_forecast_pyspark.py:417). */
-  def featurePipeline(featureCols: Seq[String]): Pipeline = {
-    val countryIdx = new StringIndexer()
-      .setInputCol("Country").setOutputCol("CountryIndex")
-      .setHandleInvalid("keep").setStringOrderType("frequencyDesc")
-    val stockIdx = new StringIndexer()
-      .setInputCol("StockCode").setOutputCol("StockCodeIndex")
-      .setHandleInvalid("keep").setStringOrderType("frequencyDesc")
-    val assembler = new VectorAssembler()
-      .setInputCols((featureCols ++ Seq("CountryIndex", "StockCodeIndex")).toArray)
-      .setOutputCol("features")
-      .setHandleInvalid("skip")
-    new Pipeline().setStages(Array(countryIdx, stockIdx, assembler))
-  }
-
-  /** [[featurePipeline]] semantics at lower cost: the two frequencyDesc
+  /** M1+M2: Country/StockCode indexers (handleInvalid=keep, py:389-400) +
+    * assembler (handleInvalid=skip DROPS rows with null/NaN features,
+    * py:417) at lower cost than the reference: the two frequencyDesc
     * orderings come from ONE multi-column StringIndexer pass (per-column
-    * counting is independent, so the fitted indices are identical to the
-    * reference's two single-column fits), and the pass runs over
-    * `indexerFrame` — any frame with the same Country/StockCode rows as
-    * train, e.g. the pre-feature daily grain, which is typically cached —
-    * so fitting never replays the lag-feature window lineage. The final
+    * counting is independent, so the indices equal the reference's two
+    * single-column fits), and the pass runs over `indexerFrame` — any frame
+    * with train's Country/StockCode rows, e.g. the cached daily grain — so
+    * fitting never replays the lag-feature window lineage. The final
     * Pipeline.fit wires the fitted model + assembler together without
     * launching a job (no estimator stages remain). */
   def featurePipelineOn(
@@ -78,6 +60,22 @@ object ForecastModels {
     features.transform(frame).select(
       (Seq("Country", "StockCode", "InvoiceDate", LabelCol, "AvgUnitPrice") ++ carry :+ "features")
         .map(col): _*)
+
+  /** Maps a segment's rows of an [[assembled]] `pin` to the pin's columns
+    * with the segment's own indices: the vector keeps its `numericSlots`
+    * leading slots and gets the indices [[featurePipelineOn]] fits on
+    * `indexerFrame` (the segment's train rows of the grain) appended. The
+    * assembler flattens a vector slot by slot, so this equals the reference's
+    * pipeline refitted on the segment, value for value. */
+  def segmentFeatures(pin: DataFrame, numericSlots: Int, indexerFrame: DataFrame): DataFrame => DataFrame = {
+    val slicer = new VectorSlicer().setInputCol("features").setOutputCol("numeric")
+      .setIndices((0 until numericSlots).toArray)
+    def numeric(frame: DataFrame): DataFrame = slicer.transform(frame).drop("features")
+    val fp = featurePipelineOn(Seq("numeric"), indexerFrame, numeric(pin))
+    val countries = fp.stages.collectFirst { case m: StringIndexerModel => m.labelsArray.head }
+    require(countries.exists(_.nonEmpty), "the segment has no train rows to fit its indexers on")
+    frame => fp.transform(numeric(frame)).select(pin.columns.map(col): _*)
+  }
 
   /** Fit + transform WITHOUT the evaluation — for pipelines that only
     * consume the predictions. `train` and `test` are assembled frames
@@ -161,29 +159,6 @@ object ForecastModels {
       test: DataFrame): (DataFrame, RegMetrics) = {
     val predictions = fitPredict(estimator, train, test)
     (predictions, evaluate(name, predictions))
-  }
-
-  /** M8: segmented harness — train one model per segment predicate, evaluate
-    * each, recombine predictions with unionByName (U1,
-    * Sales_forecast_pyspark.py:1457-1539, 1594). The union is pinned and
-    * filled from the segments' pins, which are then released, so the
-    * caller owns exactly one pin. */
-  def segmented(
-      segments: Seq[(String, DataFrame => DataFrame)],
-      mkEstimator: () => Estimator[_ <: Model[_]],
-      featureCols: Seq[String],
-      train: DataFrame,
-      test: DataFrame): (DataFrame, Seq[RegMetrics]) = {
-    val results = segments.map { case (name, filterFn) =>
-      val trainSeg = filterFn(train)
-      val features = featurePipeline(featureCols).fit(trainSeg)
-      trainAndEval(name, mkEstimator(), features.transform(trainSeg), features.transform(filterFn(test)))
-    }
-    val parts = results.map(_._1)
-    val combined = parts.reduce(_ unionByName _).persist(StorageLevel.MEMORY_AND_DISK)
-    combined.count()
-    parts.foreach(_.unpersist())
-    (combined, results.map(_._2))
   }
 
   /** M9: LR introspection — coefficients ranked by |weight|. */

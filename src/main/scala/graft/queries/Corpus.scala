@@ -5394,21 +5394,24 @@ object Corpus {
     // pre-feature daily grain in one multi-column pass (identical indices,
     // no lag-lineage replay); the window + assembly lineage is materialized
     // ONCE over the full history into a slim pin (keys, label, price,
-    // vector; the same `ForecastModels.assembled` frame the reference
-    // pipeline pins) from which both the solver's train filter and the
-    // prediction's test filter read; the three-metric evaluation — whose
-    // output this query discards — is skipped entirely.
-    val features = Forecast.lagFeatures(dl, 1 to 3)
+    // baseline, vector; the same `ForecastModels.assembled` frame the
+    // reference pipeline pins) from which both the solver's train filter and
+    // the prediction's test filter read; the predictions carry the MA(6)
+    // baseline, so the KPIs need no join; the unused evaluation is skipped.
+    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol(): _*)
     val featureCols = ForecastModels.numericFeatureCols(features)
     val (trainDaily, _) = ForecastModels.timeSplit(dl, "1999-09-01")
     val fp = ForecastModels.featurePipelineOn(featureCols, trainDaily, features)
-    val assembled = ForecastModels.assembled(fp, features)
+    val assembled = ForecastModels.assembled(fp, features, "baseline_qty")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (train, test) = ForecastModels.timeSplit(assembled, "1999-09-01")
-    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
-    pred.count() // materialize before dropping the assembled pin
-    assembled.unpersist(false)
-    Forecast.kpiByCountry(Forecast.evalAgainstBaseline(dl, pred)).orderBy("Country")
+    // the few KPI rows are collected, so both pins go before the result is read
+    try {
+      val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
+      val kpi = Forecast.kpiByCountry(Forecast.withErrorColumns(pred)).orderBy("Country")
+      try s.createDataFrame(java.util.Arrays.asList(kpi.collect(): _*), kpi.schema)
+      finally pred.unpersist()
+    } finally assembled.unpersist()
   }
 
   /** ML2: closed-form per-country OLS fit (y = NetDailyQuantity on

@@ -44,7 +44,7 @@ object RetailFixture {
 
   final case class Stats(rawLines: Int, injectedDups: Int, countries: Int)
 
-  val UK = "United Kingdom"
+  val UK: String = graft.forecast.ReferencePipeline.UK
 
   /** 31 countries: UK + 30 others, a handful carrying real series and a long
     * tail of sparse (<5 rows) ones — the reference's country histogram shape. */

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SparkSpec, Tables}
-import graft.ml.ForecastModels
+import graft.ml.{ForecastModels, LiteralHarness}
 import graft.sources.CsvSource
 
 /** The fused feature frame on sf0.001: it equals the lag → rolling → diff
@@ -102,7 +102,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try for (pred <- Seq(modelPred, lagPred)) {
       val got = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(pred)).head()
       val want = Forecast.kpiGlobalValueWeighted(
-        Forecast.evalAgainstBaseline(daily, pred.drop("baseline_qty"))).head()
+        LiteralHarness.evalAgainstBaseline(daily, pred.drop("baseline_qty"))).head()
       assert(got.schema === want.schema)
       for (f <- want.schema.fieldNames) {
         val (a, b) = (got.getAs[AnyRef](f), want.getAs[AnyRef](f))

@@ -60,6 +60,19 @@ class ReferencePipelineSpec extends SparkSpec {
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
   }
 
+  test("runOnSales rejects a bad model list, and a failing call releases every pin") {
+    val sales = graft.Tables.salesLines(spark, SparkSpec.Sf0001)
+    // sf0.001 has no United Kingdom rows, so lr_seg's UK segment cannot fit
+    val cases = Seq(Seq("nope") -> "unknown model: nope", Seq() -> "no model named", Seq("lr_seg") -> "no train rows")
+    for ((models, cause) <- cases) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException](ReferencePipeline.runOnSales(sales, "1999-09-01", models))
+      assert(e.getMessage.contains(cause), s"models=$models: ${e.getMessage}")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"models=$models: persistent RDDs left behind: $leaked")
+    }
+  }
+
   test("referenceCompat frame carries the reference's full feature width") {
     val daily = Forecast.dailySalesCompat(
       graft.Tables.salesLines(spark, SparkSpec.Sf0001))

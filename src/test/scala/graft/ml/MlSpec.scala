@@ -18,6 +18,21 @@ class MlSpec extends SparkSpec {
     rows.toDF("Country", "StockCode", "InvoiceDate", "NetDailyQuantity", "lag_qty_1_day")
   }
 
+  /** The indexers and assembler fitted on the whole synthetic frame. */
+  private lazy val features =
+    ForecastModels.featurePipelineOn(Seq("lag_qty_1_day"), frame, frame)
+
+  /** Country A, and every other country: B alone, whose global index (1,
+    * after A in the frequency tie) differs from its index within the
+    * segment (0). */
+  private val segments = Seq("seg_a" -> (col("Country") === "A"), "seg_rest" -> (col("Country") =!= "A"))
+
+  /** The slim pin over the synthetic frame, as the pipeline pins it. */
+  private def pinned() =
+    ForecastModels.assembled(features, frame.withColumn("AvgUnitPrice", lit(1.0))).cache()
+
+  private def persistentIds = spark.sparkContext.getPersistentRDDs.keySet
+
   test("feature pipeline indexes categoricals and assembles vectors; skip drops null rows") {
     val extra = Seq(("C", "Z", "2024-02-01", 5L))
       .toDF("Country", "StockCode", "d", "NetDailyQuantity")
@@ -25,7 +40,7 @@ class MlSpec extends SparkSpec {
       .withColumn("lag_qty_1_day", lit(null).cast("long"))
       .select(frame.columns.map(col): _*)
     val withNull = frame.union(extra)
-    val fitted = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(withNull)
+    val fitted = ForecastModels.featurePipelineOn(Seq("lag_qty_1_day"), withNull, withNull)
     val out = fitted.transform(withNull)
     assert(out.columns.contains("features"))
     // handleInvalid=skip silently drops the null-feature row (reference behavior)
@@ -36,7 +51,7 @@ class MlSpec extends SparkSpec {
     // the fast path must produce bit-identical indices + vectors: one
     // multi-column indexer pass over the pre-feature frame vs the two
     // reference-literal single-column fits over the feature frame
-    val literal = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
+    val literal = LiteralHarness.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val fast = ForecastModels.featurePipelineOn(
       Seq("lag_qty_1_day"), frame.drop("lag_qty_1_day"), frame)
     val key = Seq("Country", "StockCode", "InvoiceDate").map(col)
@@ -50,7 +65,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("fitPredict returns the same predictions as trainAndEval without the eval passes") {
-    val assembled = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame).transform(frame)
+    val assembled = features.transform(frame)
     val (predEval, _) = ForecastModels.trainAndEval(
       "lr_test", ForecastModels.lasso(0.0), assembled, assembled)
     val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.0), assembled, assembled)
@@ -61,7 +76,6 @@ class MlSpec extends SparkSpec {
   }
 
   test("one-pass evaluate equals three single-metric evaluator calls bit for bit") {
-    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     // a regularized fit on a noisy label keeps every metric away from 0 and 1
     val noisy = frame.withColumn(ForecastModels.LabelCol,
       col(ForecastModels.LabelCol) + (col("lag_qty_1_day") % 7) * (col("lag_qty_1_day") % 3))
@@ -82,7 +96,6 @@ class MlSpec extends SparkSpec {
   }
 
   test("lasso recovers a noiseless linear relation and evaluates near-perfect") {
-    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val (pred, metrics) = ForecastModels.trainAndEval(
       "lr_test", ForecastModels.lasso(0.0), features.transform(frame), features.transform(frame))
     assert(metrics.r2 > 0.999, s"r2 was ${metrics.r2}")
@@ -91,26 +104,42 @@ class MlSpec extends SparkSpec {
   }
 
   test("segmented harness trains per segment and recombines with unionByName") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (pred, metrics) = ForecastModels.segmented(
-      Seq(
-        "seg_a" -> ((df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") === "A")),
-        "seg_rest" -> ((df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") =!= "A"))),
-      () => ForecastModels.lasso(0.0),
-      Seq("lag_qty_1_day"),
-      frame, frame)
-    assert(metrics.map(_.name) === Seq("seg_a", "seg_rest"))
+    val before = persistentIds
+    val pin = pinned()
+    val parts = segments.map { case (name, in) =>
+      val seg = ForecastModels.segmentFeatures(pin, 1, frame.filter(in))
+      ForecastModels.trainAndEval(name, ForecastModels.lasso(0.0), seg(pin.filter(in)), seg(pin.filter(in)))
+    }
+    val pred = parts.map(_._1).reduce(_ unionByName _)
+    assert(parts.map(_._2.name) === Seq("seg_a", "seg_rest"))
     assert(pred.count() === frame.count())
-    metrics.foreach(m => assert(m.r2 > 0.99))
-    // the caller owns one pin: releasing it releases every pin the harness
-    // made (a key-set check: the map holds weak values, so its size can shrink)
-    pred.unpersist()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    parts.foreach { case (_, m) => assert(m.r2 > 0.99) }
+    // a key-set check: the map holds weak values, so its size can shrink
+    (parts.map(_._1) :+ pin).foreach(_.unpersist())
+    val leaked = persistentIds -- before
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
   }
 
+  test("segmentFeatures re-indexes the pin's vectors exactly as the literal pipeline refitted on the segment") {
+    val pin = pinned()
+    val key = Seq("Country", "StockCode", "InvoiceDate").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(key :+ col("features").cast("string").as("f"): _*).orderBy(key :+ col("f"): _*)
+        .collect().map(_.toSeq).toSeq
+    try for ((_, in) <- segments) {
+      val seg = frame.filter(in)
+      val literal = LiteralHarness.featurePipeline(Seq("lag_qty_1_day")).fit(seg).transform(seg)
+      val derived = ForecastModels.segmentFeatures(pin, 1, seg)(pin.filter(in))
+      assert(rows(derived) === rows(literal))
+    } finally pin.unpersist()
+    // the global vectors index B after A, so they differ from seg_rest's
+    val global = rows(features.transform(frame.filter(segments(1)._2)))
+    val literalRest = rows(LiteralHarness.featurePipeline(Seq("lag_qty_1_day"))
+      .fit(frame.filter(segments(1)._2)).transform(frame.filter(segments(1)._2)))
+    assert(global !== literalRest)
+  }
+
   test("coefficient ranking orders features by absolute weight") {
-    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val model = ForecastModels.lasso(0.0).fit(features.transform(frame))
     val ranked = ForecastModels.coefficientRanking(
       model, Seq("lag_qty_1_day", "CountryIndex", "StockCodeIndex"))

@@ -23,6 +23,17 @@ class CorpusSpec extends SparkSpec {
     assert(rowsOnly === expected, s"unexpected rows-only set: $rowsOnly")
   }
 
+  test("q_ml1 releases every pin it makes") {
+    val d = graft.SparkSpec.Sf0001
+    Corpus.warmShared(spark, d)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val rows = Corpus.all("q_ml1_forecast_kpi")(spark, d).collect()
+    assert(rows.nonEmpty)
+    // a key-set check: the map holds weak values, so its size can shrink
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+  }
+
   test("flagship entry query returns rows on sf0.001") {
     val df = graft.SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.forecast.{Forecast, ReferencePipeline}
-import graft.ml.ForecastModels
+import graft.ml.{ForecastModels, LiteralHarness}
+import graft.ml.ForecastModels.RegMetrics
 
 /** End-to-end replay of the reference pipeline on the Online-Retail-shaped
   * fixture (FIXTURES.md §A1): raw "M/d/yy H:mm" CSV → explicit-schema ingest →
@@ -87,7 +88,7 @@ class RetailFixtureSpec extends SparkSpec {
     features.count()
     val (train, testDf) = ForecastModels.timeSplit(features, "2011-09-01")
     val cols = ForecastModels.numericFeatureCols(features)
-    val fp = ForecastModels.featurePipeline(cols).fit(train)
+    val fp = LiteralHarness.featurePipeline(cols).fit(train)
     val (_, v2) = ForecastModels.trainAndEval(
       "lr_v2", ForecastModels.lasso(0.05), fp.transform(train), fp.transform(testDf))
     val (_, v1drift) = ForecastModels.trainAndEval(
@@ -120,5 +121,35 @@ class RetailFixtureSpec extends SparkSpec {
     val lr = r.scorecards.head
     assert(!lr.mae.isNaN && lr.mae > 0 && !lr.rmse.isNaN)
     assert(!r.maeModel.isNaN && !r.maeBaseline.isNaN)
+  }
+
+  test("lr_seg on runOnSales' pin equals the literal segmented harness bit for bit, with and without referenceCompat") {
+    val bits = java.lang.Double.doubleToRawLongBits _
+    def card(m: RegMetrics) = (m.name, bits(m.mae), bits(m.rmse), bits(m.r2))
+    val inUk = (df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") === RetailFixture.UK)
+    val others = (df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") =!= RetailFixture.UK)
+    for (compat <- Seq(false, true)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val r = ReferencePipeline.runOnSales(cleaned, "2011-09-01", Seq("lr_seg", "lr"), referenceCompat = compat)
+      val lr = ReferencePipeline.runOnSales(cleaned, "2011-09-01", Seq("lr"), referenceCompat = compat)
+      val daily = (if (compat) Forecast.dailySalesCompat(cleaned) else Forecast.dailySales(cleaned)).cache()
+      val wide = if (compat) ReferencePipeline.featureFrameCompat(daily) else ReferencePipeline.featureFrame(daily)
+      val (train, test) = ForecastModels.timeSplit(wide, "2011-09-01")
+      val (union, segments) = LiteralHarness.segmented(
+        Seq("lr_seg_uk" -> inUk, "lr_seg_others" -> others),
+        () => ForecastModels.lasso(0.05), ForecastModels.numericFeatureCols(wide), train, test)
+      try {
+        assert(r.scorecards.map(card) === (segments :+ lr.scorecards.head).map(card), s"referenceCompat=$compat")
+        val kpi = Forecast.kpiGlobalValueWeighted(LiteralHarness.evalAgainstBaseline(daily, union)).head()
+        assert(bits(r.maeModel) === bits(kpi.getAs[Double]("mae_model")))
+        assert(bits(r.maeBaseline) === bits(kpi.getAs[Double]("mae_baseline")))
+        assert(bits(r.valueWeightedReductionPct) === bits(kpi.getAs[Double]("pct_reduction")))
+        assert((r.trainRows, r.testRows) === (lr.trainRows, lr.testRows))
+        info(f"referenceCompat=$compat: " + r.scorecards.map(m => f"${m.name} mae=${m.mae}%.4f").mkString(", ") +
+          f"; value-weighted reduction ${r.valueWeightedReductionPct}%.2f%%")
+      } finally Seq(union, daily).foreach(_.unpersist())
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"referenceCompat=$compat: persistent RDDs left behind: $leaked")
+    }
   }
 }
