@@ -213,14 +213,14 @@ object Forecast {
   /** 6-day moving-average baseline with last-value fallback (W6,
     * Sales_forecast_pyspark.py:1270-1294) — the forecast every model is
     * judged against. */
-  def maBaseline(daily: DataFrame, window: Int = 6): DataFrame =
-    daily.withColumn("baseline_qty", maBaselineCol(window))
+  def maBaseline(daily: DataFrame): DataFrame =
+    daily.withColumn("baseline_qty", maBaselineCol)
 
   /** The [[maBaseline]] column: a series-window expression, so it can ride
     * in the same select as the lag and rolling features. */
-  def maBaselineCol(window: Int = 6): Column = {
+  def maBaselineCol: Column = {
     val qty = col("NetDailyQuantity")
-    val f = seriesW.rowsBetween(-window, -1)
+    val f = seriesW.rowsBetween(-6, -1)
     val ma = sum(qty).over(f).cast(DoubleType) / count(qty).over(f).cast(DoubleType)
     coalesce(ma, lag(qty, 1).over(seriesW).cast(DoubleType))
   }
@@ -230,8 +230,8 @@ object Forecast {
     * null key matches no baseline row in such a join, so it gets null here.
     * Selected with the features, it lets predictions carry their baseline
     * to [[withErrorColumns]] without a join. */
-  def joinedBaselineCol(window: Int = 6): Column =
-    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), maBaselineCol(window))
+  def joinedBaselineCol: Column =
+    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), maBaselineCol)
       .as("baseline_qty")
 
   /** The six error columns over a frame that already carries `prediction`,

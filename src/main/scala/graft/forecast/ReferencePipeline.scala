@@ -24,9 +24,9 @@ import graft.ml.ForecastModels.RegMetrics
   * baseline from the predictions, without a join. The segmented model reads
   * the same pin, with its own indices in place of the global ones. On CSV input
   * (`CsvSource.cleaned`) the lines are already partitioned by series key,
-  * so the dedup, the grain and the windows add no shuffle. Every pin a call
-  * creates (daily grain, assembled frame, each model's predictions) is
-  * released before the `Report` is returned, or the call fails.
+  * so the dedup, the grain and the windows add no shuffle. A call pins only
+  * the daily grain and the assembled frame (predictions stay lazy), and
+  * releases both before the `Report` is returned, or the call fails.
   *
   * A user of the reference runs exactly this flow; `main` prints the same
   * scorecard shape the reference's README publishes.
@@ -69,7 +69,7 @@ object ReferencePipeline {
       windowCols: Seq[Column],
       diffs: DataFrame => DataFrame): DataFrame = {
     val built = diffs(daily.select(
-      daily.columns.map(col).toSeq ++ windowCols :+ Forecast.joinedBaselineCol(): _*))
+      daily.columns.map(col).toSeq ++ windowCols :+ Forecast.joinedBaselineCol: _*))
     val fillCols = built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
     built.na.fill(0.0, fillCols)
   }
@@ -100,10 +100,9 @@ object ReferencePipeline {
       referenceCompat: Boolean = false): Report = {
     require(models.nonEmpty, s"no model named; known models: ${Models.mkString(",")}")
     models.foreach(m => require(Models.contains(m), s"unknown model: $m; known models: ${Models.mkString(",")}"))
-    // every pin, newest first, so each is released before the pins it reads
+    // both pins, newest first, so each is released before the pin it reads
     var pins = List.empty[DataFrame]
     def held(df: DataFrame): DataFrame = { pins ::= df; df }
-    def scored(run: (DataFrame, RegMetrics)): (DataFrame, Seq[RegMetrics]) = (held(run._1), Seq(run._2))
     try {
       val daily = held((if (referenceCompat) Forecast.dailySalesCompat(sales)
         else Forecast.dailySales(sales)).persist(StorageLevel.MEMORY_AND_DISK))
@@ -111,40 +110,35 @@ object ReferencePipeline {
       // their aggregate is the grain's cache barrier (C1)
       val counts = ForecastModels.splitCounts(daily, cutoff).head() // fills the grain under the features
       val wide = if (referenceCompat) featureFrameCompat(daily) else featureFrame(daily)
-      val numeric = ForecastModels.numericFeatureCols(wide)
-      val trainDaily = ForecastModels.timeSplit(daily, cutoff)._1
-      val fp = ForecastModels.featurePipelineOn(numeric, trainDaily, wide)
-      val features = held(ForecastModels.assembled(fp, wide, "baseline_qty").persist(StorageLevel.MEMORY_AND_DISK))
+      val features = held(ForecastModels.assembled(daily, wide, cutoff).persist(StorageLevel.MEMORY_AND_DISK))
       // a noop write of no columns fills the pin in one job (a count takes two)
       features.select().write.format("noop").mode("overwrite").save() // fills the slim features pin (C1)
       val (train, test) = ForecastModels.timeSplit(features, cutoff)
 
+      // per model, one (lazy predictions, scorecard) pair per segment
       val fitted = models.map {
-        case "lr" => scored(ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), train, test))
-        case "rf" => scored(ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), train, test))
-        case "gbt" => scored(ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), train, test))
+        case "lr" => Seq(ForecastModels.trainAndEval("lr_v2", ForecastModels.lasso(0.05), train, test))
+        case "rf" => Seq(ForecastModels.trainAndEval("rf_v3", ForecastModels.randomForest(100), train, test))
+        case "gbt" => Seq(ForecastModels.trainAndEval("gbt_v2", ForecastModels.gbt(100, 0.05), train, test))
         case "lr_seg" =>
-          val parts = Seq("lr_seg_uk" -> (col("Country") === UK), "lr_seg_others" -> (col("Country") =!= UK))
+          val trainDaily = ForecastModels.timeSplit(daily, cutoff)._1
+          Seq("lr_seg_uk" -> (col("Country") === UK), "lr_seg_others" -> (col("Country") =!= UK))
             .map { case (name, in) =>
-              val seg = ForecastModels.segmentFeatures(features, numeric.size, trainDaily.filter(in))
-              scored(ForecastModels.trainAndEval(name, ForecastModels.lasso(0.05), seg(train.filter(in)), seg(test.filter(in))))
+              val seg = ForecastModels.segmentFeatures(features, trainDaily.filter(in))
+              ForecastModels.trainAndEval(name, ForecastModels.lasso(0.05), seg(train.filter(in)), seg(test.filter(in)))
             }
-          val union = held(parts.map(_._1).reduce(_ unionByName _).persist(StorageLevel.MEMORY_AND_DISK))
-          union.select().write.format("noop").mode("overwrite").save() // fills the union, so the segment pins can go
-          parts.foreach(_._1.unpersist())
-          (union, parts.flatMap(_._2))
       }
 
       // KPI for the first model (the reference uses its best LR for the KPI
-      // cut); its predictions carry the baseline, so no join is needed
-      val kpi = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(fitted.head._1)).head()
+      // cut); its predictions, unioned over segments, carry the baseline
+      val kpi = Forecast.kpiGlobalValueWeighted(Forecast.withErrorColumns(fitted.head.map(_._1).reduce(_ unionByName _))).head()
       Report(
         counts.getAs[Long]("train_rows"), counts.getAs[Long]("test_rows"),
-        fitted.flatMap(_._2),
+        fitted.flatten.map(_._2),
         kpi.getAs[Double]("mae_model"),
         kpi.getAs[Double]("mae_baseline"),
         kpi.getAs[Double]("pct_reduction"))
-    } finally pins.foreach(_.unpersist()) // every consumer has materialized, or the call failed
+    } finally pins.foreach(_.unpersist()) // every reader has run, or the call failed
   }
 
   /** Args: [sfDir] [models, comma-separated from lr,lr_seg,rf,gbt; default lr] [cutoff]. */

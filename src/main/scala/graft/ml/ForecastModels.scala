@@ -1,13 +1,13 @@
 package graft.ml
 
 import org.apache.spark.ml.{Estimator, Model, Pipeline, PipelineModel}
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel, VectorAssembler, VectorSlicer}
 import org.apache.spark.ml.regression.{
   GBTRegressor, LinearRegression, LinearRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The reference's ML surface (SURVEY §2.11, M1-M9) with its exact
   * hyperparameter presets: categorical indexing, vector assembly, the seven
@@ -49,25 +49,29 @@ object ForecastModels {
     new Pipeline().setStages(Array(idx, assembler)).fit(train)
   }
 
-  /** The slim assembled frame every model fits and predicts on: the
-    * (Country, StockCode, InvoiceDate) keys, the label, `AvgUnitPrice`, the
-    * `carry` columns and the feature vector — not the wide frame's
-    * individual feature columns. Assemble-then-split equals
+  /** The slim frame both forecast flows pin, fit and predict on: keys,
+    * label, `AvgUnitPrice`, `baseline_qty` and the vector of
+    * `numericFeatureCols(wide)` plus the two indices [[featurePipelineOn]]
+    * fits on `daily`'s rows up to `cutoff`. Assemble-then-split equals
     * split-then-assemble: the time filter is row-local and the assembler's
-    * handleInvalid=skip drops the same null rows either way. Callers pin it
-    * once over the full history and filter it with [[timeSplit]]. */
-  def assembled(features: PipelineModel, frame: DataFrame, carry: String*): DataFrame =
-    features.transform(frame).select(
-      (Seq("Country", "StockCode", "InvoiceDate", LabelCol, "AvgUnitPrice") ++ carry :+ "features")
+    * handleInvalid=skip drops the same null rows either way. Lazy: callers
+    * pin it once over the full history and filter it with [[timeSplit]]. */
+  def assembled(daily: DataFrame, wide: DataFrame, cutoff: String): DataFrame = {
+    val fp = featurePipelineOn(numericFeatureCols(wide), timeSplit(daily, cutoff)._1, wide)
+    fp.transform(wide).select(
+      Seq("Country", "StockCode", "InvoiceDate", LabelCol, "AvgUnitPrice", "baseline_qty", "features")
         .map(col): _*)
+  }
 
   /** Maps a segment's rows of an [[assembled]] `pin` to the pin's columns
-    * with the segment's own indices: the vector keeps its `numericSlots`
-    * leading slots and gets the indices [[featurePipelineOn]] fits on
+    * with the segment's own indices: the vector keeps its leading numeric
+    * slots (all but the two global indices, counted from the vector's ML
+    * attribute metadata) and gets the indices [[featurePipelineOn]] fits on
     * `indexerFrame` (the segment's train rows of the grain) appended. The
     * assembler flattens a vector slot by slot, so this equals the reference's
     * pipeline refitted on the segment, value for value. */
-  def segmentFeatures(pin: DataFrame, numericSlots: Int, indexerFrame: DataFrame): DataFrame => DataFrame = {
+  def segmentFeatures(pin: DataFrame, indexerFrame: DataFrame): DataFrame => DataFrame = {
+    val numericSlots = AttributeGroup.fromStructField(pin.schema("features")).size - 2
     val slicer = new VectorSlicer().setInputCol("features").setOutputCol("numeric")
       .setIndices((0 until numericSlots).toArray)
     def numeric(frame: DataFrame): DataFrame = slicer.transform(frame).drop("features")
@@ -88,16 +92,13 @@ object ForecastModels {
     * grow with the iterations. RandomForest and GBT read their input many
     * times: give them the train rows of a pinned frame.
     *
-    * The predictions (without the feature vector) are pinned for their
-    * consumers (metrics, KPIs) and filled by the first of them. The caller
-    * unpersists them. */
+    * The predictions (without the feature vector) are lazy: each reader
+    * applies the model to `test` again. */
   def fitPredict(
       estimator: Estimator[_ <: Model[_]],
       train: DataFrame,
-      test: DataFrame): DataFrame = {
-    val model: Model[_] = estimator.fit(train)
-    model.transform(test).drop("features").persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      test: DataFrame): DataFrame =
+    estimator.fit(train).transform(test).drop("features")
 
   /** Numeric feature columns present in a feature frame: calendar + lag +
     * rolling + diff (SURVEY §2.6 families). */
@@ -146,12 +147,7 @@ object ForecastModels {
 
   /** M6+M8: [[fitPredict]] then [[evaluate]]. The feature pipeline is fitted
     * ONCE by the caller and reused (the reference redundantly refits it per
-    * model — SURVEY §4.1 flags that as waste).
-    *
-    * The returned predictions stay pinned, because the evaluation and any
-    * downstream KPI re-read them. `Dataset.persist` registers the frame with
-    * the session's CacheManager, which holds it until `unpersist`: the
-    * caller owns the pin and must release it. */
+    * model — SURVEY §4.1 flags that as waste). */
   def trainAndEval(
       name: String,
       estimator: Estimator[_ <: Model[_]],

@@ -5391,26 +5391,21 @@ object Corpus {
     import graft.ml.ForecastModels
     val dl = daily(s, d)
     // Profiled restructure (PERF.md round 4): the indexers fit on the CACHED
-    // pre-feature daily grain in one multi-column pass (identical indices,
-    // no lag-lineage replay); the window + assembly lineage is materialized
-    // ONCE over the full history into a slim pin (keys, label, price,
-    // baseline, vector; the same `ForecastModels.assembled` frame the
-    // reference pipeline pins) from which both the solver's train filter and
-    // the prediction's test filter read; the predictions carry the MA(6)
-    // baseline, so the KPIs need no join; the unused evaluation is skipped.
-    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol(): _*)
-    val featureCols = ForecastModels.numericFeatureCols(features)
-    val (trainDaily, _) = ForecastModels.timeSplit(dl, "1999-09-01")
-    val fp = ForecastModels.featurePipelineOn(featureCols, trainDaily, features)
-    val assembled = ForecastModels.assembled(fp, features, "baseline_qty")
+    // pre-feature daily grain (no lag-lineage replay); the window + assembly
+    // lineage is materialized ONCE into the slim pin the reference pipeline
+    // pins too (`ForecastModels.assembled`), which both the solver's train
+    // filter and the prediction's test filter read; the lazy predictions
+    // carry the MA(6) baseline, so the KPIs need no join; the unused
+    // evaluation is skipped.
+    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol: _*)
+    val assembled = ForecastModels.assembled(dl, features, "1999-09-01")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (train, test) = ForecastModels.timeSplit(assembled, "1999-09-01")
-    // the few KPI rows are collected, so both pins go before the result is read
+    // the few KPI rows are collected, so the pin goes before the result is read
     try {
       val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
       val kpi = Forecast.kpiByCountry(Forecast.withErrorColumns(pred)).orderBy("Country")
-      try s.createDataFrame(java.util.Arrays.asList(kpi.collect(): _*), kpi.schema)
-      finally pred.unpersist()
+      s.createDataFrame(java.util.Arrays.asList(kpi.collect(): _*), kpi.schema)
     } finally assembled.unpersist()
   }
 

@@ -91,9 +91,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val wide = ReferencePipeline.featureFrame(daily)
     // the slim pin's predictions, as runOnSales builds them (the assembler
     // drops the null-date rows: their calendar features are null) ...
-    val fp = ForecastModels.featurePipelineOn(
-      ForecastModels.numericFeatureCols(wide), daily, wide)
-    val pin = ForecastModels.assembled(fp, wide, "baseline_qty").cache()
+    val pin = ForecastModels.assembled(daily, wide, "1999-09-01").cache()
     val (train, test) = ForecastModels.timeSplit(pin, "1999-09-01")
     val modelPred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), train, test)
     // ... and the whole feature frame with a fixed forecast, null-key rows kept
@@ -109,7 +107,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         // boxed equals: bit equality for doubles, value equality for the count
         assert(a != null && a.equals(b), s"$f: carried $a, joined $b")
       }
-    } finally Seq(modelPred, pin, daily).foreach(_.unpersist())
+    } finally Seq(pin, daily).foreach(_.unpersist())
   }
 
   test("the feature frames run every window column in exactly two window sorts") {
@@ -126,8 +124,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val daily = Forecast.dailySales(lines).cache()
     try {
       val wide = ReferencePipeline.featureFrame(daily)
-      val fp = ForecastModels.featurePipelineOn(ForecastModels.numericFeatureCols(wide), daily, wide)
-      for (frame <- Seq(wide, ForecastModels.assembled(fp, wide, "baseline_qty"))) {
+      for (frame <- Seq(wide, ForecastModels.assembled(daily, wide, "1999-09-01"))) {
         val plan = executed(frame)
         assert(collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
         assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan)

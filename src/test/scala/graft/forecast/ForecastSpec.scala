@@ -70,7 +70,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("MA baseline averages the trailing window and falls back to null only at series start") {
-    val base = Forecast.maBaseline(daily, 6)
+    val base = Forecast.maBaseline(daily)
       .filter($"Country" === "A")
       .orderBy("InvoiceDate")
       .select("baseline_qty")

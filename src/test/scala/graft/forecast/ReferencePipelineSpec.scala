@@ -55,9 +55,11 @@ class ReferencePipelineSpec extends SparkSpec {
   test("runOnSales releases every pin it creates") {
     val sales = graft.Tables.salesLines(spark, SparkSpec.Sf0001)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    ReferencePipeline.runOnSales(sales, "1999-09-01", Seq("lr"))
+    val (_, released) = releasedRdds(ReferencePipeline.runOnSales(sales, "1999-09-01", Seq("lr")))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+    // the daily grain and the slim assembled pin; the predictions stay lazy
+    assert(released.size === 2, s"released RDDs: $released")
   }
 
   test("runOnSales rejects a bad model list, and a failing call releases every pin") {

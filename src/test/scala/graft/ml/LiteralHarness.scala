@@ -4,7 +4,6 @@ import org.apache.spark.ml.{Estimator, Model, Pipeline}
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.forecast.Forecast
 import graft.ml.ForecastModels.RegMetrics
@@ -38,9 +37,8 @@ object LiteralHarness {
   /** M8: segmented harness — per segment predicate, refit [[featurePipeline]]
     * on the segment's train rows, train and evaluate one model, and
     * recombine the predictions with unionByName (U1,
-    * Sales_forecast_pyspark.py:1457-1539, 1594). The union is pinned and
-    * filled, the segments' pins are released, and the caller owns the one
-    * pin left. */
+    * Sales_forecast_pyspark.py:1457-1539, 1594). Like the reference, it
+    * caches no predictions. */
   def segmented(
       segments: Seq[(String, DataFrame => DataFrame)],
       mkEstimator: () => Estimator[_ <: Model[_]],
@@ -53,11 +51,7 @@ object LiteralHarness {
       ForecastModels.trainAndEval(
         name, mkEstimator(), features.transform(trainSeg), features.transform(filterFn(test)))
     }
-    val parts = results.map(_._1)
-    val combined = parts.reduce(_ unionByName _).persist(StorageLevel.MEMORY_AND_DISK)
-    combined.count()
-    parts.foreach(_.unpersist())
-    (combined, results.map(_._2))
+    (results.map(_._1).reduce(_ unionByName _), results.map(_._2))
   }
 
   /** Evaluation join (J2 + error columns): predictions ⟕ the MA(6) baseline

@@ -27,9 +27,12 @@ class MlSpec extends SparkSpec {
     * segment (0). */
   private val segments = Seq("seg_a" -> (col("Country") === "A"), "seg_rest" -> (col("Country") =!= "A"))
 
-  /** The slim pin over the synthetic frame, as the pipeline pins it. */
-  private def pinned() =
-    ForecastModels.assembled(features, frame.withColumn("AvgUnitPrice", lit(1.0))).cache()
+  /** The slim pin over the synthetic frame, as the pipeline pins it, with
+    * every row on or before the cutoff, so it indexes as [[features]] does. */
+  private def pinned() = {
+    val wide = frame.withColumn("AvgUnitPrice", lit(1.0)).withColumn("baseline_qty", lit(0.0))
+    ForecastModels.assembled(frame, wide, "2024-12-31").cache()
+  }
 
   private def persistentIds = spark.sparkContext.getPersistentRDDs.keySet
 
@@ -54,14 +57,13 @@ class MlSpec extends SparkSpec {
     val literal = LiteralHarness.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val fast = ForecastModels.featurePipelineOn(
       Seq("lag_qty_1_day"), frame.drop("lag_qty_1_day"), frame)
-    val key = Seq("Country", "StockCode", "InvoiceDate").map(col)
-    val a = literal.transform(frame)
-      .select(key :+ col("CountryIndex") :+ col("StockCodeIndex") :+ col("features").cast("string"): _*)
-      .orderBy(key: _*).collect().map(_.toSeq)
-    val b = fast.transform(frame)
-      .select(key :+ col("CountryIndex") :+ col("StockCodeIndex") :+ col("features").cast("string"): _*)
-      .orderBy(key: _*).collect().map(_.toSeq)
-    assert(a.toSeq === b.toSeq)
+    // the frame repeats keys (dates wrap at 28), so rows sort by every
+    // compared column, not by the key alone
+    val compared = Seq("Country", "StockCode", "InvoiceDate", "CountryIndex", "StockCodeIndex", "f").map(col)
+    def rows(m: org.apache.spark.ml.PipelineModel) = m.transform(frame)
+      .withColumn("f", col("features").cast("string"))
+      .select(compared: _*).orderBy(compared: _*).collect().map(_.toSeq).toSeq
+    assert(rows(literal) === rows(fast))
   }
 
   test("fitPredict returns the same predictions as trainAndEval without the eval passes") {
@@ -69,10 +71,10 @@ class MlSpec extends SparkSpec {
     val (predEval, _) = ForecastModels.trainAndEval(
       "lr_test", ForecastModels.lasso(0.0), assembled, assembled)
     val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.0), assembled, assembled)
-    val key = Seq("Country", "StockCode", "InvoiceDate").map(col)
-    val a = predEval.select(key :+ col("prediction"): _*).orderBy(key: _*).collect().map(_.toSeq)
-    val b = pred.select(key :+ col("prediction"): _*).orderBy(key: _*).collect().map(_.toSeq)
-    assert(a.toSeq === b.toSeq)
+    val compared = Seq("Country", "StockCode", "InvoiceDate", "prediction").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(compared: _*).orderBy(compared: _*).collect().map(_.toSeq).toSeq
+    assert(rows(predEval) === rows(pred))
   }
 
   test("one-pass evaluate equals three single-metric evaluator calls bit for bit") {
@@ -81,18 +83,16 @@ class MlSpec extends SparkSpec {
       col(ForecastModels.LabelCol) + (col("lag_qty_1_day") % 7) * (col("lag_qty_1_day") % 3))
     val assembled = features.transform(noisy)
     val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), assembled, assembled)
-    try {
-      val got = ForecastModels.evaluate("lr_test", pred)
-      def metric(m: String): Double = new RegressionEvaluator()
-        .setLabelCol(ForecastModels.LabelCol).setPredictionCol("prediction").setMetricName(m)
-        .evaluate(pred)
-      val bits = java.lang.Double.doubleToRawLongBits _
-      assert(got.name === "lr_test")
-      assert(bits(got.mae) === bits(metric("mae")))
-      assert(bits(got.rmse) === bits(metric("rmse")))
-      assert(bits(got.r2) === bits(metric("r2")))
-      assert(got.r2 < 1.0 && got.mae > 0.0)
-    } finally pred.unpersist()
+    val got = ForecastModels.evaluate("lr_test", pred)
+    def metric(m: String): Double = new RegressionEvaluator()
+      .setLabelCol(ForecastModels.LabelCol).setPredictionCol("prediction").setMetricName(m)
+      .evaluate(pred)
+    val bits = java.lang.Double.doubleToRawLongBits _
+    assert(got.name === "lr_test")
+    assert(bits(got.mae) === bits(metric("mae")))
+    assert(bits(got.rmse) === bits(metric("rmse")))
+    assert(bits(got.r2) === bits(metric("r2")))
+    assert(got.r2 < 1.0 && got.mae > 0.0)
   }
 
   test("lasso recovers a noiseless linear relation and evaluates near-perfect") {
@@ -107,7 +107,7 @@ class MlSpec extends SparkSpec {
     val before = persistentIds
     val pin = pinned()
     val parts = segments.map { case (name, in) =>
-      val seg = ForecastModels.segmentFeatures(pin, 1, frame.filter(in))
+      val seg = ForecastModels.segmentFeatures(pin, frame.filter(in))
       ForecastModels.trainAndEval(name, ForecastModels.lasso(0.0), seg(pin.filter(in)), seg(pin.filter(in)))
     }
     val pred = parts.map(_._1).reduce(_ unionByName _)
@@ -115,7 +115,7 @@ class MlSpec extends SparkSpec {
     assert(pred.count() === frame.count())
     parts.foreach { case (_, m) => assert(m.r2 > 0.99) }
     // a key-set check: the map holds weak values, so its size can shrink
-    (parts.map(_._1) :+ pin).foreach(_.unpersist())
+    pin.unpersist()
     val leaked = persistentIds -- before
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
   }
@@ -129,7 +129,7 @@ class MlSpec extends SparkSpec {
     try for ((_, in) <- segments) {
       val seg = frame.filter(in)
       val literal = LiteralHarness.featurePipeline(Seq("lag_qty_1_day")).fit(seg).transform(seg)
-      val derived = ForecastModels.segmentFeatures(pin, 1, seg)(pin.filter(in))
+      val derived = ForecastModels.segmentFeatures(pin, seg)(pin.filter(in))
       assert(rows(derived) === rows(literal))
     } finally pin.unpersist()
     // the global vectors index B after A, so they differ from seg_rest's

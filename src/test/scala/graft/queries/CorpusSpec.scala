@@ -27,11 +27,13 @@ class CorpusSpec extends SparkSpec {
     val d = graft.SparkSpec.Sf0001
     Corpus.warmShared(spark, d)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = Corpus.all("q_ml1_forecast_kpi")(spark, d).collect()
+    val (rows, released) = releasedRdds(Corpus.all("q_ml1_forecast_kpi")(spark, d).collect())
     assert(rows.nonEmpty)
     // a key-set check: the map holds weak values, so its size can shrink
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+    // the slim assembled pin only; the predictions stay lazy
+    assert(released.size === 1, s"released RDDs: $released")
   }
 
   test("flagship entry query returns rows on sf0.001") {

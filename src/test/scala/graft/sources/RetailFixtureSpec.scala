@@ -130,7 +130,10 @@ class RetailFixtureSpec extends SparkSpec {
     val others = (df: org.apache.spark.sql.DataFrame) => df.filter(col("Country") =!= RetailFixture.UK)
     for (compat <- Seq(false, true)) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val r = ReferencePipeline.runOnSales(cleaned, "2011-09-01", Seq("lr_seg", "lr"), referenceCompat = compat)
+      val (r, released) =
+        releasedRdds(ReferencePipeline.runOnSales(cleaned, "2011-09-01", Seq("lr_seg", "lr"), referenceCompat = compat))
+      // the daily grain and the one slim pin, which both segments and lr read
+      assert(released.size === 2, s"referenceCompat=$compat: released RDDs: $released")
       val lr = ReferencePipeline.runOnSales(cleaned, "2011-09-01", Seq("lr"), referenceCompat = compat)
       val daily = (if (compat) Forecast.dailySalesCompat(cleaned) else Forecast.dailySales(cleaned)).cache()
       val wide = if (compat) ReferencePipeline.featureFrameCompat(daily) else ReferencePipeline.featureFrame(daily)
@@ -147,7 +150,7 @@ class RetailFixtureSpec extends SparkSpec {
         assert((r.trainRows, r.testRows) === (lr.trainRows, lr.testRows))
         info(f"referenceCompat=$compat: " + r.scorecards.map(m => f"${m.name} mae=${m.mae}%.4f").mkString(", ") +
           f"; value-weighted reduction ${r.valueWeightedReductionPct}%.2f%%")
-      } finally Seq(union, daily).foreach(_.unpersist())
+      } finally daily.unpersist()
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty, s"referenceCompat=$compat: persistent RDDs left behind: $leaked")
     }
