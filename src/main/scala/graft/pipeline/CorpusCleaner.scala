@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Lineage.TruncateOps
@@ -12,91 +12,82 @@ import graft.text.TextFunctions
   * expressed as one declarative DataFrame flow so Catalyst fuses the scan,
   * and each stage's survivors feed the next without materialization.
   *
+  * Every flow is a gate over `(doc_id, text)` followed by one shared dedup
+  * tail, the same split as the DuckDB oracle's `Oracle.cleanChainSql`
+  * (one gate CTE `qf` per query feeding the shared `dedupTailCtes`).
+  *
   * Near-dup removal rule (deterministic and SQL-mirrorable): among each
   * qualifying pair (id1 < id2, Jaccard ≥ threshold) the larger id is
-  * dropped. For transitive canonical keepers over deep clusters, use
-  * [[Dedup.dupClusters]] on the pair set instead.
+  * dropped. [[cleanClustered]] resolves the pair set through
+  * [[Dedup.dupClusters]] instead, for transitive canonical keepers.
   */
 object CorpusCleaner {
 
-  case class Config(
-      minQuality: Double = 0.35,
-      shingleK: Int = 3,
-      jaccardThreshold: Double = 0.1,
-      maxShingleDf: Int = 1000)
+  private val IdCol = "doc_id"
+  private val TextCol = "text"
+  private val MinQuality = 0.35
+  private val ShingleK = 3
+  private val JaccardThreshold = 0.1
+  private val MaxShingleDf = 1000
+  private val MaxContamination = 0.5
 
-  /** Survivors (id + quality score), smallest-id-wins at every stage. */
-  def clean(
-      spark: SparkSession,
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      config: Config = Config()): DataFrame = {
-    // stage 1: quality gate
-    val scored = docs.select(
-      col(idCol), col(textCol),
-      TextFunctions.qualityScore(col(textCol)).as("quality"))
-    val qualified = scored.filter(col("quality") >= config.minQuality)
+  /** Larger id of each qualifying pair. */
+  private def pairwise(pairs: DataFrame): DataFrame =
+    pairs.select(col("id2").as(IdCol)).distinct()
 
-    // stage 2: exact dedup — keep the minimum id per canonical fingerprint
+  /** The heuristic stage-1 gate, left untruncated: the score is cheap and
+    * Catalyst fuses it into the scan. */
+  private def qualityGate(docs: DataFrame): DataFrame =
+    docs.select(col(IdCol), col(TextCol),
+        TextFunctions.qualityScore(col(TextCol)).as("quality"))
+      .filter(col("quality") >= MinQuality)
+
+  /** The dedup tail every flow shares: keep the minimum id per canonical
+    * fingerprint, then drop the near-dups `losers` picks from the
+    * capped-Jaccard pair set. Survivors carry the gate's `keep` column. */
+  private def dedup(qualified: DataFrame, keep: String, losers: DataFrame => DataFrame): DataFrame = {
     val keepers = qualified
-      .groupBy(TextFunctions.fingerprintMd5(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(idCol)
+      .groupBy(TextFunctions.fingerprintMd5(col(TextCol)).as("fp"))
+      .agg(min(col(IdCol)).as(IdCol))
+      .select(IdCol)
     // Materialize the stage boundary: the exact-dedup survivors feed the pair
     // index AND both sides of the final anti-join — without it the
     // scan+score+dedup lineage re-executes per reference. localCheckpoint
     // (not persist) so the blocks are released by the ContextCleaner once the
     // result frame is garbage-collected; a persist would pin a copy in the
     // CacheManager on every invocation for the session lifetime.
-    val exact = qualified.join(keepers, Seq(idCol), "left_semi").truncateLineage()
-
-    // stage 3: near-dup removal — drop the larger id of each high-Jaccard
-    // pair. The shingle-frequency cap is live here (self-consistent
-    // pruned-universe scores, see Dedup.jaccardPairs) and is mirrored
-    // deterministically in the DuckDB oracle (Oracle.q_tp1).
-    val pairs = Dedup.jaccardPairs(exact, idCol, textCol, config.shingleK, config.maxShingleDf)
-      .filter(col("jaccard") >= config.jaccardThreshold)
-    val removed = pairs.select(col("id2").as(idCol)).distinct()
-    exact.join(removed, Seq(idCol), "left_anti")
-      .select(col(idCol), col("quality"))
-      .orderBy(idCol)
+    val exact = qualified.join(keepers, Seq(IdCol), "left_semi").truncateLineage()
+    // The shingle-frequency cap is live here (self-consistent pruned-universe
+    // scores) and is mirrored deterministically in the oracle's `hot`/`pru`
+    // CTEs.
+    val pairs = Dedup.jaccardPairs(exact, IdCol, TextCol, ShingleK, MaxShingleDf)
+      .filter(col("jaccard") >= JaccardThreshold)
+    exact.join(losers(pairs), Seq(IdCol), "left_anti")
+      .select(col(IdCol), col(keep))
+      .orderBy(IdCol)
   }
 
+  /** Survivors (id + quality score), smallest-id-wins at every stage. */
+  def clean(docs: DataFrame): DataFrame =
+    dedup(qualityGate(docs), "quality", pairwise)
+
   /** [[clean]] with a TRAINED quality gate: stage 1 keeps docs whose
-    * model score (any (idCol, score) frame — e.g. the q_t21 ridge
+    * model score (any (doc_id, score) frame — e.g. the q_t21 ridge
     * classifier) clears `minScore`, replacing the heuristic threshold; the
-    * exact-dedup and near-dup stages are unchanged. Survivors carry the
-    * model score. The scores frame joins by id — at 100 TB it is the
-    * output of one scoring pass, co-partitioned on the id key, so the gate
-    * adds one equi-join and no new corpus scan. */
-  def cleanClassified(
-      spark: SparkSession,
-      docs: DataFrame,
-      scores: DataFrame,
-      minScore: Double,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      config: Config = Config()): DataFrame = {
+    * dedup tail is unchanged. Survivors carry the model score. The scores
+    * frame joins by id — at 100 TB it is the output of one scoring pass,
+    * co-partitioned on the id key, so the gate adds one equi-join and no
+    * new corpus scan. */
+  def cleanClassified(docs: DataFrame, scores: DataFrame, minScore: Double): DataFrame = {
     // Materialize the gate: unlike [[clean]]'s cheap heuristic, the score
     // frame carries the whole fit+inference lineage — without a boundary it
     // re-executes in the fingerprint agg, the semi join, AND the pair
     // index.
-    val qualified = docs.select(col(idCol), col(textCol))
-      .join(scores, Seq(idCol))
+    val qualified = docs.select(col(IdCol), col(TextCol))
+      .join(scores, Seq(IdCol))
       .filter(col("score") >= minScore)
       .truncateLineage()
-    val keepers = qualified
-      .groupBy(TextFunctions.fingerprintMd5(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    val exact = qualified.join(keepers, Seq(idCol), "left_semi").truncateLineage()
-    val pairs = Dedup.jaccardPairs(exact, idCol, textCol, config.shingleK, config.maxShingleDf)
-      .filter(col("jaccard") >= config.jaccardThreshold)
-    val removed = pairs.select(col("id2").as(idCol)).distinct()
-    exact.join(removed, Seq(idCol), "left_anti")
-      .select(col(idCol), col("score"))
-      .orderBy(idCol)
+    dedup(qualified, "score", pairwise)
   }
 
   /** Cluster-based variant of [[clean]]: near-dups are resolved through
@@ -106,90 +97,40 @@ object CorpusCleaner {
     * adjacent pairs clear the threshold (b and c both appear as an id2);
     * transitive resolution is the semantically right rule for a 100 TB
     * dedup, at the cost of the label-propagation rounds. */
-  def cleanClustered(
-      spark: SparkSession,
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      config: Config = Config()): DataFrame = {
-    val scored = docs.select(
-      col(idCol), col(textCol),
-      TextFunctions.qualityScore(col(textCol)).as("quality"))
-    val qualified = scored.filter(col("quality") >= config.minQuality)
-    val keepers = qualified
-      .groupBy(TextFunctions.fingerprintMd5(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    val exact = qualified.join(keepers, Seq(idCol), "left_semi").truncateLineage()
-    val pairs = Dedup.jaccardPairs(exact, idCol, textCol, config.shingleK, config.maxShingleDf)
-      .filter(col("jaccard") >= config.jaccardThreshold)
-    // every clustered doc whose label is NOT itself is a non-representative
-    val dropped = Dedup.dupClusters(pairs)
-      .filter(col("label") =!= col("id"))
-      .select(col("id").as(idCol))
-    exact.join(dropped, Seq(idCol), "left_anti")
-      .select(col(idCol), col("quality"))
-      .orderBy(idCol)
-  }
+  def cleanClustered(docs: DataFrame): DataFrame =
+    dedup(qualityGate(docs), "quality", pairs =>
+      // every clustered doc whose label is NOT itself is a non-representative
+      Dedup.dupClusters(pairs)
+        .filter(col("label") =!= col("id"))
+        .select(col("id").as(IdCol)))
 
   /** [[clean]] composed with the decontamination stage: survivors whose
     * distinct word-shingle overlap with the `benchmark` documents reaches
-    * `maxContamination` are dropped (the eval-leakage guard every
-    * pre-training build runs last, after dedup has already shrunk the
-    * corpus). The benchmark gram set is deduplicated and broadcast — at
-    * 100 TB the benchmark suite is tiny next to the corpus, so the probe
-    * adds one map-side join + one doc-keyed aggregate, never a gram-keyed
-    * shuffle of the corpus. Documents too short to shingle carry
-    * contamination 0. */
-  def cleanDecontaminated(
-      spark: SparkSession,
-      docs: DataFrame,
-      benchmark: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      config: Config = Config(),
-      maxContamination: Double = 0.5): DataFrame = {
+    * 0.5 are dropped (the eval-leakage guard every pre-training build runs
+    * last, after dedup has already shrunk the corpus). The benchmark gram
+    * set is deduplicated and broadcast — at 100 TB the benchmark suite is
+    * tiny next to the corpus, so the probe adds one map-side join + one
+    * doc-keyed aggregate, never a gram-keyed shuffle of the corpus.
+    * Documents too short to shingle carry contamination 0. */
+  def cleanDecontaminated(docs: DataFrame, benchmark: DataFrame): DataFrame = {
     def grams(df: DataFrame, cols: Column*): DataFrame =
       df.select(cols :+ explode(TextFunctions.wordShingles(
-        TextFunctions.tokens(TextFunctions.normText(col(textCol))), config.shingleK)).as("gram"): _*)
+        TextFunctions.tokens(TextFunctions.normText(col(TextCol))), ShingleK)).as("gram"): _*)
 
-    val cleaned = clean(spark, docs, idCol, textCol, config)
-    val survivorText = docs.select(col(idCol), col(textCol))
-      .join(cleaned.select(idCol), Seq(idCol), "left_semi")
+    val cleaned = clean(docs)
+    val survivorText = docs.select(col(IdCol), col(TextCol))
+      .join(cleaned.select(IdCol), Seq(IdCol), "left_semi")
     val benchGrams = grams(benchmark).distinct()
     val ratio = col("n_hit").cast("double") / col("n_grams").cast("double")
-    val contam = grams(survivorText, col(idCol))
+    val contam = grams(survivorText, col(IdCol))
       .join(broadcast(benchGrams.withColumn("hit", lit(1))), Seq("gram"), "left")
-      .groupBy(idCol)
+      .groupBy(IdCol)
       .agg(count(lit(1)).as("n_grams"), sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col(idCol), ratio.as("contamination"))
-    cleaned.join(contam, Seq(idCol), "left")
-      .select(col(idCol), col("quality"),
+      .select(col(IdCol), ratio.as("contamination"))
+    cleaned.join(contam, Seq(IdCol), "left")
+      .select(col(IdCol), col("quality"),
         coalesce(col("contamination"), lit(0.0)).as("contamination"))
-      .filter(col("contamination") < maxContamination)
-      .orderBy(idCol)
-  }
-
-  /** Per-stage survivor counts (single row). */
-  def stats(
-      spark: SparkSession,
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      config: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val nInput = docs.count()
-    val scored = docs.select(
-      col(idCol), col(textCol),
-      TextFunctions.qualityScore(col(textCol)).as("quality"))
-    val qualified = scored.filter(col("quality") >= config.minQuality).cache()
-    val nQuality = qualified.count()
-    val nExact = qualified
-      .groupBy(TextFunctions.fingerprintMd5(col(textCol))).agg(min(col(idCol)))
-      .count()
-    val nFinal = clean(spark, docs, idCol, textCol, config).count()
-    qualified.unpersist()
-    Seq((nInput, nQuality, nExact, nFinal))
-      .toDF("n_input", "n_quality", "n_exact_dedup", "n_final")
+      .filter(col("contamination") < MaxContamination)
+      .orderBy(IdCol)
   }
 }

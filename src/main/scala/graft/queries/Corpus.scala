@@ -655,6 +655,10 @@ object Corpus {
   private val ClassifierScoreExpr: String =
     "beta_0 + beta_1 * CAST(x1 AS DOUBLE) + beta_2 * CAST(x2 AS DOUBLE) + beta_3 * CAST(x3 AS DOUBLE)"
 
+  /** The q_t21 classifier's operating point: the score every gate on it
+    * (q_t21's `kept`, q_e13, q_tp7, q_tp15) keeps at or above. */
+  private val ClassifierOperatingPoint = 450.0
+
   /** T21: TRAINED QUALITY CLASSIFIER — the fastText-classifier step of
     * CCNet/FineWeb-style pipelines, deterministic end to end: hashed-TF-IDF
     * features (q_t17's vocabulary-free construction collapsed to three
@@ -670,7 +674,7 @@ object Corpus {
   def qualityClassifier(s: SparkSession, d: String): DataFrame =
     classifierScores(s, d)
       .select(col("doc_id"), col("score"),
-        (col("score") >= lit(450.0)).as("kept"))
+        (col("score") >= lit(ClassifierOperatingPoint)).as("kept"))
       .orderBy("doc_id")
 
   /** ML6: CLASSIFIER OPERATING-POINT SWEEP — the threshold-selection step
@@ -714,7 +718,7 @@ object Corpus {
     * to end by one SQL replay. */
   def cleanCorpusClassified(s: SparkSession, d: String): DataFrame =
     graft.pipeline.CorpusCleaner.cleanClassified(
-      s, Tables.documents(s, d), classifierScores(s, d), minScore = 450.0)
+      Tables.documents(s, d), classifierScores(s, d), minScore = ClassifierOperatingPoint)
 
   /** The FROZEN classifier model: betas + the corpus-wide df table (256
     * rows) + n_docs. This is what production ships to the scoring tier —
@@ -815,7 +819,7 @@ object Corpus {
       if (!batch.isEmpty) {
         scoreWithModel(s, batch.toDF(), model)
           .select(col("doc_id"), col("score"),
-            (col("score") >= lit(450.0)).as("kept"))
+            (col("score") >= lit(ClassifierOperatingPoint)).as("kept"))
           .write.mode("overwrite").parquet(s"$root/out/b$id")
       }
     }
@@ -2329,7 +2333,7 @@ object Corpus {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
     val cleaned = docs.select("doc_id", "text", "source")
-      .join(graft.pipeline.CorpusCleaner.clean(s, docs).select("doc_id"),
+      .join(graft.pipeline.CorpusCleaner.clean(docs).select("doc_id"),
         Seq("doc_id"), "left_semi")
     val merges = trainedMerges(tp5MergeCache, (s, d), cleaned)
     val counts = graft.text.BpeTrain.encodeCounts(cleaned, "doc_id", "text", merges)
@@ -2749,7 +2753,7 @@ object Corpus {
     val docs = Tables.documents(s, d).select("doc_id", "text")
       .unionByName(markupSamples(s))
       .select(col("doc_id"), TextFunctions.stripMarkup(col("text")).as("text"))
-    graft.pipeline.CorpusCleaner.clean(s, docs)
+    graft.pipeline.CorpusCleaner.clean(docs)
   }
 
   /** T23: DOMAIN-LEVEL CURATION — the per-domain caps + blocklist stage of
@@ -3044,7 +3048,11 @@ object Corpus {
     * (for pipeline composition). `stopMin` parameterizes the
     * distinct-stopword floor: the paper's 2 suits English prose; the
     * synthetic corpus carries only "the" from the list, so q_tp12 gates
-    * at 1 — the knob a real pipeline tunes per-language. */
+    * at 1 — the knob a real pipeline tunes per-language. Use the gate as a
+    * projected column, never as a Filter conjunct: Catalyst substitutes an
+    * aliased `txt` (e.g. the eight-regexp markup strip) into every
+    * conjunct of a Filter, and the stage's generated code then outgrows
+    * 64 KB, so Spark drops whole-stage codegen for it. */
   private def gopherPassCol(txt: Column, stopMin: Int): Column = {
     val sigs = gopherSignalCols(txt).toMap
     gopherRuleSet(sigs, stopMin)
@@ -3074,14 +3082,17 @@ object Corpus {
       .unionByName(gopherSamples(s))
     val key = expr("CASE WHEN doc_id >= 4000000 THEN doc_id ELSE doc_id DIV 2 END")
     val wUrl = Window.partitionBy("url_canon")
-    val afterUrl = base
+    // The gate is projected below the URL window and filtered after it: a
+    // predicate on a non-partition column is not pushed through a Window,
+    // so it stays one projected column (see gopherPassCol).
+    val gated = base
       .withColumn("url_raw", messyUrl(id, key))
       .withColumn("url_canon", TextFunctions.canonicalUrl(col("url_raw")))
+      .withColumn("text_clean", TextFunctions.stripMarkup(col("text")))
+      .withColumn("pass_gopher", gopherPassCol(col("text_clean"), stopMin = 1))
       .withColumn("u_min", min("doc_id").over(wUrl))
       .filter(id === col("u_min"))
-    val gated = afterUrl
-      .withColumn("text_clean", TextFunctions.stripMarkup(col("text")))
-      .filter(gopherPassCol(col("text_clean"), stopMin = 1))
+      .filter(col("pass_gopher"))
       .withColumn("domain", regexp_extract(col("url_canon"), "https?://([^/:]+)", 1))
     val wDom = Window.partitionBy("domain")
       .orderBy(md5(id.cast("string")), id)
@@ -3488,7 +3499,7 @@ object Corpus {
       ((nTok - nDist) * 10 <= nTok * 9).as("pass_repetition"))
     classifierScores(s, d).join(sigs, Seq("doc_id"))
       .select(col("doc_id"), col("score"),
-        (col("score") >= lit(450.0)).as("pass_classifier"),
+        (col("score") >= lit(ClassifierOperatingPoint)).as("pass_classifier"),
         col("pass_gopher"), col("pass_repetition"))
       .withColumn("keep",
         col("pass_classifier") && col("pass_gopher") && col("pass_repetition"))
@@ -4265,7 +4276,7 @@ object Corpus {
   /** Composed cleaning pipeline: quality gate → exact dedup → near-dup
     * removal (full SQL oracle). */
   def cleanCorpus(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.CorpusCleaner.clean(s, Tables.documents(s, d))
+    graft.pipeline.CorpusCleaner.clean(Tables.documents(s, d))
 
   /** TP4: PASSAGE-level dedup (the Lee-et-al-style "repeated substring"
     * cleanup at chunk granularity): the corpus is exploded into fixed
@@ -4610,7 +4621,7 @@ object Corpus {
   def cleanCorpusScrubbed(s: SparkSession, d: String): DataFrame = {
     val scrubbed = spanScrubCore(Tables.documents(s, d).select("doc_id", "text"))
       .select(col("doc_id"), col("clean_text").as("text"))
-    graft.pipeline.CorpusCleaner.clean(s, scrubbed)
+    graft.pipeline.CorpusCleaner.clean(scrubbed)
   }
 
   /** TP2: the cluster-resolved cleaning pipeline — near-dups collapsed to
@@ -4618,7 +4629,7 @@ object Corpus {
     * → Jaccard pair graph → dupClusters → keep cluster minima). Full SQL
     * oracle: the tp1 CTE chain composed with the dd6 recursive-CTE closure. */
   def cleanCorpusClustered(s: SparkSession, d: String): DataFrame =
-    graft.pipeline.CorpusCleaner.cleanClustered(s, Tables.documents(s, d))
+    graft.pipeline.CorpusCleaner.cleanClustered(Tables.documents(s, d))
 
   /** TP3: the full pre-training flow — quality gate → exact dedup → near-dup
     * removal → benchmark decontamination, in one declarative lineage. The
@@ -4629,7 +4640,6 @@ object Corpus {
   def cleanCorpusDecontaminated(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     graft.pipeline.CorpusCleaner.cleanDecontaminated(
-      s,
       docs.filter(col("doc_id") % 17 =!= 0),
       docs.filter(col("doc_id") % 17 === 0))
   }

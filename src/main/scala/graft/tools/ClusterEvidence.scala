@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.GraftSession
 import graft.dedup.Dedup
 
 /** Multi-executor execution evidence (builder-side; the driver never runs
@@ -33,6 +33,14 @@ import graft.dedup.Dedup
   *                 recovery path, StreamingSpec's contract — now under a
   *                 REAL executor death), and the final store must equal the
   *                 uninterrupted run's
+  *  - `qkill`      one corpus query (default q_dd6) in RELIABLE-checkpoint
+  *                 mode with an executor SIGKILLed once enough checkpointed
+  *                 RDDs exist: the job must recompute through the loss, and
+  *                 its printed signature must equal the uninterrupted runs'
+  *  - `ivfkill`    the q_e16 streaming IVF maintainer with an executor
+  *                 SIGKILLed after batch 0's marker commits: the maintained
+  *                 layout and the served top-k must equal the uninterrupted
+  *                 run's
   */
 object ClusterEvidence {
 
@@ -430,73 +438,6 @@ object ClusterEvidence {
         assert(afterTop == baseTop,
           s"served top-k diverged after executor kill: base=$baseTop after=$afterTop")
         println("[cluster] ivfkill OK: post-loss layout and served top-k identical")
-
-      case "tp1x" =>
-        // WHERE do q_tp1's seconds go under real executors? At 100x the
-        // cluster wall is 3.9x the same-day local[32] wall (133.6 s vs
-        // 34.3 s on half the cores) — the biggest shape change in the
-        // r14 tier run. Stage the chain
-        // (quality+exact-dedup -> shingle index -> prune -> posting
-        // self-join + pair agg -> scoring+anti-join), then A/B the
-        // pair-generation shapes (v0 = production
-        // SMJ self-join, shuffles the posting mass twice; v1 = one
-        // groupBy(shingle).collect_list + in-list expansion, shuffles it
-        // once). Locally v0-vs-v1 was a measured WASH (PERF.md r12 —
-        // the 113M-pair aggregate dominates both); network shuffle could
-        // flip that, so the rejected-local hypothesis gets re-measured
-        // on the shape it was rejected FOR.
-        import graft.text.{TextFunctions => TF}
-        def stage[T](label: String)(f: => T): T = {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[cluster] tp1x $label: ${(System.nanoTime() - t0) / 1e9}%.1fs")
-          r
-        }
-        val cfgX = graft.pipeline.CorpusCleaner.Config()
-        val docsX = Tables.documents(spark, d)
-        val qualifiedX = docsX.select(
-          col("doc_id"), col("text"),
-          TF.qualityScore(col("text")).as("quality"))
-          .filter(col("quality") >= cfgX.minQuality)
-        val keepersX = qualifiedX
-          .groupBy(TF.fingerprintMd5(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select("doc_id")
-        val exactX = stage("A quality+exact-dedup checkpoint")(
-          qualifiedX.join(keepersX, Seq("doc_id"), "left_semi").localCheckpoint(true))
-        val shingledX = stage("B shingle checkpoint")(
-          Dedup.withShingles(exactX, "text", cfgX.shingleK)
-            .select(col("doc_id").as("doc"), col("shingles")).localCheckpoint(true))
-        val shX = shingledX.select(col("doc"), explode(col("shingles")).as("shingle"))
-        val hotX = shX.groupBy("shingle").count()
-          .filter(col("count") > cfgX.maxShingleDf).select("shingle")
-        val prunedX = stage("C pruned-index checkpoint")(
-          shX.join(hotX, Seq("shingle"), "left_anti").localCheckpoint(true))
-        val baseX = prunedX.select("doc", "shingle")
-        def v0() = baseX.toDF("id1", "shingle")
-          .join(baseX.toDF("id2", "shingle_r"),
-            col("shingle") === col("shingle_r") && col("id1") < col("id2"))
-          .groupBy("id1", "id2").agg(count(lit(1)).as("nc"))
-        def v1() = {
-          val posting = prunedX.groupBy("shingle")
-            .agg(collect_list(col("doc")).as("ds"))
-          val pairsCol = flatten(transform(col("ds"), (x, i) =>
-            transform(slice(col("ds"), i + lit(2),
-              greatest(size(col("ds")) - i - 1, lit(0))),
-              y => struct(least(x, y).as("a"), greatest(x, y).as("b")))))
-          posting.select(explode(pairsCol).as("p"))
-            .select(col("p.a").as("id1"), col("p.b").as("id2"))
-            .groupBy("id1", "id2").agg(count(lit(1)).as("nc"))
-        }
-        for (r <- 1 to 2) {
-          val n0 = stage(s"D v0 self-join + pair agg pass $r")(v0().count())
-          val n1 = stage(s"D v1 collect+expand pass $r")(v1().count())
-          println(s"[cluster] tp1x pairs v0=$n0 v1=$n1 ${
-            if (n0 == n1) "MATCH" else "MISMATCH"}")
-        }
-        stage("E full q_tp1 (production shape, end to end)")(
-          graft.queries.Corpus.all("q_tp1_clean_corpus")(spark, d)
-            .write.format("noop").mode("overwrite").save())
 
       case other =>
         println(s"[cluster] unknown mode $other")

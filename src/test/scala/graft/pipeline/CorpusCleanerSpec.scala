@@ -21,7 +21,7 @@ class CorpusCleanerSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("cleaning pipeline: quality gate, exact dedup, near-dup removal compose") {
-    val survivors = CorpusCleaner.clean(spark, docs)
+    val survivors = CorpusCleaner.clean(docs)
       .select("doc_id").as[Long].collect().toSet
     assert(survivors.contains(0L), "canonical doc must survive")
     assert(!survivors.contains(1L), "exact dup (case/whitespace) must drop")
@@ -30,12 +30,15 @@ class CorpusCleanerSpec extends SparkSpec {
     assert(survivors.contains(4L), "distinct doc must survive")
   }
 
-  test("stage stats are monotonically decreasing") {
-    val s = CorpusCleaner.stats(spark, docs).head()
-    val (nIn, nQ, nEx, nF) = (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
-    assert(nIn === 5L)
-    assert(nIn >= nQ && nQ >= nEx && nEx >= nF)
-    assert(nF === 2L)
+  test("classified cleaning: the score gate, then the same dedup tail; survivors carry the score") {
+    // doc 3 would fail the heuristic gate; here it passes on its score, so
+    // only the hand-made scores decide stage 1 (doc 4 is scored out)
+    val scores = Seq((0L, 0.9), (1L, 0.8), (2L, 0.7), (3L, 0.6), (4L, 0.1))
+      .toDF("doc_id", "score")
+    val survivors = CorpusCleaner.cleanClassified(docs, scores, minScore = 0.5)
+      .as[(Long, Double)].collect().toMap
+    assert(survivors === Map(0L -> 0.9, 3L -> 0.6),
+      "low score gated out; exact dup 1 and near-dup 2 removed; score carried")
   }
 
   test("cluster cleaning keeps ONE representative per component where pairwise keeps two") {
@@ -47,10 +50,10 @@ class CorpusCleanerSpec extends SparkSpec {
     val b = words("beta", 100)
     val c = (a.split(" ").take(50) ++ b.split(" ").take(50)).mkString(" ")
     val docs3 = Seq((10L, a), (11L, b), (12L, c)).toDF("doc_id", "text")
-    val clustered = CorpusCleaner.cleanClustered(spark, docs3)
+    val clustered = CorpusCleaner.cleanClustered(docs3)
       .select("doc_id").as[Long].collect().toSet
     assert(clustered === Set(10L))
-    val pairwise = CorpusCleaner.clean(spark, docs3)
+    val pairwise = CorpusCleaner.clean(docs3)
       .select("doc_id").as[Long].collect().toSet
     assert(pairwise === Set(10L, 11L))
   }
@@ -253,8 +256,13 @@ class CorpusCleanerSpec extends SparkSpec {
   }
 
   test("crawl pipeline: URL pairs collapse, gate fires, domain cap holds") {
-    val rows = graft.queries.Corpus.all("q_tp12_crawl_pipeline")(
-      spark, "/root/testdata/sf0.001").collect()
+    // with the fallback off, a stage whose generated code outgrows 64 KB
+    // fails the query instead of silently running interpreted
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val rows =
+      try graft.queries.Corpus.all("q_tp12_crawl_pipeline")(spark, SparkSpec.Sf0001).collect()
+      finally spark.conf.set("spark.sql.codegen.fallback", fallback)
     assert(rows.nonEmpty)
     val ids = rows.map(_.getLong(0)).toSet
     // stage 1 (canonical-URL dedup) keeps only the even member of every

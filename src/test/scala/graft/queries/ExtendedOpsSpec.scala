@@ -199,7 +199,7 @@ class ExtendedOpsSpec extends SparkSpec {
       val c = r.getAs[Double]("contamination"); c >= 0.0 && c < 0.5
     })
     val cleanedIds = graft.pipeline.CorpusCleaner
-      .clean(spark, Tables.documents(spark, sf).filter(col("doc_id") % 17 =!= 0))
+      .clean(Tables.documents(spark, sf).filter(col("doc_id") % 17 =!= 0))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(out.map(_.getAs[Long]("doc_id")).forall(cleanedIds))
   }
