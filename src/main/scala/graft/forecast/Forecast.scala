@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.Exact
+import graft.functions.{Exact, GraftFunctions}
 
 /** The reference's time-series feature/KPI operators, re-expressed as
   * composable DataFrame transforms.
@@ -24,7 +24,14 @@ import graft.functions.Exact
   *  - window partitions are (Country, StockCode) — fine-grained keys, so the
   *    shuffle spreads evenly and no single partition can exceed one series;
   *    country-level skew (the reference's UK ≈ 86% hazard, SURVEY §4.3) does
-  *    not concentrate on one task because StockCode is part of the key.
+  *    not concentrate on one task because StockCode is part of the key;
+  *  - no sliding frame: the rolling statistics and the MA(6) baseline are
+  *    read from one codegen'd kernel per partitioning over plain `lag`
+  *    columns ([[rollKernel]]), which are offset frames, O(1) per row. A
+  *    sliding-frame aggregate re-aggregates its whole frame for every row,
+  *    and the exact `percentile` sorts a fresh buffer each time; the kernel
+  *    sorts at most a dozen longs and reproduces `percentile`'s
+  *    interpolation bit for bit.
   */
 object Forecast {
 
@@ -85,39 +92,65 @@ object Forecast {
     }
   }
 
-  /** Rolling mean/std/median over the trailing frame [-n, -1] (current row
-    * excluded), per W2/W3/W4 (Sales_forecast_pyspark.py:900-946).
+  /** One rolling-statistics kernel over `w` ([[graft.functions.RollingStatsExpr]]):
+    * a struct with `count_n`, `mean_n`, `std_n` and `median_n` of
+    * NetDailyQuantity over the trailing frame [-n, -1] (current row
+    * excluded) for every width n of `widths`, read from the raw lags
+    * 1..max(widths) over `w`. Spark does not merge these with the equal
+    * lags inside [[lagCols]]' coalesces: the Window lists both. */
+  def rollKernel(w: WindowSpec, widths: Seq[Int]): Column =
+    GraftFunctions.rollingStats((1 to widths.max).map(i => lag(col("NetDailyQuantity"), i).over(w)), widths)
+
+  /** The [[rollKernel]] columns of [[rollingFeatures]], one per partitioning
+    * with frames, named [[DayStats]] and [[DowStats]]: select them with the
+    * other window columns, and read their fields with [[rollCols]] in a
+    * select above ([[selectWithStats]]). */
+  def rollKernels(
+      dayFrames: Seq[Int] = Seq(3, 6, 12),
+      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
+    Seq(DayStats -> (seriesW, dayFrames), DowStats -> (dowW, dowFrames)).collect {
+      case (name, (w, frames)) if frames.nonEmpty => rollKernel(w, frames).as(name)
+    }
+
+  val DayStats = "_roll_stats_day"
+  val DowStats = "_roll_stats_dow"
+
+  /** Rolling mean/std/median over the trailing frame [-n, -1], per W2/W3/W4
+    * (Sales_forecast_pyspark.py:900-946), read from a [[rollKernel]] struct
+    * that has width n.
     *
-    * std uses the explicit sample formula over exact integer sums rather than
-    * stddev_samp so the result is bit-reproducible regardless of partition
-    * merge order (quantities are longs: sum and sum-of-squares are exact).
-    * median uses exact `percentile` — on integer inputs interpolation is
-    * exact in double, unlike percentile_approx which the reference used
-    * (Sales_forecast_pyspark.py:922) and which we expose separately. */
-  def rollStats(w: WindowSpec, frame: Int, suffix: String): Seq[Column] = {
-    val qty = col("NetDailyQuantity")
-    val f = w.rowsBetween(-frame, -1)
-    val n = count(qty).over(f).cast(DoubleType)
-    val s1 = sum(qty).over(f).cast(DoubleType)
-    val s2 = sum(qty * qty).over(f).cast(DoubleType)
-    val mean = s1 / n
-    val std = when(n >= 2, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0))))
-    val med = percentile(qty, lit(0.5)).over(f)
-    Seq(mean.as(s"roll_mean_$suffix"), std.as(s"roll_std_$suffix"), med.as(s"roll_median_$suffix"))
-  }
+    * std is the explicit sample formula over exact long sums rather than
+    * stddev_samp, so it is bit-reproducible whatever the evaluation order.
+    * The median is what the exact `percentile` gives: on long inputs its
+    * interpolation `0.5·lo + 0.5·hi` is exact in double, unlike the
+    * percentile_approx the reference used (Sales_forecast_pyspark.py:922),
+    * which [[rollStatsCompat]] keeps. */
+  def rollStats(stats: Column, frame: Int, suffix: String): Seq[Column] =
+    Seq("mean", "std", "median").map(s => stats.getField(s"${s}_$frame").as(s"roll_${s}_$suffix"))
 
   def rollingFeatures(
       daily: DataFrame,
       dayFrames: Seq[Int] = Seq(3, 6, 12),
       dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame =
-    daily.select(daily.columns.map(col).toSeq ++ rollCols(dayFrames, dowFrames): _*)
+    selectWithStats(daily, rollKernels(dayFrames, dowFrames), rollCols(dayFrames, dowFrames))
 
-  /** The [[rollingFeatures]] columns. */
+  /** The [[rollingFeatures]] columns, read from the [[rollKernels]] columns. */
   def rollCols(
       dayFrames: Seq[Int] = Seq(3, 6, 12),
       dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
-    dayFrames.flatMap(n => rollStats(seriesW, n, s"${n}d")) ++
-      dowFrames.flatMap(n => rollStats(dowW, n, s"${n}_dow"))
+    dayFrames.flatMap(n => rollStats(col(DayStats), n, s"${n}d")) ++
+      dowFrames.flatMap(n => rollStats(col(DowStats), n, s"${n}_dow"))
+
+  /** `df`'s columns and `windowCols` in one select, then `statCols` read
+    * from its [[rollKernels]] columns in a select above, which drops them.
+    * The optimizer does not inline a kernel into each field it reads (it is
+    * not cheap and is read more than once), so each kernel runs once per
+    * row. */
+  def selectWithStats(df: DataFrame, windowCols: Seq[Column], statCols: Seq[Column]): DataFrame = {
+    val windowed = df.select(df.columns.map(col).toSeq ++ windowCols: _*)
+    val kept = windowed.columns.filterNot(c => c == DayStats || c == DowStats).map(col).toSeq
+    windowed.select(kept ++ statCols: _*)
+  }
 
   /** Diff-vs-rolling features (W5, Sales_forecast_pyspark.py:948-966):
     * current value minus the rolling mean/median, for the series frames and
@@ -210,28 +243,26 @@ object Forecast {
     dayFrames.flatMap(n => rollStatsCompat(seriesW, n, s"${n}d")) ++
       dowFrames.flatMap(n => rollStatsCompat(dowW, n, s"${n}_dow"))
 
-  /** 6-day moving-average baseline with last-value fallback (W6,
-    * Sales_forecast_pyspark.py:1270-1294) — the forecast every model is
-    * judged against. */
+  /** 6-day moving-average baseline (W6, Sales_forecast_pyspark.py:1270-1294)
+    * — the forecast every model is judged against. */
   def maBaseline(daily: DataFrame): DataFrame =
     daily.withColumn("baseline_qty", maBaselineCol)
 
-  /** The [[maBaseline]] column: a series-window expression, so it can ride
-    * in the same select as the lag and rolling features. */
-  def maBaselineCol: Column = {
-    val qty = col("NetDailyQuantity")
-    val f = seriesW.rowsBetween(-6, -1)
-    val ma = sum(qty).over(f).cast(DoubleType) / count(qty).over(f).cast(DoubleType)
-    coalesce(ma, lag(qty, 1).over(seriesW).cast(DoubleType))
-  }
+  /** The [[maBaseline]] column: the 6-wide mean of a series [[rollKernel]],
+    * so it can ride in the same select as the lag features. The reference
+    * falls back to the last value where the mean is null; that never
+    * changes a value, because lag 1 is the newest row of the frame: when it
+    * is non-null, so is the mean. */
+  def maBaselineCol: Column = rollKernel(seriesW, Seq(6)).getField("mean_6")
 
-  /** [[maBaselineCol]] as the `baseline_qty` that [[maBaseline]], left-joined
-    * on (Country, StockCode, InvoiceDate), attaches to a row: a row with a
-    * null key matches no baseline row in such a join, so it gets null here.
-    * Selected with the features, it lets predictions carry their baseline
-    * to [[withErrorColumns]] without a join. */
-  def joinedBaselineCol: Column =
-    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), maBaselineCol)
+  /** `ma`, the [[maBaselineCol]] or the `mean_6` field of a series kernel
+    * selected with the features, as the `baseline_qty` that [[maBaseline]],
+    * left-joined on (Country, StockCode, InvoiceDate), attaches to a row: a
+    * row with a null key matches no baseline row in such a join, so it gets
+    * null here. Selected with the features, it lets predictions carry their
+    * baseline to [[withErrorColumns]] without a join. */
+  def joinedBaselineCol(ma: Column = maBaselineCol): Column =
+    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), ma)
       .as("baseline_qty")
 
   /** The six error columns over a frame that already carries `prediction`,

@@ -17,7 +17,9 @@ import graft.ml.ForecastModels.RegMetrics
   * The daily grain is computed ONCE per call and cached; the split-count
   * aggregate fills it, so the sales input is scanned by exactly one Spark
   * job. The indexers are fitted on the cached grain. The feature frame is
-  * one window pass per partitioning, and it carries the MA(6) baseline. It
+  * one window pass per partitioning, holding only `lag` functions: one
+  * codegen'd kernel per partitioning reads the rolling statistics and the
+  * MA(6) baseline it carries from the lags, with no sliding frame. It
   * is never cached itself: one slim assembled pin (keys, label, price,
   * baseline, feature vector) is filled over the full history, every model
   * fits on its train rows and predicts its test rows, and the KPIs read the
@@ -43,9 +45,13 @@ object ReferencePipeline {
 
   /** Feature frame: calendar + 36 lag cols + 18 rolling + 6 diff, rolling
     * nulls filled with 0 (Sales_forecast_pyspark.py:968-982), plus the
-    * MA(6) `baseline_qty` the KPIs are judged against. */
+    * MA(6) `baseline_qty` the KPIs are judged against. The rolling columns
+    * and the baseline are fields of one rolling-stats kernel per
+    * partitioning, so the Windows hold only `lag` functions. */
   def featureFrame(daily: DataFrame): DataFrame =
-    featureFrameOf(daily, Forecast.lagCols() ++ Forecast.rollCols(), Forecast.diffFeatures(_))
+    featureFrameOf(daily, Forecast.lagCols() ++ Forecast.rollKernels(),
+      Forecast.rollCols() :+ Forecast.joinedBaselineCol(col(Forecast.DayStats).getField("mean_6")),
+      Forecast.diffFeatures(_))
 
   /** The reference's LITERAL full-width frame: its 36 rounded lag columns,
     * avg/stddev_samp/percentile_approx rolling stats over both window
@@ -55,21 +61,22 @@ object ReferencePipeline {
     * (Sales_forecast_pyspark.py:611-647, 900-982, 1006-1061). Carries
     * `baseline_qty` too. */
   def featureFrameCompat(daily: DataFrame): DataFrame =
-    featureFrameOf(daily, Forecast.lagColsCompat ++ Forecast.rollColsCompat(),
+    featureFrameOf(daily, Forecast.lagColsCompat ++ Forecast.rollColsCompat() :+ Forecast.joinedBaselineCol(), Seq(),
       Forecast.diffFeatures(_, dayFrames = Seq(3, 6, 12), dowFrames = Seq(3, 4, 5)))
 
-  /** Every lag and rolling column of both window families, and the MA(6)
-    * baseline, in ONE select: one Window and one sort per partitioning.
-    * The diffs and the null fill are projections over it. The columns equal
-    * the `diffFeatures(rollingFeatures(lagFeatures(daily)))` composition in
+  /** Every window column of both window families in ONE select, one Window
+    * and one sort per partitioning, with `statCols` read from its kernels in
+    * a projection above ([[Forecast.selectWithStats]]). The diffs and the
+    * null fill are projections too. The columns equal the
+    * `diffFeatures(rollingFeatures(lagFeatures(daily)))` composition in
     * name, order and value, with `baseline_qty` between the rolling and the
     * diff columns. */
   private def featureFrameOf(
       daily: DataFrame,
       windowCols: Seq[Column],
+      statCols: Seq[Column],
       diffs: DataFrame => DataFrame): DataFrame = {
-    val built = diffs(daily.select(
-      daily.columns.map(col).toSeq ++ windowCols :+ Forecast.joinedBaselineCol: _*))
+    val built = diffs(Forecast.selectWithStats(daily, windowCols, statCols))
     val fillCols = built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
     built.na.fill(0.0, fillCols)
   }

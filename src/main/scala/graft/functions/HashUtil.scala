@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -386,6 +388,61 @@ object HashUtil {
       b += 1
     }
     sig
+  }
+
+  /** Trailing-frame statistics from lag values: for each width n of
+    * `widths`, over the values of the first n lags (`lags(i)` is lag i+1,
+    * null where `present(i)` is false), four slots of the returned row:
+    *  - count: the non-null values;
+    *  - mean: the long sum as a double over the count as a double;
+    *  - std: `sqrt((s2 - s1*s1/n) / (n-1))` over the long sums s1 and s2 of
+    *    the values and their squares (wrapping like non-ANSI Spark), null
+    *    when n < 2;
+    *  - median: `percentile`'s interpolation over the sorted values,
+    *    `(hi-pos)*v(lo) + (pos-lo)*v(hi)` at `pos = 0.5*(n-1)`.
+    * Mean and median are null on an empty frame. Each operation is the one
+    * Spark's sliding-frame `count`/`sum`/`percentile` columns apply, in the
+    * same order, so the doubles are bit-equal. `sorted` is scratch space of
+    * at least `lags.length` slots. */
+  def rollingStats(lags: Array[Long], present: Array[Boolean], widths: Array[Int],
+      sorted: Array[Long]): InternalRow = {
+    val out = new Array[Any](4 * widths.length)
+    var w = 0
+    while (w < widths.length) {
+      var c = 0
+      var s1 = 0L
+      var s2 = 0L
+      var i = 0
+      while (i < widths(w)) {
+        if (present(i)) {
+          val v = lags(i)
+          s1 += v
+          s2 += v * v
+          var j = c // insertion sort: at most a dozen values
+          while (j > 0 && sorted(j - 1) > v) { sorted(j) = sorted(j - 1); j -= 1 }
+          sorted(j) = v
+          c += 1
+        }
+        i += 1
+      }
+      out(4 * w) = c.toLong
+      if (c > 0) {
+        val n = c.toDouble
+        val d1 = s1.toDouble
+        out(4 * w + 1) = d1 / n
+        if (c >= 2) out(4 * w + 2) = math.sqrt((s2.toDouble - d1 * d1 / n) / (n - 1.0))
+        val pos = (c - 1).toDouble * 0.5
+        val lo = math.floor(pos).toInt
+        val hi = math.ceil(pos).toInt
+        val vlo = sorted(lo)
+        val vhi = sorted(hi)
+        out(4 * w + 3) =
+          if (hi == lo || vhi == vlo) vlo.toDouble
+          else (hi.toDouble - pos) * vlo.toDouble + (pos - lo.toDouble) * vhi.toDouble
+      }
+      w += 1
+    }
+    new GenericInternalRow(out)
   }
 
   /** Per-list token hit counts in ONE pass: each token is looked up in

@@ -5407,7 +5407,7 @@ object Corpus {
     // filter and the prediction's test filter read; the lazy predictions
     // carry the MA(6) baseline, so the KPIs need no join; the unused
     // evaluation is skipped.
-    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol: _*)
+    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol(): _*)
     val assembled = ForecastModels.assembled(dl, features, "1999-09-01")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (train, test) = ForecastModels.timeSplit(assembled, "1999-09-01")

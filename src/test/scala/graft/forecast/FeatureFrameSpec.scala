@@ -5,17 +5,22 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{OffsetWindowFunction, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SparkSpec, Tables}
+import graft.functions.RollingStatsExpr
 import graft.ml.{ForecastModels, LiteralHarness}
 import graft.sources.CsvSource
 
@@ -74,6 +79,46 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** The rolling columns and the MA(6) baseline as the sliding-frame
+    * aggregates that the rolling-stats kernel replaced. */
+  private def slidingFrameCols: Seq[Column] = {
+    val qty = col("NetDailyQuantity")
+    def stats(w: WindowSpec, frame: Int, suffix: String): Seq[Column] = {
+      val f = w.rowsBetween(-frame, -1)
+      val n = count(qty).over(f).cast(DoubleType)
+      val s1 = sum(qty).over(f).cast(DoubleType)
+      val s2 = sum(qty * qty).over(f).cast(DoubleType)
+      Seq((s1 / n).as(s"roll_mean_$suffix"),
+        when(n >= 2, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0)))).as(s"roll_std_$suffix"),
+        percentile(qty, lit(0.5)).over(f).as(s"roll_median_$suffix"))
+    }
+    val f6 = Forecast.seriesW.rowsBetween(-6, -1)
+    Seq(3, 6, 12).flatMap(n => stats(Forecast.seriesW, n, s"${n}d")) ++
+      Seq(3, 4, 5).flatMap(n => stats(Forecast.dowW, n, s"${n}_dow")) :+
+      coalesce(sum(qty).over(f6).cast(DoubleType) / count(qty).over(f6).cast(DoubleType),
+        lag(qty, 1).over(Forecast.seriesW).cast(DoubleType)).as("baseline_qty")
+  }
+
+  test("the kernel's rolling columns and baseline equal the sliding-frame aggregates bit for bit") {
+    // sf0.001 plus 7 series of returns and repeated quantities in -20..20
+    val returns = spark.range(0, 2100).select(
+      lit("ZZ").as("Country"),
+      pmod(col("id"), lit(7L)).cast("string").as("StockCode"),
+      date_add(lit("1999-01-01").cast("date"), (col("id") / 7).cast("int")).as("InvoiceDate"),
+      (pmod(xxhash64(col("id")), lit(41L)) - 20).as("Quantity"),
+      lit(1.0).as("UnitPrice"),
+      (pmod(xxhash64(col("id")), lit(41L)) - 20).cast("double").as("LineRevenue"))
+    val daily = Forecast.dailySales(sales.unionByName(returns))
+    assert(daily.filter(col("NetDailyQuantity") < 0).count() > 0)
+    val want = daily.select(Keys.map(col) ++ slidingFrameCols: _*)
+    val rolled = Forecast.rollingFeatures(daily).withColumn("baseline_qty", Forecast.maBaselineCol)
+    val wide = ReferencePipeline.featureFrame(daily)
+    val cols = want.columns.toSeq.map(col)
+    assert(digest(rolled.select(cols: _*)) === digest(want))
+    // featureFrame fills the rolling nulls with 0.0, not the baseline's
+    assert(digest(wide.select(cols: _*)) === digest(filled(want)))
+  }
+
   test("the carried baseline_qty equals maBaseline joined on the keys, null keys included") {
     val daily = withNullKeys(Forecast.dailySales(sales))
     try {
@@ -117,6 +162,27 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(collect(plan) { case w: WindowExec => w }.size === 2, plan)
       assert(collect(plan) { case s: SortExec => s }.size === 2, plan)
     } finally daily.unpersist()
+  }
+
+  test("featureFrame's Windows hold only lag functions and each partitioning's kernel runs once, without codegen fallback") {
+    val daily = Forecast.dailySales(sales).cache()
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val plan = executed(ReferencePipeline.featureFrame(daily))
+      val windows = collect(plan) { case w: WindowExec => w }
+      assert(windows.size === 2, plan)
+      val exprs = windows.flatMap(_.windowExpression)
+      val fns = exprs.flatMap(_.collect { case w: WindowExpression => w.windowFunction })
+      assert(fns.nonEmpty && fns.forall(_.isInstanceOf[OffsetWindowFunction]), fns)
+      assert(exprs.forall(_.find(_.isInstanceOf[AggregateExpression]).isEmpty), exprs)
+      val kernels = collect(plan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect { case k: RollingStatsExpr => k }))
+      assert(kernels.map(_.children.size).sorted === Seq(5, 12), plan)
+    } finally {
+      spark.conf.set("spark.sql.codegen.fallback", fallback)
+      daily.unpersist()
+    }
   }
 
   test("over a cached grain partitioned by series key, the features need no exchange") {

@@ -25,6 +25,14 @@ class ForecastSpec extends SparkSpec {
 
   private lazy val daily = Forecast.dailySales(sales)
 
+  // one series C/Z with returns and a repeated quantity, on consecutive days
+  private lazy val returns = Forecast.dailySales(Seq(
+    ("C", "Z", "2024-02-01", 6L), ("C", "Z", "2024-02-02", -3L), ("C", "Z", "2024-02-03", -3L),
+    ("C", "Z", "2024-02-04", 9L), ("C", "Z", "2024-02-05", 1L)
+  ).toDF("Country", "StockCode", "d", "Quantity")
+    .select(col("Country"), col("StockCode"), to_date(col("d")).as("InvoiceDate"), col("Quantity"),
+      lit(1.0).as("UnitPrice"), col("Quantity").cast("double").as("LineRevenue")))
+
   test("dailySales aggregates to one row per (Country,StockCode,day) with calendar cols") {
     assert(daily.count() === 5)
     val r = daily.filter($"Country" === "A" && $"InvoiceDate" === Date.valueOf("2024-01-01"))
@@ -67,6 +75,38 @@ class ForecastSpec extends SparkSpec {
     assert(stds(0).isNullAt(0))
     assert(stds(1).isNullAt(0)) // one prior row → n-1 = 0 → null
     assert(math.abs(stds(2).getDouble(0) - math.sqrt(50.0)) < 1e-12) // {10,20}
+  }
+
+  test("an even-count median interpolates 0.5·lo + 0.5·hi over negative and repeated quantities") {
+    val r = Forecast.rollingFeatures(returns, Seq(3, 6), Seq())
+      .orderBy("InvoiceDate")
+      .select("roll_median_3d", "roll_median_6d", "roll_mean_6d")
+      .collect()
+    // Feb 3: frame {6, -3} → 0.5·(-3) + 0.5·6
+    assert(r(2).getDouble(0) === 0.5 * -3.0 + 0.5 * 6.0)
+    // Feb 5: 3d frame {-3, -3, 9} → -3; 6d frame sorted {-3, -3, 6, 9} → between -3 and 6
+    assert(r(4).getDouble(0) === -3.0)
+    assert(r(4).getDouble(1) === 0.5 * -3.0 + 0.5 * 6.0)
+    assert(r(4).getDouble(2) === 9.0 / 4.0)
+  }
+
+  test("an empty frame gives null mean, std and median") {
+    val first = Forecast.rollingFeatures(daily)
+      .filter($"Country" === "A" && $"InvoiceDate" === Date.valueOf("2024-01-01"))
+    val roll = first.columns.filter(_.startsWith("roll_"))
+    assert(roll.length === 18)
+    val r = first.select(roll.map(col).toSeq: _*).head()
+    assert(roll.indices.forall(r.isNullAt))
+  }
+
+  test("featureFrame fills the first series row's null roll and diff values with 0.0") {
+    val frame = ReferencePipeline.featureFrame(daily)
+    val filled = frame.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
+    assert(filled.length === 24)
+    val r = frame.filter($"Country" === "A" && $"InvoiceDate" === Date.valueOf("2024-01-01"))
+      .select(filled.map(col).toSeq :+ col("baseline_qty"): _*).head()
+    assert(filled.indices.forall(i => !r.isNullAt(i) && r.getDouble(i) == 0.0))
+    assert(r.isNullAt(filled.length)) // the baseline is not filled
   }
 
   test("MA baseline averages the trailing window and falls back to null only at series start") {

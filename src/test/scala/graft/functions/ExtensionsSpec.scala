@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 class ExtensionsSpec extends SparkSpec {
@@ -34,5 +36,37 @@ class ExtensionsSpec extends SparkSpec {
         spark.sessionState.functionRegistry.functionExists(
           org.apache.spark.sql.catalyst.FunctionIdentifier(n)), s"missing $n")
     }
+  }
+
+  test("rollingStats: generated code and interpreted eval give equal rows, doubles bit-equal") {
+    // 12 lags per row from a hash of the row id: nulls, negatives, repeats
+    // and magnitudes up to ±1e6
+    val lags = (1 to 12).map { i =>
+      val h = xxhash64(col("id"), lit(i))
+      when(pmod(h, lit(5L)) === 0, lit(null).cast("long"))
+        .when(pmod(h, lit(3L)) === 0, pmod(h, lit(7L)) - 3)
+        .otherwise(pmod(h, lit(2000001L)) - 1000000L)
+    }
+    val stats = spark.range(0, 3000, 1, 2)
+      .select(GraftFunctions.rollingStats(lags, Seq(1, 2, 3, 4, 5, 6, 12)).as("s"))
+    def run(wholeStage: String, factoryMode: String): Seq[Seq[Any]] = {
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode", "spark.sql.codegen.fallback")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), wholeStage)
+      spark.conf.set(keys(1), factoryMode)
+      spark.conf.set(keys(2), "false")
+      try stats.collect().toSeq.map(_.getStruct(0).toSeq.map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d)
+          case other => other
+        })
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val generated = run("true", "CODEGEN_ONLY")
+    assert(generated.size === 3000)
+    assert(generated.exists(_.contains(null)))
+    assert(generated === run("false", "NO_CODEGEN"))
   }
 }

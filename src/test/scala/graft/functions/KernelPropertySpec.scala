@@ -91,4 +91,63 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     })
   }
+
+  // lag vectors of up to 12 values: nulls, negatives (returns), repeats
+  // (drawn from a small pool) and magnitudes up to ±1e6
+  private val lagsGen: Gen[Seq[Option[Long]]] = Gen.choose(1, 12).flatMap { k =>
+    val value = Gen.frequency(
+      3 -> Gen.choose(-5L, 5L),
+      3 -> Gen.choose(-1000000L, 1000000L),
+      1 -> Gen.oneOf(-1000000L, 1000000L, 0L))
+    Gen.listOfN(k, Gen.frequency(1 -> Gen.const(None), 4 -> value.map(Some(_))))
+  }
+
+  /** Today's sliding-frame columns written out plainly: count, sum and
+    * sum of squares as longs, the std formula, and `percentile`'s median. */
+  private def naiveStats(frame: Seq[Long]): Seq[Any] = {
+    val n = frame.size
+    val (s1, s2) = (frame.sum, frame.map(v => v * v).sum)
+    val mean = if (n == 0) null else s1.toDouble / n.toDouble
+    val std = if (n < 2) null
+      else math.sqrt((s2.toDouble - s1.toDouble * s1.toDouble / n.toDouble) / (n.toDouble - 1.0))
+    val median = if (n == 0) null else {
+      val xs = frame.sorted
+      val pos = (n - 1) * 0.5
+      val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+      if (xs(lo) == xs(hi)) xs(lo).toDouble
+      else (hi - pos) * xs(lo).toDouble + (pos - lo) * xs(hi).toDouble
+    }
+    Seq(n.toLong, mean, std, median)
+  }
+
+  // doubles compare by their raw bits, so NaN and -0.0 count too
+  private def sameBits(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+    case _ => a == b
+  }
+
+  test("rollingStats == count/mean/std/median of each trailing frame, doubles bit-equal") {
+    check(Prop.forAll(lagsGen.flatMap(l => Gen.someOf(1 to l.size).map(w => (l, w.toSeq)))) {
+      case (lags, ws) =>
+        val widths = if (ws.isEmpty) Seq(lags.size) else ws
+        val row = HashUtil.rollingStats(
+          lags.map(_.getOrElse(0L)).toArray, lags.map(_.isDefined).toArray, widths.toArray,
+          new Array[Long](lags.size))
+        val got = (0 until row.numFields).map(i =>
+          if (row.isNullAt(i)) null else if (i % 4 == 0) row.getLong(i) else row.getDouble(i))
+        val want = widths.flatMap(n => naiveStats(lags.take(n).flatten))
+        got.size == want.size && got.zip(want).forall { case (a, b) => sameBits(a, b) }
+    })
+  }
+
+  test("rollingStats interpolates an even-count median and nulls an empty frame") {
+    val row = HashUtil.rollingStats(Array(5L, -3L, 0L, -3L), Array(true, true, false, true),
+      Array(1, 2, 3, 4), new Array[Long](4))
+    // width 2: {5, -3} → 0.5·(-3) + 0.5·5; width 4: {5, -3, -3} → -3
+    assert(row.getDouble(4 + 3) === 0.5 * -3.0 + 0.5 * 5.0)
+    assert(row.getDouble(12 + 3) === -3.0)
+    val empty = HashUtil.rollingStats(Array(0L, 0L), Array(false, false), Array(2), new Array[Long](2))
+    assert(empty.getLong(0) === 0L)
+    assert((1 to 3).forall(empty.isNullAt))
+  }
 }
