@@ -1,5 +1,7 @@
 package graft.forecast
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -15,23 +17,33 @@ import graft.functions.{Exact, GraftFunctions}
   * lag 1 means the previous *observed* day, not the previous calendar day
   * (Sales_forecast_pyspark.py:613-625).
   *
+  * The paper's window features come from one builder per numeric surface,
+  * [[lagRollFeatures]] and [[lagRollFeaturesCompat]]. Each selects every
+  * distinct (partitioning, column, offset) raw `lag` once, in one Window per
+  * partitioning; everything else is a projection over those raw lags: the
+  * coalesced or rounded lag features, one rolling-stats kernel per
+  * partitioning, the kernel's fields, the key-guarded baseline and the
+  * diffs. A query that reads a few of the columns gets the rest pruned,
+  * except that a kernel it reads keeps all of its widths and raw lags.
+  *
   * Scale notes:
-  *  - every window family with a distinct partitionBy forces one
-  *    shuffle+sort; we use exactly two partitionings (series, series+DayOfWeek)
-  *    and generate all columns of a family in ONE select so the plan stays
-  *    flat (the reference does the same for its 72 lag columns,
-  *    Sales_forecast_pyspark.py:610-647);
+  *  - every window partitioning forces one shuffle+sort; there are exactly
+  *    two (series, series+DayOfWeek), and each holds all of its window
+  *    functions, each once (the reference selects its 72 lag columns in one
+  *    select too, Sales_forecast_pyspark.py:610-647);
   *  - window partitions are (Country, StockCode) — fine-grained keys, so the
   *    shuffle spreads evenly and no single partition can exceed one series;
   *    country-level skew (the reference's UK ≈ 86% hazard, SURVEY §4.3) does
   *    not concentrate on one task because StockCode is part of the key;
-  *  - no sliding frame: the rolling statistics and the MA(6) baseline are
-  *    read from one codegen'd kernel per partitioning over plain `lag`
-  *    columns ([[rollKernel]]), which are offset frames, O(1) per row. A
-  *    sliding-frame aggregate re-aggregates its whole frame for every row,
-  *    and the exact `percentile` sorts a fresh buffer each time; the kernel
-  *    sorts at most a dozen longs and reproduces `percentile`'s
-  *    interpolation bit for bit.
+  *  - no sliding frame in [[lagRollFeatures]]: the rolling statistics and the
+  *    MA(6) baseline are fields of one codegen'd kernel per partitioning
+  *    ([[graft.functions.RollingStatsExpr]]) over the raw lags, which are
+  *    offset frames, O(1) per row. A sliding-frame aggregate re-aggregates
+  *    its whole frame for every row, and the exact `percentile` sorts a fresh
+  *    buffer each time; the kernel sorts at most a dozen longs and reproduces
+  *    `percentile`'s interpolation bit for bit. The kernels sit in a
+  *    projection of their own, so each runs once per row however many fields
+  *    are read.
   */
 object Forecast {
 
@@ -69,117 +81,120 @@ object Forecast {
         Exact.davg(col("UnitPrice")).as("AvgUnitPrice"))
   }
 
-  /** Lag features (W1, Sales_forecast_pyspark.py:605-647): for each lag i,
-    * quantity and price lags over the plain series order, the 6-day cycle
-    * (offset 6i), and the same-weekday series. Nulls (insufficient history)
-    * are coalesced to 0 as in the reference. All columns in ONE select. */
-  def lagFeatures(daily: DataFrame, lags: Seq[Int] = 1 to 6): DataFrame =
-    daily.select(daily.columns.map(col).toSeq ++ lagCols(lags): _*)
+  /** One of the two window partitionings: the name its raw lag columns
+    * carry, and the trailing frames [-n, -1] of its rolling features, whose
+    * columns end in `n` and `suffix`. */
+  private case class Partitioning(name: String, w: WindowSpec, frames: Seq[Int], suffix: String) {
+    def rollSuffix(n: Int): String = s"$n$suffix"
+  }
 
-  /** The [[lagFeatures]] columns, for a select that adds other window
-    * columns over the same two partitionings. */
-  def lagCols(lags: Seq[Int] = 1 to 6): Seq[Column] = {
-    val qty = col("NetDailyQuantity")
-    val price = col("AvgUnitPrice")
-    lags.flatMap { i =>
-      Seq(
-        coalesce(lag(qty, i).over(seriesW), lit(0L)).as(s"lag_qty_${i}_day"),
-        coalesce(lag(price, i).over(seriesW), lit(0.0)).as(s"lag_price_${i}_day"),
-        coalesce(lag(qty, 6 * i).over(seriesW), lit(0L)).as(s"lag_qty_${i}_6cycle"),
-        coalesce(lag(price, 6 * i).over(seriesW), lit(0.0)).as(s"lag_price_${i}_6cycle"),
-        coalesce(lag(qty, i).over(dowW), lit(0L)).as(s"lag_qty_${i}_dow"),
-        coalesce(lag(price, i).over(dowW), lit(0.0)).as(s"lag_price_${i}_dow"))
+  private val Day = Partitioning("day", seriesW, Seq(3, 6, 12), "d")
+  private val Dow = Partitioning("dow", dowW, Seq(3, 4, 5), "_dow")
+
+  /** The window columns of one builder, each selected once: the raw lags,
+    * named by (partitioning, column, offset), and any sliding-frame
+    * aggregate; and the rolling-stats kernels over the raw lags. */
+  private final class LagRollCols {
+    private val windowed = mutable.LinkedHashMap.empty[String, Column]
+    private val kernels = mutable.ArrayBuffer.empty[Column]
+
+    /** The window column `c`, selected once as `name`. */
+    def windowCol(name: String, c: => Column): Column = {
+      windowed.getOrElseUpdate(name, c.as(name))
+      col(name)
+    }
+
+    /** The raw `lag(column, i)` over `p`. */
+    def lagOf(p: Partitioning, column: String, i: Int): Column =
+      windowCol(s"_lag_${p.name}_${column}_$i", lag(col(column), i).over(p.w))
+
+    /** One rolling-stats kernel over `p` ([[graft.functions.RollingStatsExpr]]):
+      * a struct with `count_n`, `mean_n`, `std_n` and `median_n` of
+      * NetDailyQuantity over the trailing frame [-n, -1] (current row
+      * excluded) for every width n of `widths`, read from the raw lags
+      * 1..max(widths). */
+    def rollKernel(p: Partitioning, widths: Seq[Int]): Column = {
+      val name = s"_roll_stats_${p.name}"
+      kernels += GraftFunctions.rollingStats((1 to widths.max).map(lagOf(p, "NetDailyQuantity", _)), widths).as(name)
+      col(name)
+    }
+
+    /** `daily`'s columns and `features`. The window columns go in one
+      * select, one Window per partitioning; the kernels in a projection
+      * above; the features in a projection above that, which drops both. The
+      * optimizer does not inline a kernel into each field it reads (it is
+      * not cheap), so each kernel runs once per row. */
+    def lagRollSelect(daily: DataFrame, features: Seq[Column]): DataFrame = {
+      val kept = daily.columns.toSeq.map(col)
+      daily.select(kept ++ windowed.values: _*)
+        .select(col("*") +: kernels.toSeq: _*)
+        .select(kept ++ features: _*)
     }
   }
 
-  /** One rolling-statistics kernel over `w` ([[graft.functions.RollingStatsExpr]]):
-    * a struct with `count_n`, `mean_n`, `std_n` and `median_n` of
-    * NetDailyQuantity over the trailing frame [-n, -1] (current row
-    * excluded) for every width n of `widths`, read from the raw lags
-    * 1..max(widths) over `w`. Spark does not merge these with the equal
-    * lags inside [[lagCols]]' coalesces: the Window lists both. */
-  def rollKernel(w: WindowSpec, widths: Seq[Int]): Column =
-    GraftFunctions.rollingStats((1 to widths.max).map(i => lag(col("NetDailyQuantity"), i).over(w)), widths)
+  /** The reference's 36 lags (W1, Sales_forecast_pyspark.py:605-647): for
+    * each i in 1..6, quantity and price over the series at offset i, the
+    * 6-day cycle at offset 6i and the same weekday at offset i, in the
+    * reference's column order, each raw lag wrapped by `wrap`. */
+  private def lagCols(b: LagRollCols, qty: String, cycle: String)(wrap: Column => Column): Seq[Column] =
+    for {
+      i <- 1 to 6
+      (p, offset, family) <- Seq((Day, i, "day"), (Day, 6 * i, cycle), (Dow, i, "dow"))
+      (column, short) <- Seq("NetDailyQuantity" -> qty, "AvgUnitPrice" -> "price")
+    } yield wrap(b.lagOf(p, column, offset)).as(s"lag_${short}_${i}_$family")
 
-  /** The [[rollKernel]] columns of [[rollingFeatures]], one per partitioning
-    * with frames, named [[DayStats]] and [[DowStats]]: select them with the
-    * other window columns, and read their fields with [[rollCols]] in a
-    * select above ([[selectWithStats]]). */
-  def rollKernels(
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
-    Seq(DayStats -> (seriesW, dayFrames), DowStats -> (dowW, dowFrames)).collect {
-      case (name, (w, frames)) if frames.nonEmpty => rollKernel(w, frames).as(name)
-    }
+  /** Diff-vs-rolling features (W5, Sales_forecast_pyspark.py:948-966): the
+    * current quantity minus the rolling mean and median of each frame of
+    * `parts`, `stat(p, s, n)` being statistic `s` over frame `n` of `p`. */
+  private def diffCols(parts: Seq[Partitioning])(stat: (Partitioning, String, Int) => Column): Seq[Column] = {
+    val qty = col("NetDailyQuantity").cast(DoubleType)
+    for (p <- parts; n <- p.frames; s <- Seq("mean", "median"))
+      yield (qty - stat(p, s, n)).as(s"diff_qty_${s}_${p.rollSuffix(n)}")
+  }
 
-  val DayStats = "_roll_stats_day"
-  val DowStats = "_roll_stats_dow"
+  /** The 6-day moving-average baseline (W6, Sales_forecast_pyspark.py:1270-1294),
+    * the forecast every model is judged against: the `mean_6` of a series
+    * kernel. The reference falls back to lag 1 where the mean is null; that
+    * never changes a value, because lag 1 is the newest row of the frame:
+    * when it is non-null, so is the mean. It is null on a row with a null
+    * key, as when the baseline is left-joined on (Country, StockCode,
+    * InvoiceDate), so predictions that carry it reach [[withErrorColumns]]
+    * without a join. */
+  private def baselineCol(dayStats: Column): Column =
+    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), dayStats.getField("mean_6"))
+      .as("baseline_qty")
 
-  /** Rolling mean/std/median over the trailing frame [-n, -1], per W2/W3/W4
-    * (Sales_forecast_pyspark.py:900-946), read from a [[rollKernel]] struct
-    * that has width n.
+  /** The paper's window features over the daily grain, unfilled: the 36
+    * lags, nulls (insufficient history) coalesced to 0 as in the reference;
+    * rolling mean, std and median over the series frames 3, 6, 12 and the
+    * same-weekday frames 3, 4, 5 (W2-W4, Sales_forecast_pyspark.py:900-946),
+    * read from one kernel per partitioning; `baseline_qty`; and the diffs
+    * against the series frames.
     *
     * std is the explicit sample formula over exact long sums rather than
     * stddev_samp, so it is bit-reproducible whatever the evaluation order.
     * The median is what the exact `percentile` gives: on long inputs its
     * interpolation `0.5·lo + 0.5·hi` is exact in double, unlike the
     * percentile_approx the reference used (Sales_forecast_pyspark.py:922),
-    * which [[rollStatsCompat]] keeps. */
-  def rollStats(stats: Column, frame: Int, suffix: String): Seq[Column] =
-    Seq("mean", "std", "median").map(s => stats.getField(s"${s}_$frame").as(s"roll_${s}_$suffix"))
-
-  def rollingFeatures(
-      daily: DataFrame,
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame =
-    selectWithStats(daily, rollKernels(dayFrames, dowFrames), rollCols(dayFrames, dowFrames))
-
-  /** The [[rollingFeatures]] columns, read from the [[rollKernels]] columns. */
-  def rollCols(
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
-    dayFrames.flatMap(n => rollStats(col(DayStats), n, s"${n}d")) ++
-      dowFrames.flatMap(n => rollStats(col(DowStats), n, s"${n}_dow"))
-
-  /** `df`'s columns and `windowCols` in one select, then `statCols` read
-    * from its [[rollKernels]] columns in a select above, which drops them.
-    * The optimizer does not inline a kernel into each field it reads (it is
-    * not cheap and is read more than once), so each kernel runs once per
-    * row. */
-  def selectWithStats(df: DataFrame, windowCols: Seq[Column], statCols: Seq[Column]): DataFrame = {
-    val windowed = df.select(df.columns.map(col).toSeq ++ windowCols: _*)
-    val kept = windowed.columns.filterNot(c => c == DayStats || c == DowStats).map(col).toSeq
-    windowed.select(kept ++ statCols: _*)
-  }
-
-  /** Diff-vs-rolling features (W5, Sales_forecast_pyspark.py:948-966):
-    * current value minus the rolling mean/median, for the series frames and
-    * (py:961-966) the same-weekday frames. */
-  def diffFeatures(
-      rolled: DataFrame,
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq()): DataFrame = {
-    val qty = col("NetDailyQuantity").cast(DoubleType)
-    val diffs = dayFrames.flatMap { n =>
-      Seq(
-        (qty - col(s"roll_mean_${n}d")).as(s"diff_qty_mean_${n}d"),
-        (qty - col(s"roll_median_${n}d")).as(s"diff_qty_median_${n}d"))
-    } ++ dowFrames.flatMap { n =>
-      Seq(
-        (qty - col(s"roll_mean_${n}_dow")).as(s"diff_qty_mean_${n}_dow"),
-        (qty - col(s"roll_median_${n}_dow")).as(s"diff_qty_median_${n}_dow"))
-    }
-    rolled.select(rolled.columns.map(col).toSeq ++ diffs: _*)
+    * which [[lagRollFeaturesCompat]] keeps. */
+  def lagRollFeatures(daily: DataFrame): DataFrame = {
+    val b = new LagRollCols
+    val stats = Seq(Day, Dow).map(p => p -> b.rollKernel(p, p.frames)).toMap
+    def stat(p: Partitioning, s: String, n: Int): Column = stats(p).getField(s"${s}_$n")
+    val rolls = for (p <- Seq(Day, Dow); n <- p.frames; s <- Seq("mean", "std", "median"))
+      yield stat(p, s, n).as(s"roll_${s}_${p.rollSuffix(n)}")
+    b.lagRollSelect(daily, lagCols(b, "qty", "6cycle")(coalesce(_, lit(0))) ++ rolls ++
+      (baselineCol(stats(Day)) +: diffCols(Seq(Day))(stat)))
   }
 
   // ---- referenceCompat: the reference's literal numeric surface -------------
   //
-  // The default operators above substitute bit-reproducible constructions
-  // (exact decimal sums, explicit sample-std, exact percentile) for oracle
-  // parity. These compat variants reproduce the reference's LITERAL
-  // arithmetic instead — its roundings, stddev_samp, percentile_approx and
-  // column names — so the end-to-end replay is faithful to what a reference
-  // user's frame actually contains.
+  // The default operators substitute bit-reproducible constructions (exact
+  // decimal sums, explicit sample-std, exact percentile) for oracle parity.
+  // The compat variants reproduce the reference's LITERAL arithmetic
+  // instead — its roundings, stddev_samp, percentile_approx and column
+  // names — so the end-to-end replay is faithful to what a reference user's
+  // frame actually contains.
 
   /** A3 with the reference's 2-decimal rounding of revenue and mean price in
     * the aggregate (round(sum(...), 2) / round(avg(...), 2),
@@ -195,75 +210,27 @@ object Forecast {
         round(avg(col("UnitPrice")), 2).as("AvgUnitPrice"))
   }
 
-  /** The reference's complete 36-column lag batch with its literal
-    * round(coalesce(lag(...), 0), 0) wrap and column names
-    * (lag_quantity_N and lag_price_N over day/6daycycle/dow families,
-    * Sales_forecast_pyspark.py:611-647). All 36 columns in one select —
-    * still exactly two window partitionings. */
-  def lagFeaturesCompat(daily: DataFrame): DataFrame =
-    daily.select(daily.columns.map(col).toSeq ++ lagColsCompat: _*)
-
-  /** The [[lagFeaturesCompat]] columns. */
-  def lagColsCompat: Seq[Column] = {
+  /** The reference's literal window features over the daily grain,
+    * unfilled: its 36 lags with the round(coalesce(lag(...), 0), 0) wrap and
+    * its column names (lag_quantity_N and lag_price_N over the day,
+    * 6daycycle and dow families, Sales_forecast_pyspark.py:611-647);
+    * avg / stddev_samp / percentile_approx(0.5) over the trailing frames of
+    * both partitionings (Sales_forecast_pyspark.py:900-946), sliding-frame
+    * aggregates in the same Windows as the raw lags; `baseline_qty`; and the
+    * diffs against both partitionings' frames (12 columns). */
+  def lagRollFeaturesCompat(daily: DataFrame): DataFrame = {
+    val b = new LagRollCols
     val qty = col("NetDailyQuantity")
-    val price = col("AvgUnitPrice")
-    (1 to 6).flatMap { i =>
-      Seq(
-        round(coalesce(lag(qty, i).over(seriesW), lit(0)), 0).as(s"lag_quantity_${i}_day"),
-        round(coalesce(lag(price, i).over(seriesW), lit(0)), 0).as(s"lag_price_${i}_day"),
-        round(coalesce(lag(qty, 6 * i).over(seriesW), lit(0)), 0).as(s"lag_quantity_${i}_6daycycle"),
-        round(coalesce(lag(price, 6 * i).over(seriesW), lit(0)), 0).as(s"lag_price_${i}_6daycycle"),
-        round(coalesce(lag(qty, i).over(dowW), lit(0)), 0).as(s"lag_quantity_${i}_dow"),
-        round(coalesce(lag(price, i).over(dowW), lit(0)), 0).as(s"lag_price_${i}_dow"))
-    }
+    val aggs = Seq("mean" -> avg(qty), "std" -> stddev_samp(qty),
+      "median" -> percentile_approx(qty, lit(0.5), lit(10000)))
+    def roll(p: Partitioning, s: String, n: Int): String = s"roll_${s}_${p.rollSuffix(n)}"
+    val rolls = for (p <- Seq(Day, Dow); n <- p.frames; (s, agg) <- aggs)
+      yield b.windowCol(roll(p, s, n), agg.over(p.w.rowsBetween(-n, -1)))
+    b.lagRollSelect(daily, lagCols(b, "quantity", "6daycycle")(c => round(coalesce(c, lit(0)), 0)) ++ rolls ++
+      (baselineCol(b.rollKernel(Day, Seq(6))) +: diffCols(Seq(Day, Dow))((p, s, n) => col(roll(p, s, n)))))
   }
 
-  /** The reference's literal rolling stats: avg / stddev_samp /
-    * percentile_approx(0.5) over the trailing frame
-    * (Sales_forecast_pyspark.py:900-946). */
-  def rollStatsCompat(w: WindowSpec, frame: Int, suffix: String): Seq[Column] = {
-    val qty = col("NetDailyQuantity")
-    val f = w.rowsBetween(-frame, -1)
-    Seq(
-      avg(qty).over(f).as(s"roll_mean_$suffix"),
-      stddev_samp(qty).over(f).as(s"roll_std_$suffix"),
-      percentile_approx(qty, lit(0.5), lit(10000)).over(f).as(s"roll_median_$suffix"))
-  }
-
-  def rollingFeaturesCompat(
-      daily: DataFrame,
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): DataFrame =
-    daily.select(daily.columns.map(col).toSeq ++ rollColsCompat(dayFrames, dowFrames): _*)
-
-  /** The [[rollingFeaturesCompat]] columns. */
-  def rollColsCompat(
-      dayFrames: Seq[Int] = Seq(3, 6, 12),
-      dowFrames: Seq[Int] = Seq(3, 4, 5)): Seq[Column] =
-    dayFrames.flatMap(n => rollStatsCompat(seriesW, n, s"${n}d")) ++
-      dowFrames.flatMap(n => rollStatsCompat(dowW, n, s"${n}_dow"))
-
-  /** 6-day moving-average baseline (W6, Sales_forecast_pyspark.py:1270-1294)
-    * — the forecast every model is judged against. */
-  def maBaseline(daily: DataFrame): DataFrame =
-    daily.withColumn("baseline_qty", maBaselineCol)
-
-  /** The [[maBaseline]] column: the 6-wide mean of a series [[rollKernel]],
-    * so it can ride in the same select as the lag features. The reference
-    * falls back to the last value where the mean is null; that never
-    * changes a value, because lag 1 is the newest row of the frame: when it
-    * is non-null, so is the mean. */
-  def maBaselineCol: Column = rollKernel(seriesW, Seq(6)).getField("mean_6")
-
-  /** `ma`, the [[maBaselineCol]] or the `mean_6` field of a series kernel
-    * selected with the features, as the `baseline_qty` that [[maBaseline]],
-    * left-joined on (Country, StockCode, InvoiceDate), attaches to a row: a
-    * row with a null key matches no baseline row in such a join, so it gets
-    * null here. Selected with the features, it lets predictions carry their
-    * baseline to [[withErrorColumns]] without a join. */
-  def joinedBaselineCol(ma: Column = maBaselineCol): Column =
-    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), ma)
-      .as("baseline_qty")
+  // ---- evaluation and KPIs ------------------------------------------------
 
   /** The six error columns over a frame that already carries `prediction`,
     * `baseline_qty` and the actual (Sales_forecast_pyspark.py:1339-1345).
@@ -282,14 +249,14 @@ object Forecast {
   }
 
   /** Evaluation frame (Sales_forecast_pyspark.py:1296-1345): a prediction
-    * column, the MA baseline, and the six error columns. `prediction`
-    * defaults to the naive last-value forecast so the frame is fully
-    * deterministic; ML models plug their own prediction column in via
-    * [[joinedBaselineCol]]. */
+    * column, the MA baseline, and the six error columns. `prediction` is the
+    * naive last-value forecast so the frame is fully deterministic; ML
+    * models carry their own prediction and the baseline of
+    * [[lagRollFeatures]] instead. */
   def evalFrame(daily: DataFrame): DataFrame =
     withErrorColumns(
-      maBaseline(daily)
-        .withColumn("prediction", lag(col("NetDailyQuantity"), 1).over(seriesW).cast(DoubleType)))
+      lagRollFeatures(daily).select(daily.columns.toSeq.map(col) ++ Seq(col("baseline_qty"),
+        lag(col("NetDailyQuantity"), 1).over(seriesW).cast(DoubleType).as("prediction")): _*))
 
   private def kpiAggs: Seq[Column] = Seq(
     Exact.floorAvg(col("abs_err_model"), 9).as("mae_model"),

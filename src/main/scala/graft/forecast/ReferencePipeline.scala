@@ -1,6 +1,6 @@
 package graft.forecast
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -17,9 +17,10 @@ import graft.ml.ForecastModels.RegMetrics
   * The daily grain is computed ONCE per call and cached; the split-count
   * aggregate fills it, so the sales input is scanned by exactly one Spark
   * job. The indexers are fitted on the cached grain. The feature frame is
-  * one window pass per partitioning, holding only `lag` functions: one
-  * codegen'd kernel per partitioning reads the rolling statistics and the
-  * MA(6) baseline it carries from the lags, with no sliding frame. It
+  * one window pass per partitioning that selects each raw `lag` once; the
+  * lag features, one codegen'd rolling-stats kernel per partitioning (the
+  * rolling statistics and the MA(6) baseline the frame carries) and the
+  * diffs are projections over those lags, with no sliding frame. It
   * is never cached itself: one slim assembled pin (keys, label, price,
   * baseline, feature vector) is filled over the full history, every model
   * fits on its train rows and predicts its test rows, and the KPIs read the
@@ -45,13 +46,10 @@ object ReferencePipeline {
 
   /** Feature frame: calendar + 36 lag cols + 18 rolling + 6 diff, rolling
     * nulls filled with 0 (Sales_forecast_pyspark.py:968-982), plus the
-    * MA(6) `baseline_qty` the KPIs are judged against. The rolling columns
-    * and the baseline are fields of one rolling-stats kernel per
-    * partitioning, so the Windows hold only `lag` functions. */
+    * MA(6) `baseline_qty` the KPIs are judged against
+    * ([[Forecast.lagRollFeatures]]). */
   def featureFrame(daily: DataFrame): DataFrame =
-    featureFrameOf(daily, Forecast.lagCols() ++ Forecast.rollKernels(),
-      Forecast.rollCols() :+ Forecast.joinedBaselineCol(col(Forecast.DayStats).getField("mean_6")),
-      Forecast.diffFeatures(_))
+    featureFrameFilled(Forecast.lagRollFeatures(daily))
 
   /** The reference's LITERAL full-width frame: its 36 rounded lag columns,
     * avg/stddev_samp/percentile_approx rolling stats over both window
@@ -59,27 +57,13 @@ object ReferencePipeline {
     * features which, with the two category indexers, form exactly the
     * 73-column assembler set of feature_columns_v3
     * (Sales_forecast_pyspark.py:611-647, 900-982, 1006-1061). Carries
-    * `baseline_qty` too. */
+    * `baseline_qty` too ([[Forecast.lagRollFeaturesCompat]]). */
   def featureFrameCompat(daily: DataFrame): DataFrame =
-    featureFrameOf(daily, Forecast.lagColsCompat ++ Forecast.rollColsCompat() :+ Forecast.joinedBaselineCol(), Seq(),
-      Forecast.diffFeatures(_, dayFrames = Seq(3, 6, 12), dowFrames = Seq(3, 4, 5)))
+    featureFrameFilled(Forecast.lagRollFeaturesCompat(daily))
 
-  /** Every window column of both window families in ONE select, one Window
-    * and one sort per partitioning, with `statCols` read from its kernels in
-    * a projection above ([[Forecast.selectWithStats]]). The diffs and the
-    * null fill are projections too. The columns equal the
-    * `diffFeatures(rollingFeatures(lagFeatures(daily)))` composition in
-    * name, order and value, with `baseline_qty` between the rolling and the
-    * diff columns. */
-  private def featureFrameOf(
-      daily: DataFrame,
-      windowCols: Seq[Column],
-      statCols: Seq[Column],
-      diffs: DataFrame => DataFrame): DataFrame = {
-    val built = diffs(Forecast.selectWithStats(daily, windowCols, statCols))
-    val fillCols = built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_"))
-    built.na.fill(0.0, fillCols)
-  }
+  /** The rolling and diff nulls filled with 0; the baseline keeps its nulls. */
+  private def featureFrameFilled(built: DataFrame): DataFrame =
+    built.na.fill(0.0, built.columns.filter(c => c.startsWith("roll_") || c.startsWith("diff_")))
 
   def run(
       spark: SparkSession,

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -45,11 +44,4 @@ object Exact {
     val unit = math.pow(10, scale.toDouble)
     sum(floor(c * lit(unit))).cast(DoubleType) / lit(unit)
   }
-
-  /** Windowed variants (frame-local exact sum / mean). */
-  def dsumOver(c: Column, w: WindowSpec): Column =
-    sum(dec6(c)).over(w).cast(DoubleType)
-
-  def davgOver(c: Column, w: WindowSpec): Column =
-    dsumOver(c, w) / count(c).over(w).cast(DoubleType)
 }

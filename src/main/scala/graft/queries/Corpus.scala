@@ -347,7 +347,7 @@ object Corpus {
     * baseline frame (the evaluation-join shape). */
   def joinComposite(s: SparkSession, d: String): DataFrame = {
     val dl = daily(s, d)
-    val base = Forecast.maBaseline(dl).select(
+    val base = Forecast.lagRollFeatures(dl).select(
       col("Country"), col("StockCode"), col("InvoiceDate"), col("baseline_qty"))
     dl.select(keyCols :+ col("NetDailyQuantity"): _*)
       .join(base, dailyKeys, "left")
@@ -1991,44 +1991,34 @@ object Corpus {
 
   // ---- windows --------------------------------------------------------------
 
-  /** W1: lag features over series / 6-cycle / same-weekday windows. */
-  def lagFeatures(s: SparkSession, d: String): DataFrame =
-    Forecast.lagFeatures(daily(s, d), 1 to 3)
-      .select(keyCols ++ Seq(
-        col("lag_qty_1_day"), col("lag_qty_2_day"), col("lag_qty_3_day"),
-        col("lag_price_1_day"), col("lag_qty_1_6cycle"), col("lag_qty_1_dow")): _*)
+  /** The keys and `cols` of [[Forecast.lagRollFeatures]] over the daily
+    * grain, in key order; column pruning leaves only the window functions
+    * `cols` read (a rolling-stats kernel keeps all of its raw lags). */
+  private def lagRolled(s: SparkSession, d: String, cols: String*): DataFrame =
+    Forecast.lagRollFeatures(daily(s, d))
+      .select(keyCols ++ cols.map(col): _*)
       .orderBy(keyCols: _*)
 
-  private def rolled(s: SparkSession, d: String): DataFrame =
-    Forecast.rollingFeatures(daily(s, d), Seq(3, 6), Seq(3))
+  /** W1: lag features over series / 6-cycle / same-weekday windows. */
+  def lagFeatures(s: SparkSession, d: String): DataFrame =
+    lagRolled(s, d, "lag_qty_1_day", "lag_qty_2_day", "lag_qty_3_day",
+      "lag_price_1_day", "lag_qty_1_6cycle", "lag_qty_1_dow")
 
   /** W2/W3: rolling mean/std over trailing frames, both window families. */
   def rollingStats(s: SparkSession, d: String): DataFrame =
-    rolled(s, d)
-      .select(keyCols ++ Seq(
-        col("roll_mean_3d"), col("roll_std_3d"),
-        col("roll_mean_6d"), col("roll_std_6d"),
-        col("roll_mean_3_dow")): _*)
-      .orderBy(keyCols: _*)
+    lagRolled(s, d, "roll_mean_3d", "roll_std_3d", "roll_mean_6d", "roll_std_6d", "roll_mean_3_dow")
 
   /** W4: rolling exact median over trailing frames. */
   def rollingMedian(s: SparkSession, d: String): DataFrame =
-    rolled(s, d)
-      .select(keyCols ++ Seq(
-        col("roll_median_3d"), col("roll_median_6d"), col("roll_median_3_dow")): _*)
-      .orderBy(keyCols: _*)
+    lagRolled(s, d, "roll_median_3d", "roll_median_6d", "roll_median_3_dow")
 
   /** W5: diff-vs-rolling features. */
   def diffFeatures(s: SparkSession, d: String): DataFrame =
-    Forecast.diffFeatures(Forecast.rollingFeatures(daily(s, d), Seq(3), Seq()), Seq(3))
-      .select(keyCols ++ Seq(col("diff_qty_mean_3d"), col("diff_qty_median_3d")): _*)
-      .orderBy(keyCols: _*)
+    lagRolled(s, d, "diff_qty_mean_3d", "diff_qty_median_3d")
 
   /** W6: the 6-day moving-average baseline. */
   def maBaseline(s: SparkSession, d: String): DataFrame =
-    Forecast.maBaseline(daily(s, d))
-      .select(keyCols ++ Seq(col("NetDailyQuantity"), col("baseline_qty")): _*)
-      .orderBy(keyCols: _*)
+    lagRolled(s, d, "NetDailyQuantity", "baseline_qty")
 
   /** W4-literal: percentile_approx(qty, 0.5, 10000) as a WINDOW aggregate
     * over the trailing frames — the reference's exact rolling-median form
@@ -5407,7 +5397,9 @@ object Corpus {
     // filter and the prediction's test filter read; the lazy predictions
     // carry the MA(6) baseline, so the KPIs need no join; the unused
     // evaluation is skipped.
-    val features = dl.select(dl.columns.map(col).toSeq ++ Forecast.lagCols(1 to 3) :+ Forecast.joinedBaselineCol(): _*)
+    val lags = for (i <- 1 to 3; family <- Seq("day", "6cycle", "dow"); c <- Seq("qty", "price"))
+      yield col(s"lag_${c}_${i}_$family")
+    val features = Forecast.lagRollFeatures(dl).select(dl.columns.map(col).toSeq ++ lags :+ col("baseline_qty"): _*)
     val assembled = ForecastModels.assembled(dl, features, "1999-09-01")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (train, test) = ForecastModels.timeSplit(assembled, "1999-09-01")

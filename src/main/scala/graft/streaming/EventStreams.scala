@@ -42,14 +42,6 @@ object EventStreams {
         col("window.start").as("hour"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Sliding-window event rate (10-minute windows every 5 minutes). */
-  def slidingRate(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("n_events"))
-
   /** Stream-stream interval join: for each purchase, the clicks by the same
     * user within the preceding `gapMinutes`. Both sides watermark so the
     * join state expires (unbounded state is the classic stream-join failure

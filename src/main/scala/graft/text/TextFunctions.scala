@@ -179,11 +179,6 @@ object TextFunctions {
   def punctCount(c: Column): Column =
     size(regexp_extract_all(c, lit("[.!?,;:]"), lit(0)))
 
-  /** Binary en/other heuristic (superseded by [[langId3]] for real language
-    * ID; kept as the cheap single-list gate). */
-  def langId(toks: Column, threshold: Double = 0.05): Column =
-    when(stopwordRatio(toks) >= threshold, lit("en")).otherwise(lit("other"))
-
   // --- multi-language ID -----------------------------------------------------
   // Per-language profiles: function words (word-level n-gram profile, n = 1)
   // plus the accented-character classes that separate de/fr from en when the

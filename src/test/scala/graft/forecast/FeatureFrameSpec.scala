@@ -24,8 +24,8 @@ import graft.functions.RollingStatsExpr
 import graft.ml.{ForecastModels, LiteralHarness}
 import graft.sources.CsvSource
 
-/** The fused feature frame on sf0.001: it equals the lag → rolling → diff
-  * composition bit for bit, its `baseline_qty` equals the MA(6) baseline
+/** The fused feature frame on sf0.001: it equals the literal lag, rolling
+  * and diff columns bit for bit, its `baseline_qty` equals the MA(6) baseline
   * joined on the keys, KPIs read from it equal the join-based evaluation,
   * and its plan has the shape the reference pipeline relies on. */
 class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -64,37 +64,81 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.queryExecution.executedPlan
   }
 
+  /** The reference's 36 lags written out, each raw lag wrapped by `wrapQty`
+    * or `wrapPrice`. */
+  private def literalLags(qtyName: String, cycle: String,
+      wrapQty: Column => Column, wrapPrice: Column => Column): Seq[Column] = {
+    val (qty, price) = (col("NetDailyQuantity"), col("AvgUnitPrice"))
+    val (s, d) = (Forecast.seriesW, Forecast.dowW)
+    (1 to 6).flatMap { i =>
+      Seq(
+        wrapQty(lag(qty, i).over(s)).as(s"lag_${qtyName}_${i}_day"),
+        wrapPrice(lag(price, i).over(s)).as(s"lag_price_${i}_day"),
+        wrapQty(lag(qty, 6 * i).over(s)).as(s"lag_${qtyName}_${i}_$cycle"),
+        wrapPrice(lag(price, 6 * i).over(s)).as(s"lag_price_${i}_$cycle"),
+        wrapQty(lag(qty, i).over(d)).as(s"lag_${qtyName}_${i}_dow"),
+        wrapPrice(lag(price, i).over(d)).as(s"lag_price_${i}_dow"))
+    }
+  }
+
+  /** The rolling columns, `stats(w, n, suffix)` over the series frames 3, 6,
+    * 12 and the same-weekday frames 3, 4, 5. */
+  private def rollCols(stats: (WindowSpec, Int, String) => Seq[Column]): Seq[Column] =
+    Seq(3, 6, 12).flatMap(n => stats(Forecast.seriesW, n, s"${n}d")) ++
+      Seq(3, 4, 5).flatMap(n => stats(Forecast.dowW, n, s"${n}_dow"))
+
+  /** The reference's rolling columns: avg, stddev_samp and
+    * percentile_approx over the sliding trailing frames. */
+  private def compatRollCols: Seq[Column] = rollCols { (w, frame, suffix) =>
+    val qty = col("NetDailyQuantity")
+    val f = w.rowsBetween(-frame, -1)
+    Seq(avg(qty).over(f).as(s"roll_mean_$suffix"),
+      stddev_samp(qty).over(f).as(s"roll_std_$suffix"),
+      percentile_approx(qty, lit(0.5), lit(10000)).over(f).as(s"roll_median_$suffix"))
+  }
+
+  /** The rolling columns as the sliding-frame aggregates that the
+    * rolling-stats kernel replaced. */
+  private def slidingRollCols: Seq[Column] = rollCols { (w, frame, suffix) =>
+    val qty = col("NetDailyQuantity")
+    val f = w.rowsBetween(-frame, -1)
+    val n = count(qty).over(f).cast(DoubleType)
+    val s1 = sum(qty).over(f).cast(DoubleType)
+    val s2 = sum(qty * qty).over(f).cast(DoubleType)
+    Seq((s1 / n).as(s"roll_mean_$suffix"),
+      when(n >= 2, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0)))).as(s"roll_std_$suffix"),
+      percentile(qty, lit(0.5)).over(f).as(s"roll_median_$suffix"))
+  }
+
+  /** `df` and the quantity minus the rolling mean and median of each frame. */
+  private def withDiffs(df: DataFrame, frames: Seq[String]): DataFrame = {
+    val qty = col("NetDailyQuantity").cast(DoubleType)
+    df.select(col("*") +: frames.flatMap(f => Seq("mean", "median").map(s =>
+      (qty - col(s"roll_${s}_$f")).as(s"diff_qty_${s}_$f"))): _*)
+  }
+
   test("featureFrame and featureFrameCompat equal the lag, rolling and diff composition") {
+    val rounded = (c: Column) => round(coalesce(c, lit(0)), 0)
     val cases = Seq(
       (ReferencePipeline.featureFrame _, Forecast.dailySales(sales),
-        (d: DataFrame) => Forecast.diffFeatures(Forecast.rollingFeatures(Forecast.lagFeatures(d)))),
+        literalLags("qty", "6cycle", coalesce(_, lit(0L)), coalesce(_, lit(0.0))) ++ slidingRollCols,
+        Seq("3d", "6d", "12d")),
       (ReferencePipeline.featureFrameCompat _, Forecast.dailySalesCompat(sales),
-        (d: DataFrame) => Forecast.diffFeatures(
-          Forecast.rollingFeaturesCompat(Forecast.lagFeaturesCompat(d)), Seq(3, 6, 12), Seq(3, 4, 5))))
-    for ((fused, daily, composed) <- cases) {
+        literalLags("quantity", "6daycycle", rounded, rounded) ++ compatRollCols,
+        Seq("3d", "6d", "12d", "3_dow", "4_dow", "5_dow")))
+    for ((fused, daily, windowCols, diffFrames) <- cases) {
       val got = fused(daily).drop("baseline_qty")
-      val want = filled(composed(daily))
+      val want = filled(withDiffs(daily.select(daily.columns.map(col).toSeq ++ windowCols: _*), diffFrames))
       assert(got.columns.toSeq === want.columns.toSeq)
       assert(digest(got) === digest(want))
     }
   }
 
-  /** The rolling columns and the MA(6) baseline as the sliding-frame
-    * aggregates that the rolling-stats kernel replaced. */
+  /** [[slidingRollCols]] and the MA(6) baseline as sliding-frame aggregates. */
   private def slidingFrameCols: Seq[Column] = {
     val qty = col("NetDailyQuantity")
-    def stats(w: WindowSpec, frame: Int, suffix: String): Seq[Column] = {
-      val f = w.rowsBetween(-frame, -1)
-      val n = count(qty).over(f).cast(DoubleType)
-      val s1 = sum(qty).over(f).cast(DoubleType)
-      val s2 = sum(qty * qty).over(f).cast(DoubleType)
-      Seq((s1 / n).as(s"roll_mean_$suffix"),
-        when(n >= 2, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0)))).as(s"roll_std_$suffix"),
-        percentile(qty, lit(0.5)).over(f).as(s"roll_median_$suffix"))
-    }
     val f6 = Forecast.seriesW.rowsBetween(-6, -1)
-    Seq(3, 6, 12).flatMap(n => stats(Forecast.seriesW, n, s"${n}d")) ++
-      Seq(3, 4, 5).flatMap(n => stats(Forecast.dowW, n, s"${n}_dow")) :+
+    slidingRollCols :+
       coalesce(sum(qty).over(f6).cast(DoubleType) / count(qty).over(f6).cast(DoubleType),
         lag(qty, 1).over(Forecast.seriesW).cast(DoubleType)).as("baseline_qty")
   }
@@ -111,7 +155,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val daily = Forecast.dailySales(sales.unionByName(returns))
     assert(daily.filter(col("NetDailyQuantity") < 0).count() > 0)
     val want = daily.select(Keys.map(col) ++ slidingFrameCols: _*)
-    val rolled = Forecast.rollingFeatures(daily).withColumn("baseline_qty", Forecast.maBaselineCol)
+    val rolled = Forecast.lagRollFeatures(daily)
     val wide = ReferencePipeline.featureFrame(daily)
     val cols = want.columns.toSeq.map(col)
     assert(digest(rolled.select(cols: _*)) === digest(want))
@@ -124,7 +168,7 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       val carried = ReferencePipeline.featureFrame(daily).select((Keys :+ "baseline_qty").map(col): _*)
       val joined = daily.select(Keys.map(col): _*)
-        .join(Forecast.maBaseline(daily).select((Keys :+ "baseline_qty").map(col): _*), Keys, "left")
+        .join(daily.select(Keys.map(col) :+ LiteralHarness.maBaseline: _*), Keys, "left")
       assert(digest(carried) === digest(joined))
       for (k <- Seq("InvoiceDate", "Country"))
         assert(carried.filter(col(k).isNull && col("baseline_qty").isNull).count() === 2)
@@ -157,10 +201,17 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("the feature frames run every window column in exactly two window sorts") {
     val daily = Forecast.dailySales(sales).cache()
-    try for (frame <- Seq(ReferencePipeline.featureFrame(daily), ReferencePipeline.featureFrameCompat(daily))) {
+    try for ((frame, sizes) <- Seq(
+        ReferencePipeline.featureFrame(daily) -> Seq(12, 27),
+        ReferencePipeline.featureFrameCompat(daily) -> Seq(21, 31))) {
       val plan = executed(frame)
-      assert(collect(plan) { case w: WindowExec => w }.size === 2, plan)
+      val windows = collect(plan) { case w: WindowExec => w }
+      assert(windows.size === 2, plan)
       assert(collect(plan) { case s: SortExec => s }.size === 2, plan)
+      // each Window lists every window function of its partitioning once
+      val fns = windows.map(_.windowExpression.flatMap(_.collect { case e: WindowExpression => e.canonicalized }))
+      assert(fns.map(_.size).sorted === sizes, plan)
+      for (f <- fns) assert(f.distinct.size === f.size, f)
     } finally daily.unpersist()
   }
 

@@ -44,7 +44,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("lag is previous observed day, not previous calendar day; nulls coalesce to 0") {
-    val lags = Forecast.lagFeatures(daily, Seq(1))
+    val lags = Forecast.lagRollFeatures(daily)
       .filter($"Country" === "A")
       .orderBy("InvoiceDate")
       .select("lag_qty_1_day")
@@ -54,7 +54,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("trailing frame [-n,-1] excludes the current row") {
-    val means = Forecast.rollingFeatures(daily, Seq(3), Seq())
+    val means = Forecast.lagRollFeatures(daily)
       .filter($"Country" === "A")
       .orderBy("InvoiceDate")
       .select("roll_mean_3d")
@@ -67,7 +67,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("rolling std matches the sample formula; singleton frame is null") {
-    val stds = Forecast.rollingFeatures(daily, Seq(3), Seq())
+    val stds = Forecast.lagRollFeatures(daily)
       .filter($"Country" === "A")
       .orderBy("InvoiceDate")
       .select("roll_std_3d")
@@ -78,7 +78,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("an even-count median interpolates 0.5·lo + 0.5·hi over negative and repeated quantities") {
-    val r = Forecast.rollingFeatures(returns, Seq(3, 6), Seq())
+    val r = Forecast.lagRollFeatures(returns)
       .orderBy("InvoiceDate")
       .select("roll_median_3d", "roll_median_6d", "roll_mean_6d")
       .collect()
@@ -91,7 +91,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("an empty frame gives null mean, std and median") {
-    val first = Forecast.rollingFeatures(daily)
+    val first = Forecast.lagRollFeatures(daily)
       .filter($"Country" === "A" && $"InvoiceDate" === Date.valueOf("2024-01-01"))
     val roll = first.columns.filter(_.startsWith("roll_"))
     assert(roll.length === 18)
@@ -110,7 +110,7 @@ class ForecastSpec extends SparkSpec {
   }
 
   test("MA baseline averages the trailing window and falls back to null only at series start") {
-    val base = Forecast.maBaseline(daily)
+    val base = Forecast.lagRollFeatures(daily)
       .filter($"Country" === "A")
       .orderBy("InvoiceDate")
       .select("baseline_qty")

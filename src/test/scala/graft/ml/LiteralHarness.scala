@@ -2,8 +2,9 @@ package graft.ml
 
 import org.apache.spark.ml.{Estimator, Model, Pipeline}
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.forecast.Forecast
 import graft.ml.ForecastModels.RegMetrics
@@ -54,13 +55,21 @@ object LiteralHarness {
     (results.map(_._1).reduce(_ unionByName _), results.map(_._2))
   }
 
+  /** The MA(6) baseline as the reference writes it (W6,
+    * Sales_forecast_pyspark.py:1270-1294): the sliding mean over the
+    * series' trailing frame [-6, -1], falling back to lag 1. */
+  def maBaseline: Column = {
+    val qty = col("NetDailyQuantity")
+    coalesce(avg(qty).over(Forecast.seriesW.rowsBetween(-6, -1)),
+      lag(qty, 1).over(Forecast.seriesW).cast(DoubleType)).as("baseline_qty")
+  }
+
   /** Evaluation join (J2 + error columns): predictions ⟕ the MA(6) baseline
     * over the full history on (Country, StockCode, InvoiceDate), then the
     * error columns (Sales_forecast_pyspark.py:1296-1345). */
   def evalAgainstBaseline(dailyAll: DataFrame, predictions: DataFrame): DataFrame = {
     val keys = Forecast.SeriesKeys :+ "InvoiceDate"
-    val base = Forecast.maBaseline(dailyAll)
-      .select((keys :+ "baseline_qty").map(col): _*)
+    val base = dailyAll.select(keys.map(col) :+ maBaseline: _*)
     val pred = predictions.select(
       (keys ++ Seq("NetDailyQuantity", "AvgUnitPrice", "prediction")).map(col): _*)
     Forecast.withErrorColumns(pred.join(base, keys, "left"))
