@@ -19,11 +19,6 @@ import graft.text.TextFunctions
   */
 object Dedup {
 
-  /** Diagnostic: rounds the last [[dupClusters]]/[[dupClustersStar]] call on
-    * this JVM took to converge (scale spot-checks read it; not part of the
-    * query surface and meaningless under concurrent CC runs). */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
   /** Explicit `checkpointDir` argument wins; otherwise the session-level
     * truncation policy ([[graft.Lineage.CheckpointDirConf]]) decides. */
   private def resolveCheckpointDir(
@@ -650,7 +645,6 @@ object Dedup {
         col("id"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       iters += 1
     }
-    lastCcRounds = iters
     labels
   }
 
@@ -726,7 +720,6 @@ object Dedup {
       sig = nextSig
       iters += 1
     }
-    lastCcRounds = iters
     // at the fixpoint the edge set is a forest of stars rooted at component
     // minima; isolated roots label themselves
     nodes

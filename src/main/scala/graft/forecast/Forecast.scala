@@ -21,10 +21,12 @@ import graft.functions.{Exact, GraftFunctions}
   * [[lagRollFeatures]] and [[lagRollFeaturesCompat]]. Each selects every
   * distinct (partitioning, column, offset) raw `lag` once, in one Window per
   * partitioning; everything else is a projection over those raw lags: the
-  * coalesced or rounded lag features, one rolling-stats kernel per
-  * partitioning, the kernel's fields, the key-guarded baseline and the
-  * diffs. A query that reads a few of the columns gets the rest pruned,
-  * except that a kernel it reads keeps all of its widths and raw lags.
+  * coalesced or rounded lag features, one rolling-stats kernel per trailing
+  * frame, the kernels' fields, the key-guarded baseline and the diffs. A
+  * query that reads a few of the columns gets the rest pruned: plain column
+  * pruning drops every kernel it does not read, and then every raw lag no
+  * column it reads needs (the MA(6) baseline alone runs one kernel over six
+  * series lags).
   *
   * Scale notes:
   *  - every window partitioning forces one shuffle+sort; there are exactly
@@ -36,8 +38,8 @@ import graft.functions.{Exact, GraftFunctions}
   *    country-level skew (the reference's UK ≈ 86% hazard, SURVEY §4.3) does
   *    not concentrate on one task because StockCode is part of the key;
   *  - no sliding frame in [[lagRollFeatures]]: the rolling statistics and the
-  *    MA(6) baseline are fields of one codegen'd kernel per partitioning
-  *    ([[graft.functions.RollingStatsExpr]]) over the raw lags, which are
+  *    MA(6) baseline are fields of one codegen'd kernel per trailing frame
+  *    ([[graft.functions.RollingStatsExpr]]) over its raw lags, which are
   *    offset frames, O(1) per row. A sliding-frame aggregate re-aggregates
   *    its whole frame for every row, and the exact `percentile` sorts a fresh
   *    buffer each time; the kernel sorts at most a dozen longs and reproduces
@@ -93,10 +95,11 @@ object Forecast {
 
   /** The window columns of one builder, each selected once: the raw lags,
     * named by (partitioning, column, offset), and any sliding-frame
-    * aggregate; and the rolling-stats kernels over the raw lags. */
+    * aggregate; and the rolling-stats kernels over the raw lags, one per
+    * trailing frame. */
   private final class LagRollCols {
     private val windowed = mutable.LinkedHashMap.empty[String, Column]
-    private val kernels = mutable.ArrayBuffer.empty[Column]
+    private val kernels = mutable.LinkedHashMap.empty[String, Column]
 
     /** The window column `c`, selected once as `name`. */
     def windowCol(name: String, c: => Column): Column = {
@@ -108,14 +111,14 @@ object Forecast {
     def lagOf(p: Partitioning, column: String, i: Int): Column =
       windowCol(s"_lag_${p.name}_${column}_$i", lag(col(column), i).over(p.w))
 
-    /** One rolling-stats kernel over `p` ([[graft.functions.RollingStatsExpr]]):
-      * a struct with `count_n`, `mean_n`, `std_n` and `median_n` of
-      * NetDailyQuantity over the trailing frame [-n, -1] (current row
-      * excluded) for every width n of `widths`, read from the raw lags
-      * 1..max(widths). */
-    def rollKernel(p: Partitioning, widths: Seq[Int]): Column = {
-      val name = s"_roll_stats_${p.name}"
-      kernels += GraftFunctions.rollingStats((1 to widths.max).map(lagOf(p, "NetDailyQuantity", _)), widths).as(name)
+    /** The rolling-stats kernel over `p`'s trailing frame [-n, -1] (current
+      * row excluded; [[graft.functions.RollingStatsExpr]]), selected once: a
+      * struct with the `mean`, `std` and `median` of NetDailyQuantity, read
+      * from the raw lags 1..n. */
+    def rollKernel(p: Partitioning, n: Int): Column = {
+      val name = s"_roll_stats_${p.name}_$n"
+      kernels.getOrElseUpdate(name,
+        GraftFunctions.rollingStats((1 to n).map(lagOf(p, "NetDailyQuantity", _))).as(name))
       col(name)
     }
 
@@ -127,7 +130,7 @@ object Forecast {
     def lagRollSelect(daily: DataFrame, features: Seq[Column]): DataFrame = {
       val kept = daily.columns.toSeq.map(col)
       daily.select(kept ++ windowed.values: _*)
-        .select(col("*") +: kernels.toSeq: _*)
+        .select(col("*") +: kernels.values.toSeq: _*)
         .select(kept ++ features: _*)
     }
   }
@@ -153,22 +156,22 @@ object Forecast {
   }
 
   /** The 6-day moving-average baseline (W6, Sales_forecast_pyspark.py:1270-1294),
-    * the forecast every model is judged against: the `mean_6` of a series
-    * kernel. The reference falls back to lag 1 where the mean is null; that
-    * never changes a value, because lag 1 is the newest row of the frame:
-    * when it is non-null, so is the mean. It is null on a row with a null
-    * key, as when the baseline is left-joined on (Country, StockCode,
-    * InvoiceDate), so predictions that carry it reach [[withErrorColumns]]
-    * without a join. */
-  private def baselineCol(dayStats: Column): Column =
-    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), dayStats.getField("mean_6"))
+    * the forecast every model is judged against: the `mean` of `b`'s series
+    * kernel over [-6, -1]. The reference falls back to lag 1 where the mean
+    * is null; that never changes a value, because lag 1 is the newest row of
+    * the frame: when it is non-null, so is the mean. It is null on a row
+    * with a null key, as when the baseline is left-joined on (Country,
+    * StockCode, InvoiceDate), so predictions that carry it reach
+    * [[withErrorColumns]] without a join. */
+  private def baselineCol(b: LagRollCols): Column =
+    when((SeriesKeys :+ "InvoiceDate").map(col(_).isNotNull).reduce(_ && _), b.rollKernel(Day, 6).getField("mean"))
       .as("baseline_qty")
 
   /** The paper's window features over the daily grain, unfilled: the 36
     * lags, nulls (insufficient history) coalesced to 0 as in the reference;
     * rolling mean, std and median over the series frames 3, 6, 12 and the
     * same-weekday frames 3, 4, 5 (W2-W4, Sales_forecast_pyspark.py:900-946),
-    * read from one kernel per partitioning; `baseline_qty`; and the diffs
+    * read from one kernel per frame; `baseline_qty`; and the diffs
     * against the series frames.
     *
     * std is the explicit sample formula over exact long sums rather than
@@ -179,12 +182,11 @@ object Forecast {
     * which [[lagRollFeaturesCompat]] keeps. */
   def lagRollFeatures(daily: DataFrame): DataFrame = {
     val b = new LagRollCols
-    val stats = Seq(Day, Dow).map(p => p -> b.rollKernel(p, p.frames)).toMap
-    def stat(p: Partitioning, s: String, n: Int): Column = stats(p).getField(s"${s}_$n")
+    def stat(p: Partitioning, s: String, n: Int): Column = b.rollKernel(p, n).getField(s)
     val rolls = for (p <- Seq(Day, Dow); n <- p.frames; s <- Seq("mean", "std", "median"))
       yield stat(p, s, n).as(s"roll_${s}_${p.rollSuffix(n)}")
     b.lagRollSelect(daily, lagCols(b, "qty", "6cycle")(coalesce(_, lit(0))) ++ rolls ++
-      (baselineCol(stats(Day)) +: diffCols(Seq(Day))(stat)))
+      (baselineCol(b) +: diffCols(Seq(Day))(stat)))
   }
 
   // ---- referenceCompat: the reference's literal numeric surface -------------
@@ -227,7 +229,7 @@ object Forecast {
     val rolls = for (p <- Seq(Day, Dow); n <- p.frames; (s, agg) <- aggs)
       yield b.windowCol(roll(p, s, n), agg.over(p.w.rowsBetween(-n, -1)))
     b.lagRollSelect(daily, lagCols(b, "quantity", "6daycycle")(c => round(coalesce(c, lit(0)), 0)) ++ rolls ++
-      (baselineCol(b.rollKernel(Day, Seq(6))) +: diffCols(Seq(Day, Dow))((p, s, n) => col(roll(p, s, n)))))
+      (baselineCol(b) +: diffCols(Seq(Day, Dow))((p, s, n) => col(roll(p, s, n)))))
   }
 
   // ---- evaluation and KPIs ------------------------------------------------

@@ -18,7 +18,7 @@ import graft.ml.ForecastModels.RegMetrics
   * aggregate fills it, so the sales input is scanned by exactly one Spark
   * job. The indexers are fitted on the cached grain. The feature frame is
   * one window pass per partitioning that selects each raw `lag` once; the
-  * lag features, one codegen'd rolling-stats kernel per partitioning (the
+  * lag features, one codegen'd rolling-stats kernel per trailing frame (the
   * rolling statistics and the MA(6) baseline the frame carries) and the
   * diffs are projections over those lags, with no sliding frame. It
   * is never cached itself: one slim assembled pin (keys, label, price,

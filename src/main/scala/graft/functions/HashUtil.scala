@@ -390,57 +390,50 @@ object HashUtil {
     sig
   }
 
-  /** Trailing-frame statistics from lag values: for each width n of
-    * `widths`, over the values of the first n lags (`lags(i)` is lag i+1,
-    * null where `present(i)` is false), four slots of the returned row:
-    *  - count: the non-null values;
-    *  - mean: the long sum as a double over the count as a double;
-    *  - std: `sqrt((s2 - s1*s1/n) / (n-1))` over the long sums s1 and s2 of
+  /** Trailing-frame statistics from lag values: over the values of the
+    * lags (`lags(i)` is lag i+1, null where `present(i)` is false), the three
+    * slots of the returned row, c being the count of non-null values:
+    *  - mean: the long sum as a double over c as a double;
+    *  - std: `sqrt((s2 - s1*s1/c) / (c-1))` over the long sums s1 and s2 of
     *    the values and their squares (wrapping like non-ANSI Spark), null
-    *    when n < 2;
+    *    when c < 2;
     *  - median: `percentile`'s interpolation over the sorted values,
-    *    `(hi-pos)*v(lo) + (pos-lo)*v(hi)` at `pos = 0.5*(n-1)`.
+    *    `(hi-pos)*v(lo) + (pos-lo)*v(hi)` at `pos = 0.5*(c-1)`.
     * Mean and median are null on an empty frame. Each operation is the one
     * Spark's sliding-frame `count`/`sum`/`percentile` columns apply, in the
     * same order, so the doubles are bit-equal. `sorted` is scratch space of
     * at least `lags.length` slots. */
-  def rollingStats(lags: Array[Long], present: Array[Boolean], widths: Array[Int],
-      sorted: Array[Long]): InternalRow = {
-    val out = new Array[Any](4 * widths.length)
-    var w = 0
-    while (w < widths.length) {
-      var c = 0
-      var s1 = 0L
-      var s2 = 0L
-      var i = 0
-      while (i < widths(w)) {
-        if (present(i)) {
-          val v = lags(i)
-          s1 += v
-          s2 += v * v
-          var j = c // insertion sort: at most a dozen values
-          while (j > 0 && sorted(j - 1) > v) { sorted(j) = sorted(j - 1); j -= 1 }
-          sorted(j) = v
-          c += 1
-        }
-        i += 1
+  def rollingStats(lags: Array[Long], present: Array[Boolean], sorted: Array[Long]): InternalRow = {
+    val out = new Array[Any](3)
+    var c = 0
+    var s1 = 0L
+    var s2 = 0L
+    var i = 0
+    while (i < lags.length) {
+      if (present(i)) {
+        val v = lags(i)
+        s1 += v
+        s2 += v * v
+        var j = c // insertion sort: at most a dozen values
+        while (j > 0 && sorted(j - 1) > v) { sorted(j) = sorted(j - 1); j -= 1 }
+        sorted(j) = v
+        c += 1
       }
-      out(4 * w) = c.toLong
-      if (c > 0) {
-        val n = c.toDouble
-        val d1 = s1.toDouble
-        out(4 * w + 1) = d1 / n
-        if (c >= 2) out(4 * w + 2) = math.sqrt((s2.toDouble - d1 * d1 / n) / (n - 1.0))
-        val pos = (c - 1).toDouble * 0.5
-        val lo = math.floor(pos).toInt
-        val hi = math.ceil(pos).toInt
-        val vlo = sorted(lo)
-        val vhi = sorted(hi)
-        out(4 * w + 3) =
-          if (hi == lo || vhi == vlo) vlo.toDouble
-          else (hi.toDouble - pos) * vlo.toDouble + (pos - lo.toDouble) * vhi.toDouble
-      }
-      w += 1
+      i += 1
+    }
+    if (c > 0) {
+      val n = c.toDouble
+      val d1 = s1.toDouble
+      out(0) = d1 / n
+      if (c >= 2) out(1) = math.sqrt((s2.toDouble - d1 * d1 / n) / (n - 1.0))
+      val pos = (c - 1).toDouble * 0.5
+      val lo = math.floor(pos).toInt
+      val hi = math.ceil(pos).toInt
+      val vlo = sorted(lo)
+      val vhi = sorted(hi)
+      out(2) =
+        if (hi == lo || vhi == vlo) vlo.toDouble
+        else (hi.toDouble - pos) * vlo.toDouble + (pos - lo.toDouble) * vhi.toDouble
     }
     new GenericInternalRow(out)
   }

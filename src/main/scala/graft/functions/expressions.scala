@@ -269,17 +269,14 @@ case class ListHitsExpr(child: Expression, lists: Seq[Seq[String]])
   override def prettyName: String = "graft_list_hits"
 }
 
-/** Trailing-frame count/mean/std/median from lag values (see
+/** Trailing-frame mean/std/median from lag values (see
   * HashUtil.rollingStats): child i is lag i+1 of one long column over one
-  * window, and the struct holds `count_n`, `mean_n`, `std_n` and `median_n`
-  * for each width n. The lags are offset frames, O(1) per row, so this
-  * replaces one sliding-frame aggregate per statistic and width, which
+  * window, so the frame is [-n, -1] for n children, and the struct holds its
+  * `mean`, `std` and `median`. The lags are offset frames, O(1) per row, so
+  * this replaces one sliding-frame aggregate per statistic, which
   * re-aggregates its whole frame for every row. The generated code fills
   * per-partition arrays from the children and calls the shared helper. */
-case class RollingStatsExpr(children: Seq[Expression], widths: Seq[Int])
-    extends Expression {
-  require(widths.nonEmpty && widths.distinct == widths && widths.forall(n => n >= 1 && n <= children.size),
-    s"rollingStats widths must be distinct and within 1..${children.size}; got $widths")
+case class RollingStatsExpr(children: Seq[Expression]) extends Expression {
   override def checkInputDataTypes(): TypeCheckResult =
     children.find(_.dataType != LongType) match {
       case None => TypeCheckResult.TypeCheckSuccess
@@ -287,12 +284,8 @@ case class RollingStatsExpr(children: Seq[Expression], widths: Seq[Int])
         s"graft_rolling_stats requires bigint lags, got ${c.dataType.sql}")
     }
   override def nullable: Boolean = false
-  override def dataType: DataType = StructType(widths.flatMap(n => Seq(
-    StructField(s"count_$n", LongType, nullable = false),
-    StructField(s"mean_$n", DoubleType),
-    StructField(s"std_$n", DoubleType),
-    StructField(s"median_$n", DoubleType))))
-  @transient private lazy val widthArray = widths.toArray
+  override def dataType: DataType =
+    StructType(Seq("mean", "std", "median").map(StructField(_, DoubleType)))
   override def eval(input: InternalRow): Any = {
     val lags = new Array[Long](children.size)
     val present = new Array[Boolean](children.size)
@@ -300,14 +293,13 @@ case class RollingStatsExpr(children: Seq[Expression], widths: Seq[Int])
       val v = children(i).eval(input)
       if (v != null) { lags(i) = v.asInstanceOf[Long]; present(i) = true }
     }
-    HashUtil.rollingStats(lags, present, widthArray, new Array[Long](children.size))
+    HashUtil.rollingStats(lags, present, new Array[Long](children.size))
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val k = children.size
     val lags = ctx.addMutableState("long[]", "rollLags", v => s"$v = new long[$k];")
     val present = ctx.addMutableState("boolean[]", "rollPresent", v => s"$v = new boolean[$k];")
     val sorted = ctx.addMutableState("long[]", "rollSorted", v => s"$v = new long[$k];")
-    val ws = ctx.addReferenceObj("rollWidths", widthArray, "int[]")
     val fills = children.zipWithIndex.map { case (c, i) =>
       val e = c.genCode(ctx)
       s"""${e.code}
@@ -317,7 +309,7 @@ case class RollingStatsExpr(children: Seq[Expression], widths: Seq[Int])
     ev.copy(code = code"""
       |${ctx.splitExpressionsWithCurrentInputs(fills)}
       |InternalRow ${ev.value} =
-      |  graft.functions.HashUtil.rollingStats($lags, $present, $ws, $sorted);""".stripMargin,
+      |  graft.functions.HashUtil.rollingStats($lags, $present, $sorted);""".stripMargin,
       isNull = FalseLiteral)
   }
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): RollingStatsExpr =
@@ -449,10 +441,10 @@ object GraftFunctions {
   def listHits(tokens: Column, lists: Seq[Seq[String]]): Column =
     GraftColumn(ListHitsExpr(expression(tokens), lists))
 
-  /** Trailing-frame statistics (struct of `count_n`, `mean_n`, `std_n`,
-    * `median_n` per width n) from `lags`, lag 1 first, of one long column. */
-  def rollingStats(lags: Seq[Column], widths: Seq[Int]): Column =
-    GraftColumn(RollingStatsExpr(lags.map(expression), widths))
+  /** Trailing-frame statistics (struct of `mean`, `std`, `median`) over the
+    * frame [-n, -1] from its n `lags`, lag 1 first, of one long column. */
+  def rollingStats(lags: Seq[Column]): Column =
+    GraftColumn(RollingStatsExpr(lags.map(expression)))
 
   /** Per-class character occurrence counts (array<int>, one slot per class)
     * in one fused scan. Each class string is a LITERAL set of BMP chars —

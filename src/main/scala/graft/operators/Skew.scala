@@ -15,10 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  case class SaltedAggSpec(
-      partial: Seq[Column], // phase-1 aggregates over (keys :+ salt)
-      merge: Seq[Column]) // phase-2 combiners over keys
-
   /** sum/count/min/max pairs for common cases: (partial, merge) both keyed by
     * the output name. */
   def sumLong(c: String, out: String): (Column, Column) =

@@ -215,7 +215,11 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally daily.unpersist()
   }
 
-  test("featureFrame's Windows hold only lag functions and each partitioning's kernel runs once, without codegen fallback") {
+  /** The rolling-stats kernels in `plan`. */
+  private def kernels(plan: SparkPlan): Seq[RollingStatsExpr] =
+    collect(plan) { case p => p }.flatMap(_.expressions.flatMap(_.collect { case k: RollingStatsExpr => k }))
+
+  test("featureFrame's Windows hold only lag functions and each frame's kernel runs once, without codegen fallback") {
     val daily = Forecast.dailySales(sales).cache()
     val fallback = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -227,13 +231,25 @@ class FeatureFrameSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val fns = exprs.flatMap(_.collect { case w: WindowExpression => w.windowFunction })
       assert(fns.nonEmpty && fns.forall(_.isInstanceOf[OffsetWindowFunction]), fns)
       assert(exprs.forall(_.find(_.isInstanceOf[AggregateExpression]).isEmpty), exprs)
-      val kernels = collect(plan) { case p => p }
-        .flatMap(_.expressions.flatMap(_.collect { case k: RollingStatsExpr => k }))
-      assert(kernels.map(_.children.size).sorted === Seq(5, 12), plan)
+      assert(kernels(plan).map(_.children.size).sorted === Seq(3, 3, 4, 5, 6, 12), plan)
     } finally {
       spark.conf.set("spark.sql.codegen.fallback", fallback)
       daily.unpersist()
     }
+  }
+
+  test("a narrow read runs only the kernel it reads, over only that kernel's lags") {
+    val daily = Forecast.dailySales(sales).cache()
+    try for ((cols, partitionKeys, width) <- Seq(
+        (Keys :+ "baseline_qty", 2, 6),
+        (Seq("roll_median_3_dow"), 3, 3))) {
+      val plan = executed(Forecast.lagRollFeatures(daily).select(cols.map(col): _*))
+      val windows = collect(plan) { case w: WindowExec => w }
+      assert(windows.map(_.partitionSpec.size) === Seq(partitionKeys), plan)
+      val fns = windows.head.windowExpression.flatMap(_.collect { case w: WindowExpression => w.windowFunction })
+      assert(fns.size === width && fns.forall(_.isInstanceOf[OffsetWindowFunction]), plan)
+      assert(kernels(plan).map(_.children.size) === Seq(width), plan)
+    } finally daily.unpersist()
   }
 
   test("over a cached grain partitioned by series key, the features need no exchange") {

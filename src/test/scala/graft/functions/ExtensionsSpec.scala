@@ -47,15 +47,16 @@ class ExtensionsSpec extends SparkSpec {
         .when(pmod(h, lit(3L)) === 0, pmod(h, lit(7L)) - 3)
         .otherwise(pmod(h, lit(2000001L)) - 1000000L)
     }
+    // one kernel per width, each over the first n lags
     val stats = spark.range(0, 3000, 1, 2)
-      .select(GraftFunctions.rollingStats(lags, Seq(1, 2, 3, 4, 5, 6, 12)).as("s"))
+      .select(Seq(1, 2, 3, 4, 5, 6, 12).map(n => GraftFunctions.rollingStats(lags.take(n)).as(s"s$n")): _*)
     def run(wholeStage: String, factoryMode: String): Seq[Seq[Any]] = {
       val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode", "spark.sql.codegen.fallback")
       val saved = keys.map(k => k -> spark.conf.getOption(k))
       spark.conf.set(keys(0), wholeStage)
       spark.conf.set(keys(1), factoryMode)
       spark.conf.set(keys(2), "false")
-      try stats.collect().toSeq.map(_.getStruct(0).toSeq.map {
+      try stats.collect().toSeq.map(r => (0 until r.length).flatMap(r.getStruct(_).toSeq).map {
           case d: Double => java.lang.Double.doubleToRawLongBits(d)
           case other => other
         })

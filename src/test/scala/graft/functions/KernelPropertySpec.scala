@@ -117,7 +117,7 @@ class KernelPropertySpec extends AnyFunSuite {
       if (xs(lo) == xs(hi)) xs(lo).toDouble
       else (hi - pos) * xs(lo).toDouble + (pos - lo) * xs(hi).toDouble
     }
-    Seq(n.toLong, mean, std, median)
+    Seq(mean, std, median)
   }
 
   // doubles compare by their raw bits, so NaN and -0.0 count too
@@ -126,28 +126,24 @@ class KernelPropertySpec extends AnyFunSuite {
     case _ => a == b
   }
 
-  test("rollingStats == count/mean/std/median of each trailing frame, doubles bit-equal") {
-    check(Prop.forAll(lagsGen.flatMap(l => Gen.someOf(1 to l.size).map(w => (l, w.toSeq)))) {
-      case (lags, ws) =>
-        val widths = if (ws.isEmpty) Seq(lags.size) else ws
-        val row = HashUtil.rollingStats(
-          lags.map(_.getOrElse(0L)).toArray, lags.map(_.isDefined).toArray, widths.toArray,
-          new Array[Long](lags.size))
-        val got = (0 until row.numFields).map(i =>
-          if (row.isNullAt(i)) null else if (i % 4 == 0) row.getLong(i) else row.getDouble(i))
-        val want = widths.flatMap(n => naiveStats(lags.take(n).flatten))
-        got.size == want.size && got.zip(want).forall { case (a, b) => sameBits(a, b) }
+  /** The kernel's (mean, std, median) over the frame of `lags`, None a null. */
+  private def kernel(lags: Seq[Option[Long]]): Seq[Any] = {
+    val row = HashUtil.rollingStats(
+      lags.map(_.getOrElse(0L)).toArray, lags.map(_.isDefined).toArray, new Array[Long](lags.size))
+    (0 until row.numFields).map(i => if (row.isNullAt(i)) null else row.getDouble(i))
+  }
+
+  test("rollingStats == mean/std/median of the trailing frame, doubles bit-equal") {
+    check(Prop.forAll(lagsGen) { lags =>
+      val (got, want) = (kernel(lags), naiveStats(lags.flatten))
+      got.size == want.size && got.zip(want).forall { case (a, b) => sameBits(a, b) }
     })
   }
 
   test("rollingStats interpolates an even-count median and nulls an empty frame") {
-    val row = HashUtil.rollingStats(Array(5L, -3L, 0L, -3L), Array(true, true, false, true),
-      Array(1, 2, 3, 4), new Array[Long](4))
-    // width 2: {5, -3} → 0.5·(-3) + 0.5·5; width 4: {5, -3, -3} → -3
-    assert(row.getDouble(4 + 3) === 0.5 * -3.0 + 0.5 * 5.0)
-    assert(row.getDouble(12 + 3) === -3.0)
-    val empty = HashUtil.rollingStats(Array(0L, 0L), Array(false, false), Array(2), new Array[Long](2))
-    assert(empty.getLong(0) === 0L)
-    assert((1 to 3).forall(empty.isNullAt))
+    // {5, -3} → 0.5·(-3) + 0.5·5; {5, -3, -3} → -3
+    assert(kernel(Seq(Some(5L), Some(-3L)))(2) === 0.5 * -3.0 + 0.5 * 5.0)
+    assert(kernel(Seq(Some(5L), Some(-3L), None, Some(-3L)))(2) === -3.0)
+    assert(kernel(Seq(None, None)) === Seq(null, null, null))
   }
 }
